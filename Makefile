@@ -22,13 +22,16 @@ from market_flow_spark.plans.pipeline import run_pipeline; \
 import json; \
 print(json.dumps(run_pipeline(get_spark(), '$(SF_DIR)', '$(WAREHOUSE)'), indent=2))"
 
-# the reference's `make dbt-test` analog: data-quality suite over the star schema
+# the reference's `make dbt-test` analog: data-quality suite over the star
+# schema that `make pipeline` wrote to $(WAREHOUSE) (sources from $(SF_DIR))
 quality:
 	python -c "from market_flow_spark.session import get_spark; \
 from market_flow_spark.tables import load_tables; \
-from market_flow_spark.quality import run_star_schema_checks; \
+from market_flow_spark.quality import STAR_SCHEMA_TABLES, run_star_schema_checks; \
 spark = get_spark(); \
-results = run_star_schema_checks(load_tables(spark, '$(SF_DIR)')); \
+tables = load_tables(spark, '$(SF_DIR)'); \
+tables.update({t: spark.read.parquet(f'$(WAREHOUSE)/analytics/{t}') for t in STAR_SCHEMA_TABLES}); \
+results = run_star_schema_checks(tables); \
 [print(f'{r.check:20s} {r.table}.{r.column}: ' + ('PASS' if r.passed else f'FAIL ({r.violations})')) for r in results]; \
 import sys; sys.exit(0 if all(r.passed for r in results) else 1)"
 

@@ -18,7 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from market_flow_spark.operators import dims, star
-from market_flow_spark.quality import CheckResult, run_star_schema_checks
+from market_flow_spark.quality import (
+    STAR_SCHEMA_TABLES,
+    CheckResult,
+    run_star_schema_checks,
+)
 from market_flow_spark.sources.sinks import export_parquet
 from market_flow_spark.tables import load_tables
 
@@ -56,6 +60,17 @@ class QualityCheckError(RuntimeError):
                 f"{r.check}({r.table}.{r.column})={r.violations}" for r in failed
             )
         )
+
+
+def _gate(
+    tables: dict[str, DataFrame], published: dict[str, DataFrame]
+) -> list[CheckResult]:
+    """Run the star-schema suite over the ``published`` built tables (the
+    sources supply the relationship parents); raise on any violation."""
+    results = run_star_schema_checks({**tables, **published})
+    if any(not r.passed for r in results):
+        raise QualityCheckError(results)
+    return results
 
 
 def build_staging(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
@@ -111,11 +126,15 @@ def run_pipeline(
     external scheduler retries.
 
     With ``quality_gate`` (default), the dbt-style star-schema suite
-    (`quality.run_star_schema_checks`) runs after the build and the
-    pipeline FAILS on any violation (`QualityCheckError`, carrying the
-    full result list) — the reference's declared-but-empty dbt test slot,
-    actually enforced. A green run's results ride on the returned
-    object's ``quality`` attribute (empty list when the gate is off)."""
+    (`quality.run_star_schema_checks`) runs after the build over the
+    PUBLISHED fact_transactions / dim_product / dim_date, read back from
+    the files just written (one fused aggregate per table, like dbt tests
+    over the built models), and the pipeline FAILS on any violation
+    (`QualityCheckError`, carrying the full result list) — the
+    reference's declared-but-empty dbt test slot, actually enforced. The
+    gate runs after publishing, so a failing run leaves its tables in the
+    warehouse. A green run's results ride on the returned object's
+    ``quality`` attribute (empty list when the gate is off)."""
     tables = load_tables(spark, sf_dir)
     written: dict[str, str] = {}
 
@@ -145,9 +164,9 @@ def run_pipeline(
 
     results: list[CheckResult] = []
     if quality_gate:
-        results = run_star_schema_checks(tables)
-        if any(not r.passed for r in results):
-            raise QualityCheckError(results)
+        results = _gate(
+            tables, {t: spark.read.parquet(written[t]) for t in STAR_SCHEMA_TABLES}
+        )
     return PipelineRun(written, results)
 
 
@@ -167,7 +186,8 @@ def run_pipeline_metastore(
     Partitioned analytics tables keep the same pruning layout as the
     path-based ``run_pipeline``. ``location_root`` pins the database
     locations (tests); default is the session's warehouse dir. The quality
-    gate raises ``QualityCheckError`` on any violation, same contract as
+    gate checks the catalog tables just saved and raises
+    ``QualityCheckError`` on any violation, same contract as
     ``run_pipeline``."""
     for db in ("raw", "staging", "analytics"):
         loc = f" LOCATION '{location_root}/{db}.db'" if location_root else ""
@@ -210,7 +230,7 @@ def run_pipeline_metastore(
 
     results: list[CheckResult] = []
     if quality_gate:
-        results = run_star_schema_checks(tables)
-        if any(not r.passed for r in results):
-            raise QualityCheckError(results)
+        results = _gate(
+            tables, {t: spark.table(f"analytics.{t}") for t in STAR_SCHEMA_TABLES}
+        )
     return PipelineRun(written, results)

@@ -16,7 +16,39 @@ def test_star_schema_integrity(spark, tables):
     results = run_star_schema_checks(tables)
     failing = [r for r in results if not r.passed]
     assert not failing, f"integrity violations: {failing}"
-    assert len(results) == 9
+    assert [(r.check, r.table, r.column) for r in results] == [
+        ("not_null", "fact_transactions", "transaction_id"),
+        ("unique", "fact_transactions", "transaction_id"),
+        ("not_null", "fact_transactions", "price"),
+        ("unique", "dim_product", "product_sk"),
+        ("unique", "dim_product", "p_partkey"),
+        ("unique", "dim_date", "date_sk"),
+        ("relationship", "fact_transactions", "product_id"),
+        ("relationship", "fact_transactions", "customer_id"),
+        ("relationship", "fact_transactions", "date_sk"),
+    ]
+
+
+def test_gate_checks_the_published_tables(spark, sf_dir, tmp_path, monkeypatch):
+    """A duplicate that only the written fact file holds fails the run:
+    the gate reads what was published, not a clean recomputation."""
+    import pytest
+
+    from market_flow_spark.plans import pipeline as pl
+
+    write = pl.export_parquet
+
+    def write_with_duplicate(df, path, partition_by=None):
+        if path.endswith("/fact_transactions"):
+            df = df.unionByName(df.limit(1))
+        write(df, path, partition_by=partition_by)
+
+    monkeypatch.setattr(pl, "export_parquet", write_with_duplicate)
+    with pytest.raises(pl.QualityCheckError) as exc:
+        pl.run_pipeline(spark, sf_dir, str(tmp_path / "wh"))
+    assert "unique(fact_transactions.transaction_id)=2" in str(exc.value)
+    failed = [(r.check, r.table, r.column) for r in exc.value.results if not r.passed]
+    assert failed == [("unique", "fact_transactions", "transaction_id")]
 
 
 def test_pipeline_quality_gate_fails_on_violation(spark, sf_dir, tmp_path, monkeypatch):
@@ -65,9 +97,15 @@ def test_pipeline_run_is_json_serializable_path_mapping(spark, sf_dir, tmp_path)
 
 
 def test_fused_checks_match_individual(spark, tables):
+    from pyspark.sql import functions as F
+
     from market_flow_spark import quality as Q
 
-    orders = tables["orders"]
+    # one row with a NULL status: not an accepted_values violation either way
+    null_status = F.lit(None).cast("string")
+    orders = tables["orders"].unionByName(
+        tables["orders"].limit(1).withColumn("o_orderstatus", null_status)
+    )
     fused = Q.run_checks_fused(
         orders,
         not_null=["o_orderkey", "o_custkey"],
@@ -83,6 +121,41 @@ def test_fused_checks_match_individual(spark, tables):
         orders, "o_orderstatus", ["O", "F", "P"]
     ).violations
     assert ("positive", "o_totalprice") in by_key
+
+
+def test_fused_unique_and_relationships_match_individual(spark):
+    """Planted frame: a NULL key, a duplicated NULL key, a duplicated
+    parent key, a NULL foreign key and an orphan foreign key."""
+    from market_flow_spark import quality as Q
+
+    child = spark.createDataFrame(
+        [(1, 10), (2, 10), (2, 20), (None, 30), (None, None), (3, 99)],
+        "k int, fk int",
+    )
+    parent = spark.createDataFrame([(10,), (10,), (20,), (30,), (None,)], "p int")
+    keys = spark.createDataFrame([(1,), (2,), (3,)], "k int")
+    fused = Q.run_checks_fused(
+        child,
+        not_null=["k", "fk"],
+        unique=["k", "fk"],
+        relationships=[("fk", parent, "p"), ("k", keys, "k")],
+        table="child",
+    )
+    by_key = {(r.check, r.column): r.violations for r in fused}
+    individual = {
+        ("not_null", "k"): Q.check_not_null(child, "k"),
+        ("not_null", "fk"): Q.check_not_null(child, "fk"),
+        ("unique", "k"): Q.check_unique(child, "k"),
+        ("unique", "fk"): Q.check_unique(child, "fk"),
+        ("relationship", "fk"): Q.check_relationship(child, "fk", parent, "p"),
+        ("relationship", "k"): Q.check_relationship(child, "k", keys, "k"),
+    }
+    assert by_key == {key: r.violations for key, r in individual.items()}
+    # the two 2s and the two NULLs; 10 twice; NULL + orphan 99; the NULL ks
+    assert by_key[("unique", "k")] == 4
+    assert by_key[("unique", "fk")] == 2
+    assert by_key[("relationship", "fk")] == 2
+    assert by_key[("relationship", "k")] == 2
 
 
 def test_profile_columns_approx_within_tolerance(spark, tables):

@@ -145,15 +145,24 @@ def test_run_pipeline_metastore(spark, sf_dir, tmp_path, monkeypatch):
     # the gate FAILS the metastore run on violation, same as the path run
     from market_flow_spark.quality import CheckResult
 
-    monkeypatch.setattr(
-        pl,
-        "run_star_schema_checks",
-        lambda tables: [CheckResult("unique", "fact_transactions", "transaction_id", 3)],
-    )
+    gated = {}
+
+    def broken_suite(tables):
+        gated.update(tables)
+        return [CheckResult("unique", "fact_transactions", "transaction_id", 3)]
+
+    monkeypatch.setattr(pl, "run_star_schema_checks", broken_suite)
     with pytest.raises(pl.QualityCheckError):
         pl.run_pipeline_metastore(
             spark, sf_dir, location_root=str(tmp_path / "meta_wh")
         )
+    # ... and it checks the catalog tables the run saved
+    from urllib.parse import urlparse
+
+    for t in ("fact_transactions", "dim_product", "dim_date"):
+        table_dir = urlparse(run[f"analytics.{t}"]).path
+        files = gated[t].inputFiles()
+        assert files and all(urlparse(f).path.startswith(table_dir) for f in files)
 
     # and asking for a DIFFERENT root while the databases already exist at
     # the old one must fail loudly instead of silently writing to the old
