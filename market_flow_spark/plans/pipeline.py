@@ -2,18 +2,22 @@
 
 The reference's end-to-end flow is Airflow DAGs + dbt models materializing
 raw → staging → analytics tables in DuckDB, synchronized by sleeps
-(Makefile:114-141). Here each layer is a Spark job writing parquet tables
-into a warehouse directory; the scheduler (Airflow, cron, anything) only
-sequences the calls — no data crosses task boundaries (the reference's XCom
-hop disappears, SURVEY §3.1).
+(Makefile:114-141). Here each table is a Spark job writing parquet into a
+warehouse directory; no data crosses task boundaries (the reference's XCom
+hop disappears, SURVEY §3.1). Every table is built from the source tables
+only, so, like the DAG's independent tasks, the writes are submitted
+together (``session.run_concurrently``) and share the cores; the quality
+gate runs once they have all landed.
 
 Layer materialization is deliberate (same choice as the reference's
 `+materialized: table`): each layer is re-runnable and inspectable. Fact
-and flagship tables are partitioned by (year, month) so downstream reads
+and flagship tables are partitioned (``PARTITION_BY``) so downstream reads
 prune partitions — the 100 TB analog of the reference's full-table scans.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -23,6 +27,7 @@ from market_flow_spark.quality import (
     CheckResult,
     run_star_schema_checks,
 )
+from market_flow_spark.session import run_concurrently
 from market_flow_spark.sources.sinks import export_parquet
 from market_flow_spark.tables import load_tables
 
@@ -100,6 +105,20 @@ def build_analytics(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     }
 
 
+# Partition columns of the partitioned analytics tables.
+PARTITION_BY = {"fact_transactions": ["date_sk"], "flagship_wide": ["year"]}
+
+
+def _built_tables(tables: dict[str, DataFrame]) -> list[tuple[str, str, DataFrame]]:
+    """(layer, table, frame) of every built table, in build order; the dims
+    publish into the analytics layer."""
+    return [
+        *(("staging", n, df) for n, df in build_staging(tables).items()),
+        *(("analytics", n, df) for n, df in build_dims(tables).items()),
+        *(("analytics", n, df) for n, df in build_analytics(tables).items()),
+    ]
+
+
 class PipelineRun(dict):
     """Result of ``run_pipeline``: a plain {table_name: path} mapping (it
     IS a dict — every key is a table, every value a path) with the quality
@@ -123,7 +142,10 @@ def run_pipeline(
     """Run the full raw→staging→analytics build into `warehouse`.
     Returns a ``PipelineRun``: a {table_name: path} dict whose values are
     all real paths. Each write is an independent Spark job — the unit an
-    external scheduler retries.
+    external scheduler retries — built from the source tables only, so
+    the 7 writes are submitted together and run side by side. Every write
+    runs to its end before a failed one's error is raised, and then no
+    gate runs.
 
     With ``quality_gate`` (default), the dbt-style star-schema suite
     (`quality.run_star_schema_checks`) runs after the build over the
@@ -136,31 +158,12 @@ def run_pipeline(
     warehouse. A green run's results ride on the returned object's
     ``quality`` attribute (empty list when the gate is off)."""
     tables = load_tables(spark, sf_dir)
-    written: dict[str, str] = {}
-
-    for name, df in build_staging(tables).items():
-        path = f"{warehouse}/staging/{name}"
-        export_parquet(df, path)
-        written[name] = path
-
-    for name, df in build_dims(tables).items():
-        path = f"{warehouse}/analytics/{name}"
-        export_parquet(df, path)
-        written[name] = path
-
-    analytics = build_analytics(tables)
-    export_parquet(
-        analytics["fact_transactions"],
-        f"{warehouse}/analytics/fact_transactions",
-        partition_by=["date_sk"],
-    )
-    written["fact_transactions"] = f"{warehouse}/analytics/fact_transactions"
-    export_parquet(
-        analytics["flagship_wide"],
-        f"{warehouse}/analytics/flagship_wide",
-        partition_by=["year"],
-    )
-    written["flagship_wide"] = f"{warehouse}/analytics/flagship_wide"
+    built = _built_tables(tables)
+    written = {name: f"{warehouse}/{layer}/{name}" for layer, name, _ in built}
+    run_concurrently([
+        partial(export_parquet, df, written[name], partition_by=PARTITION_BY.get(name))
+        for _, name, df in built
+    ])
 
     results: list[CheckResult] = []
     if quality_gate:
@@ -184,7 +187,9 @@ def run_pipeline_metastore(
 
     Returns a ``PipelineRun`` mapping {qualified_table: catalog location}.
     Partitioned analytics tables keep the same pruning layout as the
-    path-based ``run_pipeline``. ``location_root`` pins the database
+    path-based ``run_pipeline``. Every save and its catalog-location
+    lookup run side by side through ``session.run_concurrently``, as the
+    path-based writes do. ``location_root`` pins the database
     locations (tests); default is the session's warehouse dir. The quality
     gate checks the catalog tables just saved and raises
     ``QualityCheckError`` on any violation, same contract as
@@ -205,28 +210,20 @@ def run_pipeline_metastore(
                 )
 
     tables = load_tables(spark, sf_dir)
-    written: dict[str, str] = {}
 
-    def _save(df: DataFrame, qualified: str, partition_by: list[str] | None = None):
+    def _save(db: str, name: str, df: DataFrame) -> str:
+        """Save ``df`` as ``db.name``; return its catalog location."""
         writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.saveAsTable(qualified)
-        written[qualified] = spark.sql(f"DESCRIBE TABLE EXTENDED {qualified}").filter(
+        if name in PARTITION_BY:
+            writer = writer.partitionBy(*PARTITION_BY[name])
+        writer.saveAsTable(f"{db}.{name}")
+        return spark.sql(f"DESCRIBE TABLE EXTENDED {db}.{name}").filter(
             "col_name = 'Location'"
         ).collect()[0]["data_type"]
 
-    for name, df in tables.items():
-        _save(df, f"raw.{name}")
-    for name, df in build_staging(tables).items():
-        _save(df, f"staging.{name}")
-    for name, df in build_dims(tables).items():
-        _save(df, f"analytics.{name}")
-    analytics = build_analytics(tables)
-    _save(analytics["fact_transactions"], "analytics.fact_transactions",
-          partition_by=["date_sk"])
-    _save(analytics["flagship_wide"], "analytics.flagship_wide",
-          partition_by=["year"])
+    saves = [("raw", name, df) for name, df in tables.items()] + _built_tables(tables)
+    locations = run_concurrently([partial(_save, *save) for save in saves])
+    written = {f"{db}.{name}": loc for (db, name, _), loc in zip(saves, locations)}
 
     results: list[CheckResult] = []
     if quality_gate:

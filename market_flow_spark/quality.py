@@ -10,7 +10,8 @@ Each ``check_*`` function runs one check as its own job;
 aggregate, so a whole suite over a 100 TB table is one scan per table, not
 one per check or row-by-row validation. ``run_star_schema_checks`` is the
 star-schema suite, fused per table and run over the published tables, as
-dbt tests run over the built models. accepted_values follows dbt: NULL is
+dbt tests run over the built models; its three table aggregates are
+independent jobs and run side by side. accepted_values follows dbt: NULL is
 not a violation (not_null covers it). Results come back as plain records
 so callers can route them (fail the pipeline, emit metrics, write an audit
 table).
@@ -19,9 +20,12 @@ table).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from market_flow_spark.session import run_concurrently
 
 
 @dataclass
@@ -161,7 +165,9 @@ STAR_SCHEMA_SUITE = [
 def run_star_schema_checks(tables: dict[str, DataFrame]) -> list[CheckResult]:
     """The dbt-style suite for the star schema: key integrity on the fact
     and dims (what dbt/models/*/schema.yml should have declared), one
-    fused aggregate per table.
+    fused aggregate per table, the three submitted together
+    (``session.run_concurrently``). Results come back in
+    ``STAR_SCHEMA_SUITE`` order.
 
     ``tables`` holds the source tables plus the built tables to check
     (``STAR_SCHEMA_TABLES``); ``run_pipeline`` passes the files it just
@@ -178,8 +184,9 @@ def run_star_schema_checks(tables: dict[str, DataFrame]) -> list[CheckResult]:
         tables[name] if name in tables else builders[name](tables)
         for name in STAR_SCHEMA_TABLES
     )
-    results = (
-        run_checks_fused(
+    per_table = run_concurrently([
+        partial(
+            run_checks_fused,
             fact,
             not_null=["transaction_id", "price"],
             unique=["transaction_id"],
@@ -189,11 +196,12 @@ def run_star_schema_checks(tables: dict[str, DataFrame]) -> list[CheckResult]:
                 ("date_sk", dim_date, "date_sk"),
             ],
             table="fact_transactions",
-        )
-        + run_checks_fused(
-            dim_product, unique=["product_sk", "p_partkey"], table="dim_product"
-        )
-        + run_checks_fused(dim_date, unique=["date_sk"], table="dim_date")
-    )
-    by_label = {(r.check, r.table, r.column): r for r in results}
+        ),
+        partial(
+            run_checks_fused,
+            dim_product, unique=["product_sk", "p_partkey"], table="dim_product",
+        ),
+        partial(run_checks_fused, dim_date, unique=["date_sk"], table="dim_date"),
+    ])
+    by_label = {(r.check, r.table, r.column): r for rs in per_table for r in rs}
     return [by_label[label] for label in STAR_SCHEMA_SUITE]

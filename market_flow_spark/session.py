@@ -8,8 +8,10 @@ factory owns the scale-relevant knobs:
 - AQE on (runtime join-strategy re-plan, skew-join splitting, partition
   coalescing) — the single most important setting for the 100 TB target.
 - Arrow on for every pandas-UDF / toPandas edge.
-- shuffle.partitions sized from the env (32 for local[32] tests; a real
-  cluster run overrides via SPARK_SHUFFLE_PARTITIONS to ~2-3x total cores).
+- local[N] sized from the host: N is the CPUs this process may run on,
+  unless ``cpus`` or SPARK_GRAFT_CPUS says otherwise.
+- shuffle.partitions from the env (default 32; a real cluster run
+  overrides via SPARK_SHUFFLE_PARTITIONS to ~2-3x total cores).
 - UTC session timezone so date/timestamp semantics are deterministic and
   match the DuckDB oracle.
 """
@@ -17,8 +19,14 @@ factory owns the scale-relevant knobs:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -28,7 +36,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession configured for this engine."""
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     shuffle_partitions = shuffle_partitions or os.environ.get(
         "SPARK_SHUFFLE_PARTITIONS", "32"
     )
@@ -99,3 +107,21 @@ def tune_session(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # immutable in some deployments; defaults are acceptable
     return spark
+
+
+def run_concurrently(calls: Sequence[Callable[[], T]]) -> list[T]:
+    """Run independent Spark actions side by side and return their results
+    in order.
+
+    Each call runs on its own thread, so the jobs they submit share the
+    cores under Spark's default FIFO scheduler instead of queueing behind
+    one another's driver-side planning. Threads start through
+    ``inheritable_thread_target``, so each job carries the caller's local
+    properties (job group, description) and session tags. Every call runs
+    to its end; then the first failure in submission order is raised. No
+    thread outlives the call."""
+    session = SparkSession.active()
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        # wrap per call: each thread gets its own copy of the properties
+        futures = [pool.submit(inheritable_thread_target(session)(c)) for c in calls]
+    return [f.result() for f in futures]

@@ -109,6 +109,113 @@ def test_run_pipeline(spark, sf_dir, tmp_path):
     assert len(years) > 1
 
 
+def test_run_pipeline_writes_overlap(spark, sf_dir, tmp_path, monkeypatch):
+    """The 7 table writes are independent jobs, submitted together."""
+    import os
+    import threading
+    import time
+
+    from market_flow_spark.plans import pipeline as pl
+
+    write = pl.export_parquet
+    lock = threading.Lock()
+    flight = {"now": 0, "peak": 0}
+
+    def counting_write(df, path, partition_by=None):
+        with lock:
+            flight["now"] += 1
+            flight["peak"] = max(flight["peak"], flight["now"])
+        try:
+            time.sleep(0.2)
+            write(df, path, partition_by=partition_by)
+        finally:
+            with lock:
+                flight["now"] -= 1
+
+    monkeypatch.setattr(pl, "export_parquet", counting_write)
+    run = pl.run_pipeline(spark, sf_dir, str(tmp_path / "wh"), quality_gate=False)
+    assert flight["peak"] >= 2
+    assert list(run) == [
+        "stg_transactions", "stg_monthly_events", "dim_product", "dim_date",
+        "dim_country", "fact_transactions", "flagship_wide",
+    ]
+    assert all(os.path.exists(f"{p}/_SUCCESS") for p in run.values())
+
+
+def test_run_pipeline_failed_write_finishes_the_others_and_skips_the_gate(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    import os
+
+    import pytest
+
+    from market_flow_spark.plans import pipeline as pl
+
+    write = pl.export_parquet
+    finished, gated = [], []
+
+    def write_or_fail(df, path, partition_by=None):
+        if path.endswith("/dim_country"):
+            raise OSError("disk full writing dim_country")
+        write(df, path, partition_by=partition_by)
+        finished.append(os.path.basename(path))
+
+    monkeypatch.setattr(pl, "export_parquet", write_or_fail)
+    monkeypatch.setattr(pl, "run_star_schema_checks", gated.append)
+    with pytest.raises(OSError, match="dim_country"):
+        pl.run_pipeline(spark, sf_dir, str(tmp_path / "wh"))
+    assert not gated
+    assert sorted(finished) == sorted([
+        "stg_transactions", "stg_monthly_events", "dim_product", "dim_date",
+        "fact_transactions", "flagship_wide",
+    ])
+
+
+def test_run_pipeline_jobs_carry_the_callers_job_group(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Writes and gate aggregates run on worker threads; the caller's job
+    group must still tag every job they submit."""
+    import time
+
+    from market_flow_spark import quality
+    from market_flow_spark.plans import pipeline as pl
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "run-pipeline-job-group"
+    seen = []
+
+    def recording(fn):
+        def call(*args, **kwargs):
+            seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+            return fn(*args, **kwargs)
+
+        return call
+
+    monkeypatch.setattr(pl, "export_parquet", recording(pl.export_parquet))
+    monkeypatch.setattr(
+        quality, "run_checks_fused", recording(quality.run_checks_fused)
+    )
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "run_pipeline under a caller's job group")
+    try:
+        pl.run_pipeline(spark, sf_dir, str(tmp_path / "wh"))
+        # the status store follows the listener bus in order: once this
+        # later job shows, every job of the run is in it
+        sc.setJobGroup(f"{group}-marker", "marker")
+        sc.parallelize([1]).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-marker"):
+        assert time.monotonic() < deadline
+        time.sleep(0.1)
+    assert seen == [group] * 10  # 7 writes, 3 gate aggregates
+    assert len(tracker.getJobIdsForGroup(group)) >= 10
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
 def test_run_pipeline_metastore(spark, sf_dir, tmp_path, monkeypatch):
     """The catalog-backed medallion run: raw/staging/analytics DATABASES
     (the reference's profiles.yml schema-per-target layout) with every
