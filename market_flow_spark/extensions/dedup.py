@@ -1451,7 +1451,6 @@ def exact_substring_spans(
     _hash_hex: int = 15,
     merge_strategy: str = "fold",
     max_doc_positions: int | None = EXACT_SUBSTRING_MAX_DOC_POSITIONS,
-    _dup_shape: str = "window",
 ) -> DataFrame:
     """(doc_id, span_start, span_end, n_windows): maximal character ranges
     of the NORMALIZED text covered by ``min_len``-char windows whose
@@ -1573,32 +1572,20 @@ def exact_substring_spans(
         base.select("doc_id", F.posexplode(gram_hashes).alias("pos", h))
     )
     # occ >= 2 detection as a window count over ONE exchange on the hash
-    # key (round-13): the former groupBy(h) + left_semi join-back shape
-    # re-ran the corpus-bytes-sized window-hash explode once per branch
-    # (dup aggregate + candidate probe — plan showed 2 Generate nodes);
-    # the window count keeps a single explode and a single shuffle of
-    # (doc_id, pos, h). Same trade as the content-verify stage below: a
-    # window gets no map-side partial aggregation, so a mass-duplicated
-    # hash lands its occurrences on one task — but the OLD shape's
-    # semi-join probe partitioned by h too once `dup` outgrew broadcast,
-    # so at scale the skew profile is unchanged while one full corpus
-    # hash pass and one aggregate disappear. Interleaved A/B at sf0.1:
-    # see OPTIMIZATION_r13.md (spans and dedup both ride this).
-    if _dup_shape == "agg_semijoin":  # pre-r13 shape, kept for A/B runs
-        dup = (
-            wins.groupBy(h)
-            .agg(F.count(F.lit(1)).alias("occ"))
-            .filter(F.col("occ") >= 2)
-            .select(h)
-        )
-        cand = wins.join(dup, h, "left_semi").select("doc_id", "pos")
-    else:
-        wh = Window.partitionBy(h)
-        cand = (
-            wins.withColumn("__hocc", F.count(F.lit(1)).over(wh))
-            .filter(F.col("__hocc") >= 2)
-            .select("doc_id", "pos")
-        )
+    # key (round-13): a single window-hash explode and a single shuffle of
+    # (doc_id, pos, h), where a groupBy(h) + left_semi join-back re-runs
+    # the corpus-bytes-sized explode once per branch. Same trade as the
+    # content-verify stage below: a window gets no map-side partial
+    # aggregation, so a mass-duplicated hash lands its occurrences on one
+    # task — as a semi-join probe partitioned by h does once the
+    # duplicate set outgrows broadcast. Interleaved A/B at sf0.1: see
+    # OPTIMIZATION_r13.md (spans and dedup both ride this).
+    wh = Window.partitionBy(h)
+    cand = (
+        wins.withColumn("__hocc", F.count(F.lit(1)).over(wh))
+        .filter(F.col("__hocc") >= 2)
+        .select("doc_id", "pos")
+    )
     # content verify: hash matches are candidates, not verdicts — re-count
     # the survivors on the actual window content so a hash collision can
     # never fabricate a duplicate span. (A pack-positions-per-doc rewrite

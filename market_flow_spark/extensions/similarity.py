@@ -36,6 +36,30 @@ def _norm_sq(a: Column) -> Column:
     return _dot(a, a)
 
 
+def _pair_cosine(a: Column, b: Column) -> Column:
+    """Exact cosine of two embedding arrays at det-round 6: the verify
+    every near-dup pair generator applies to its candidates."""
+    return det_round(_dot(a, b) / (F.sqrt(_norm_sq(a)) * F.sqrt(_norm_sq(b))), 6)
+
+
+def _block_pairs(blocked: DataFrame, key: str, threshold: float) -> DataFrame:
+    """(vec1, vec2, cosine) from a (vid, emb, ``key``) frame: an alias
+    self-join on the block key (an equi-join, never a cross join; the
+    scan and key projection compute once, ReusedExchange), then exact
+    cosine >= threshold within blocks."""
+    a, b = blocked.alias("a"), blocked.alias("b")
+    return (
+        a.join(b, F.col(f"a.{key}") == F.col(f"b.{key}"))
+        .filter(F.col("a.vid") < F.col("b.vid"))
+        .select(
+            F.col("a.vid").alias("vec1"),
+            F.col("b.vid").alias("vec2"),
+            _pair_cosine(F.col("a.emb"), F.col("b.emb")).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame, n_queries: int = 5, k: int = 5
 ) -> DataFrame:
@@ -789,25 +813,7 @@ def embedding_neardup_pairs(
             .filter(F.col("__bsz") <= max_block_size)
             .drop("__bsz")
         )
-    a, b = wb.alias("a"), wb.alias("b")
-    cos = det_round(
-        _dot(F.col("a.emb"), F.col("b.emb"))
-        / (
-            F.sqrt(_norm_sq(F.col("a.emb")))
-            * F.sqrt(_norm_sq(F.col("b.emb")))
-        ),
-        6,
-    )
-    return (
-        a.join(b, F.col("a.bucket") == F.col("b.bucket"))
-        .filter(F.col("a.vid") < F.col("b.vid"))
-        .select(
-            F.col("a.vid").alias("vec1"),
-            F.col("b.vid").alias("vec2"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _block_pairs(wb, "bucket", threshold)
 
 
 # Documented routing threshold for the sign-blocked exact cosine tier:
@@ -1068,18 +1074,14 @@ def embedding_neardup_pairs_banded(
         F.col(id_col).alias("vid"), F.col(emb_col).alias("emb")
     )
     a, b = emb_kv.alias("ea"), emb_kv.alias("eb")
-    cos = det_round(
-        _dot(F.col("ea.emb"), F.col("eb.emb"))
-        / (
-            F.sqrt(_norm_sq(F.col("ea.emb")))
-            * F.sqrt(_norm_sq(F.col("eb.emb")))
-        ),
-        6,
-    )
     return (
         cand.join(a, F.col("vec1") == F.col("ea.vid"))
         .join(b, F.col("vec2") == F.col("eb.vid"))
-        .select("vec1", "vec2", cos.alias("cosine"))
+        .select(
+            "vec1",
+            "vec2",
+            _pair_cosine(F.col("ea.emb"), F.col("eb.emb")).alias("cosine"),
+        )
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -1236,109 +1238,29 @@ def embedding_neardup_pairs_banded_routed(
 
 def semantic_dedup_keep(
     embeddings: DataFrame,
-    threshold: float = 0.25,
-    n_bits: int = 8,
+    pairs: DataFrame,
     id_col: str = "vec_id",
-    emb_col: str = "embedding",
     max_iter: int = 20,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) keep-list: cluster
-    the embedding near-dup pair graph into connected components and keep
-    one representative (the minimum id) per semantic cluster — the
+    a near-dup pair graph into connected components and keep one
+    representative (the minimum id) per semantic cluster — the
     embedding-tier analogue of ``dedup.dedup_keep_list``, catching
     paraphrases and re-renderings that share no surface n-grams.
 
-    Stages: sign-bucket-blocked cosine pairs (equi-join), min-label
-    propagation over the pair edge list (rounds = cluster diameter,
-    clique-ish in practice), keep = id == cluster minimum. Returns
-    (vec_id, cluster_id, keep) over ALL vectors — unpaired vectors keep
-    themselves.
-
-    SUPERSEDED AS THE SCALE SHAPE (round 11): this single-sign-block
-    candidate generator's recall ceiling is dominated — the ×4-sf1
-    head-to-head (bench_escalation.json) measured 216/400 planted pairs
-    vs the banded generator's 289/400 at ×4.6 its speed. Prefer
-    ``semantic_dedup_keep_banded`` (explicit banded layout) or
-    ``semantic_dedup_keep_routed`` (emission-routed: base block while it
-    fits the cap, banded ladder beyond — the same steering the pair tier
-    got in round 11). This entry remains for single-block parity and
-    small corpora where the 8-bit block's emission is trivially safe."""
+    Building the similarity graph and clustering it are separate steps,
+    as in the paper: ``pairs`` is any (vec1, vec2) frame — the
+    sign-bucket (``embedding_neardup_pairs``), banded, emission-routed
+    or IVF-cell generator. The generator's recall IS the tier's recall
+    (a near-dup the blocking misses is a duplicate that survives dedup);
+    the banded shape is the scale choice (289/400 planted pairs vs the
+    8-bit block's 216/400 at ×4.6 its speed, bench_escalation.json).
+    Clustering is min-label propagation over the edge list (rounds =
+    cluster diameter, clique-ish in practice). Returns (vec_id,
+    cluster_id, keep) over ALL vectors — unpaired vectors keep
+    themselves."""
     from market_flow_spark.extensions.dedup import dedup_keep_list
 
-    pairs = embedding_neardup_pairs(
-        embeddings, threshold, n_bits, id_col, emb_col
-    )
-    ids = embeddings.select(F.col(id_col).alias("doc_id"))
-    keep = dedup_keep_list(
-        ids, pairs, max_iter=max_iter, id1="vec1", id2="vec2"
-    )
-    return keep.select(
-        F.col("doc_id").alias(id_col), "cluster_id", "keep"
-    )
-
-
-def semantic_dedup_keep_banded(
-    embeddings: DataFrame,
-    threshold: float = 0.25,
-    n_bands: int = 4,
-    band_bits: int = 16,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    max_iter: int = 20,
-) -> DataFrame:
-    """SemDeDup keep-list over the BANDED near-dup pair graph — the
-    round-11 recall completion of ``semantic_dedup_keep``: candidate
-    generation via ``embedding_neardup_pairs_banded`` instead of the
-    single sign block, which the ×4-sf1 head-to-head measured at
-    289/400 planted-pair recall vs the 8-bit block's 216/400 at ×4.6
-    its speed (bench_escalation.json). More recalled pairs = more true
-    paraphrase clusters collapsed; a near-dup the blocking misses is a
-    duplicate that survives dedup, so the generator's recall IS the
-    tier's recall. Same output contract as ``semantic_dedup_keep``:
-    (vec_id, cluster_id, keep) over ALL vectors, keeper = cluster
-    minimum, unpaired vectors keep themselves."""
-    from market_flow_spark.extensions.dedup import dedup_keep_list
-
-    pairs = embedding_neardup_pairs_banded(
-        embeddings, threshold, n_bands, band_bits, id_col, emb_col
-    )
-    ids = embeddings.select(F.col(id_col).alias("doc_id"))
-    keep = dedup_keep_list(
-        ids, pairs, max_iter=max_iter, id1="vec1", id2="vec2"
-    )
-    return keep.select(
-        F.col("doc_id").alias(id_col), "cluster_id", "keep"
-    )
-
-
-def semantic_dedup_keep_routed(
-    embeddings: DataFrame,
-    threshold: float = 0.25,
-    n_bits: int = 8,
-    max_emission: float | None = NEAR_DUP_MAX_EMISSION,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    max_iter: int = 20,
-    n_full: int | None = None,
-) -> DataFrame:
-    """SemDeDup keep-list behind the emission-routed candidate generator
-    (round 12 — the same treatment ``embedding_neardup_pairs_routed``
-    gave the pair tier in round 11, one tier up): candidate pairs come
-    from the base ``n_bits`` sign block while the sampled emission
-    estimate fits ``max_emission``, from the banded sign-LSH ladder once
-    it doesn't — so no caller lands on the dominated single-block
-    generator (216/400 planted recall vs banded's 289/400 at ×4.6 the
-    speed, bench_escalation.json) just because the corpus outgrew the
-    block. Output contract identical on both routes: (vec_id,
-    cluster_id, keep) over ALL vectors, keeper = cluster minimum.
-    ``n_full`` (catalog stats) skips the chooser's corpus count."""
-    from market_flow_spark.extensions.dedup import dedup_keep_list
-
-    pairs = embedding_neardup_pairs_routed(
-        embeddings, threshold=threshold, n_bits=n_bits,
-        max_emission=max_emission, id_col=id_col, emb_col=emb_col,
-        n_full=n_full,
-    )
     ids = embeddings.select(F.col(id_col).alias("doc_id"))
     keep = dedup_keep_list(
         ids, pairs, max_iter=max_iter, id1="vec1", id2="vec2"
@@ -1402,25 +1324,7 @@ def embedding_neardup_pairs_ivf(
         F.col(emb_col).alias("emb"),
         assign_cell(emb_col).alias("cell"),
     )
-    a, b = assigned.alias("a"), assigned.alias("b")
-    cos = det_round(
-        _dot(F.col("a.emb"), F.col("b.emb"))
-        / (
-            F.sqrt(_norm_sq(F.col("a.emb")))
-            * F.sqrt(_norm_sq(F.col("b.emb")))
-        ),
-        6,
-    )
-    return (
-        a.join(b, F.col("a.cell") == F.col("b.cell"))
-        .filter(F.col("a.vid") < F.col("b.vid"))
-        .select(
-            F.col("a.vid").alias("vec1"),
-            F.col("b.vid").alias("vec2"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _block_pairs(assigned, "cell", threshold)
 
 
 def mmr_select(

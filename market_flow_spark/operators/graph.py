@@ -37,7 +37,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """(node, rank_fixed, rank) after ``n_iter`` synchronous PageRank
     rounds over the directed edge list. Multigraph semantics: parallel
@@ -58,19 +57,15 @@ def pagerank(
     ranks), so the unmaterialized plan grows LINEARLY per round — the
     per-round eager ``localCheckpoint`` of the former shape (which
     referenced ``ranks`` twice per round and would otherwise double the
-    plan each round) is not needed for plan health. Default
-    ``checkpoint_every=None`` materializes ONLY the final table: all
-    ``n_iter`` rounds execute as one job whose in-plan partitioning
-    chains — EnsureRequirements sees each round's join output already
-    hash-clustered on the node key, so only the contribution aggregate
-    exchanges per round and the e/nd exchanges are ReusedExchange across
-    rounds. (Materializing every round costs 3-4 exchanges per round
-    because a localCheckpoint under AQE comes back as a bare
-    ``Scan ExistingRDD`` with no partitioning info — measured, round
-    13.) Set an integer cadence to bound lineage depth for fault
-    recovery on very long chains at cluster scale. Arithmetic is
-    unchanged — the same integer recurrence in any grouping — so
-    results are identical at any cadence."""
+    plan each round) is not needed for plan health. Only the final table
+    is materialized: all ``n_iter`` rounds execute as one job whose
+    in-plan partitioning chains — EnsureRequirements sees each round's
+    join output already hash-clustered on the node key, so only the
+    contribution aggregate exchanges per round and the e/nd exchanges
+    are ReusedExchange across rounds. (Materializing every round costs
+    3-4 exchanges per round because a localCheckpoint under AQE comes
+    back as a bare ``Scan ExistingRDD`` with no partitioning info —
+    measured, round 13.)"""
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .localCheckpoint(eager=True)
@@ -94,7 +89,7 @@ def pagerank(
         "node", "deg", F.lit(PR_SCALE).cast("bigint").alias("rf")
     )
     base = int((1.0 - damping) * PR_SCALE)
-    for i in range(n_iter):
+    for _ in range(n_iter):
         contribs = (
             e.join(ranks, e["src"] == ranks["node"])
             .select("dst", F.expr("rf div deg").alias("c"))
@@ -116,11 +111,7 @@ def pagerank(
                 .alias("rf"),
             )
         )
-        if i == n_iter - 1 or (
-            checkpoint_every is not None
-            and (i + 1) % max(checkpoint_every, 1) == 0
-        ):
-            ranks = ranks.localCheckpoint(eager=True)
+    ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(
         "node",
         F.col("rf").alias("rank_fixed"),

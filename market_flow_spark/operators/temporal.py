@@ -359,10 +359,13 @@ def gap_fill_series(
     Precondition (unchanged from the spine shape, now stated): observed
     periods lie on the ``step`` grid — the old shape silently DROPPED
     off-grid observations (the spine join never matched them); this one
-    keeps them and clamps their gap run to empty. Observed rows keep
-    their own values verbatim (the registered series are aggregates, so
-    observed values are never NULL — both shapes agree on every
-    grid-aligned series with non-null observations)."""
+    keeps them and clamps their gap run to empty. The gap run of the row
+    BEFORE an off-grid row is empty too (its successor − step falls
+    short of its next grid period), so no gap row fills toward it.
+    Observed rows keep their own values verbatim: a NULL observation is
+    kept as NULL and its gap rows carry the NULL (the registered series
+    are aggregates, so observed values are never NULL — both shapes
+    agree on every grid-aligned series with non-null observations)."""
     w = Window.partitionBy(group).orderBy(period_col)
     src = df.withColumn("__nxt", F.lead(period_col).over(w))
     emitted = src.select(

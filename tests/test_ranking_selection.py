@@ -179,7 +179,8 @@ def test_semantic_dedup_keeps_one_per_chain(spark):
             [1.0, -1.0, 1.0, -1.0, 1.0, -1.0, 1.0, -1.0],
         ],
     )
-    out = {r["vec_id"]: r for r in semantic_dedup_keep(emb, threshold=0.9).collect()}
+    pairs = embedding_neardup_pairs(emb, threshold=0.9)
+    out = {r["vec_id"]: r for r in semantic_dedup_keep(emb, pairs).collect()}
     assert out[0]["keep"] and out[0]["cluster_id"] == 0
     assert not out[1]["keep"] and out[1]["cluster_id"] == 0
     assert not out[2]["keep"] and out[2]["cluster_id"] == 0

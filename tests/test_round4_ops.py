@@ -307,6 +307,14 @@ class TestGapFill:
                 ("g", d(2024, 1, 1), 10.0),
                 ("g", d(2024, 4, 1), 40.0),  # feb+mar missing
                 ("h", d(2024, 2, 1), 5.0),
+                # NULL observation: kept as NULL, its gap row carries it
+                ("n", d(2024, 1, 1), 1.0),
+                ("n", d(2024, 2, 1), None),
+                ("n", d(2024, 4, 1), 4.0),
+                # off-grid observation: kept, and neither neighbour fills
+                ("o", d(2024, 1, 1), 1.0),
+                ("o", d(2024, 2, 15), 2.0),
+                ("o", d(2024, 4, 1), 4.0),
             ],
             "grp string, month date, v double",
         )
@@ -324,3 +332,16 @@ class TestGapFill:
         # single-point group: spine is exactly its own month, no padding
         h = [(str(r.month), r.v, r.is_gap) for r in rows if r.grp == "h"]
         assert h == [("2024-02-01", 5.0, False)]
+        n = [(str(r.month), r.v, r.is_gap) for r in rows if r.grp == "n"]
+        assert n == [
+            ("2024-01-01", 1.0, False),
+            ("2024-02-01", None, False),
+            ("2024-03-01", None, True),
+            ("2024-04-01", 4.0, False),
+        ]
+        o = [(str(r.month), r.v, r.is_gap) for r in rows if r.grp == "o"]
+        assert o == [
+            ("2024-01-01", 1.0, False),
+            ("2024-02-15", 2.0, False),
+            ("2024-04-01", 4.0, False),
+        ]

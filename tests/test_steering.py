@@ -586,8 +586,11 @@ def test_semantic_dedup_keep_banded_planted_clusters(spark):
     emb = _varied_band_embeddings(spark)
     rows = {
         r["vec_id"]: (r["cluster_id"], r["keep"])
-        for r in similarity.semantic_dedup_keep_banded(
-            emb, threshold=0.25, n_bands=4, band_bits=16
+        for r in similarity.semantic_dedup_keep(
+            emb,
+            similarity.embedding_neardup_pairs_banded(
+                emb, threshold=0.25, n_bands=4, band_bits=16
+            ),
         ).collect()
     }
     assert len(rows) == 215
@@ -823,13 +826,17 @@ def test_choose_banded_layout_last_resort_is_structurally_valid(spark):
 
 
 def test_semantic_keep_routed_stays_base_under_cap(tables):
-    """semantic_dedup_keep_routed (round 12, verdict ask #3): under the
-    default cap the routed keep-list's pair graph is byte-identical to
-    the single-block generator's — the registered twin's assumption, on
-    the driver's own embeddings table."""
+    """The keep-list over the routed generator (semantic_dedup_keep_routed):
+    under the default cap its pair graph is byte-identical to the
+    single-block generator's — the registered twin's assumption, on the
+    driver's own embeddings table."""
     emb = tables["embeddings"]
-    routed = similarity.semantic_dedup_keep_routed(emb, threshold=0.25)
-    base = similarity.semantic_dedup_keep(emb, threshold=0.25, n_bits=8)
+    routed = similarity.semantic_dedup_keep(
+        emb, similarity.embedding_neardup_pairs_routed(emb, threshold=0.25)
+    )
+    base = similarity.semantic_dedup_keep(
+        emb, similarity.embedding_neardup_pairs(emb, threshold=0.25, n_bits=8)
+    )
     assert sorted(map(tuple, routed.collect())) == sorted(
         map(tuple, base.collect())
     )
@@ -840,11 +847,14 @@ def test_semantic_keep_routed_escalates_onto_banded_graph(spark):
     pair graph (no caller lands on the 216/400-recall single-block
     generator unaware) — certified against the recursive-CTE banded keep
     twin at the layout the banded chooser picks on the skewed corpus."""
-    from market_flow_spark.queries_ext import _semantic_keep_banded_oracle
+    from market_flow_spark.queries_ext import _semantic_keep_oracle
 
     emb = _skewed_embeddings(spark)
-    routed = similarity.semantic_dedup_keep_routed(
-        emb, threshold=0.25, max_emission=2e4
+    routed = similarity.semantic_dedup_keep(
+        emb,
+        similarity.embedding_neardup_pairs_routed(
+            emb, threshold=0.25, max_emission=2e4
+        ),
     )
     bands, bits = similarity.choose_banded_layout(emb, max_emission=2e4)
     assert (bands, bits) != (4, 16)  # genuinely the escalated regime
@@ -860,8 +870,10 @@ def test_semantic_keep_routed_escalates_onto_banded_graph(spark):
         assert_matches_oracle(
             routed,
             con,
-            _semantic_keep_banded_oracle(
-                n_bands=bands, band_bits=bits, threshold=0.25
+            _semantic_keep_oracle(
+                _banded_near_dup_oracle(
+                    n_bands=bands, band_bits=bits, threshold=0.25
+                )
             ),
         )
     finally:
