@@ -1,12 +1,14 @@
-"""Iterative graph algebra: PageRank as pure DataFrame rounds.
+"""Iterative graph algebra: fixed-point PageRank, routed by graph size.
 
 The reference has no graph surface; at 100 TB link-analysis ranks (domain
 authority for crawl prioritization, near-dup-cluster centrality) are a
 standard corpus-curation signal, and PageRank is the canonical iterative
 companion to the connected-components propagation in
-``extensions.dedup.dedup_clusters`` — same execution discipline: one keyed
-edge-list shuffle per round, eager ``localCheckpoint`` lineage truncation
-so round N's plan stays constant-size, never a collect of the graph.
+``extensions.dedup.dedup_clusters``. The edge list is checkpointed once
+and counted; a small graph then runs every round inside one Python task,
+a large one runs each round as a keyed edge-list join plus one
+map-side-combined aggregate, with one eager ``localCheckpoint`` of the
+final rank table. Neither route collects the graph to the driver.
 
 Determinism (what makes an iterative float algorithm oracle-checkable):
 ranks live as 1e-9 **fixed-point BIGINTs**. Per-edge contributions use
@@ -14,7 +16,7 @@ integer floor division (``rank_fixed div outdeg``), per-node sums are
 exact BIGINT addition (associative under any partitioning), and the one
 float op per node per round — ``floor(damping * sum)`` — is a single IEEE
 multiply on an integer-valued double below 2^53, bit-identical in any
-engine. The classic Brin-Page formulation is used:
+engine, numpy included. The classic Brin-Page formulation is used:
 
     rank(v) <- (1 - d) + d * sum over in-edges (u, v) of rank(u)/outdeg(u)
 
@@ -25,10 +27,24 @@ matters; the bipartite query twin does exactly that).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from market_flow_spark.decisions import decision_log
 
 PR_SCALE = 10**9
+
+# Largest edge count that takes the one-task route: the largest graph
+# measured (sf1), where that route still won (see ``pagerank``).
+PAGERANK_ONE_TASK_MAX_EDGES = 11_819_460
+
+
+def _base_rank(damping: float) -> int:
+    """Fixed-point ``1 - damping``: a node's rank with no in-edges."""
+    return int((1.0 - damping) * PR_SCALE)
 
 
 def pagerank(
@@ -41,35 +57,79 @@ def pagerank(
     """(node, rank_fixed, rank) after ``n_iter`` synchronous PageRank
     rounds over the directed edge list. Multigraph semantics: parallel
     edges contribute multiply — ``.distinct()`` the edge list first for
-    simple-graph ranks.
+    simple-graph ranks. A NULL endpoint is a node of its own that nothing
+    ranks (rank ``1 - damping``); an edge to NULL still counts in its
+    source's out-degree, and an edge from NULL contributes nothing.
 
-    Scale shape: the edge list and the static (node, deg) table are
-    checkpointed once; each round is one equi-join of the
-    (node-count-sized) rank table onto the edge list plus one
-    map-side-combined sum on dst — the same per-round cost profile as one
-    round of min-label propagation. Rank state is 2 columns × node count;
-    at 1000 executors the join partitions by the edge key, and a hot
-    in-degree node costs only its aggregate row.
+    Two routes, picked by the edge count of the eagerly checkpointed
+    edge list (one count job) against ``PAGERANK_ONE_TASK_MAX_EDGES``
+    and logged through ``decisions.decision_log``:
 
-    Checkpoint cadence (round-13): the round recurrence references the
-    previous rank table ONCE (the new rank row joins the static ``nd``
-    table against the contribution aggregate, not against the previous
-    ranks), so the unmaterialized plan grows LINEARLY per round — the
-    per-round eager ``localCheckpoint`` of the former shape (which
-    referenced ``ranks`` twice per round and would otherwise double the
-    plan each round) is not needed for plan health. Only the final table
-    is materialized: all ``n_iter`` rounds execute as one job whose
-    in-plan partitioning chains — EnsureRequirements sees each round's
-    join output already hash-clustered on the node key, so only the
-    contribution aggregate exchanges per round and the e/nd exchanges
-    are ReusedExchange across rounds. (Materializing every round costs
-    3-4 exchanges per round because a localCheckpoint under AQE comes
-    back as a bare ``Scan ExistingRDD`` with no partitioning info —
-    measured, round 13.)"""
+    - **one task** (``edges <= bound``): the edge list gets a constant
+      grouping column and one ``applyInPandas`` task runs all rounds in
+      numpy with the same arithmetic (int64 ``rf // deg``, exact
+      ``np.add.at`` sums, one IEEE ``floor(damping * s)`` per node). The
+      result is lazy. On a small graph the distributed rounds cost
+      scheduling, not data: about 0.13 s per sequential stage on 4 cores.
+    - **distributed** (larger graphs): the (node, deg) table is
+      checkpointed once; each round is one equi-join of the rank table
+      onto the edge list plus one map-side-combined sum on dst. The
+      recurrence references the previous rank table once, so the plan
+      grows linearly and only the final table is checkpointed: all
+      rounds run as one job in which each round's join output is
+      already hash-clustered on the node key, so only the contribution
+      aggregate exchanges per round. (A per-round checkpoint would cost
+      3-4 exchanges per round: under AQE a ``localCheckpoint`` comes back
+      as a bare ``Scan ExistingRDD`` with no partitioning.)
+
+    Crossover, measured on 4 cores over the symmetrized part-supplier
+    graph of ``pagerank_part_supplier`` (8 rounds; construct plus a noop
+    write, median of 8, 6 and 3 interleaved same-process reps; every
+    output bit-identical across routes):
+
+    ========  ==========  ========  ========  ===========
+    scale     edges       nodes     one task  distributed
+    ========  ==========  ========  ========  ===========
+    sf0.01       103,462     2,100    0.79 s       2.60 s
+    sf0.1      1,181,946    21,000    2.78 s       5.77 s
+    sf1       11,819,460   201,000   18.84 s      35.68 s
+    ========  ==========  ========  ========  ===========
+
+    The one-task route still wins at sf1, the largest graph measured, so
+    the bound sits at that edge count rather than at an extrapolated
+    crossover. The sf1 task holds the whole edge list in one Python
+    worker: replayed in a plain Python process, its body took 3.9 s and
+    peaked at 1.4 GB RSS."""
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .localCheckpoint(eager=True)
     )
+    size = e.agg(
+        F.count(F.lit(1)).alias("edges"),
+        F.count_if(F.col("src").isNull() | F.col("dst").isNull()).alias(
+            "null_edges"
+        ),
+    ).first()
+    one_task = size["edges"] <= PAGERANK_ONE_TASK_MAX_EDGES
+    decision_log(
+        "graph.pagerank",
+        {"edges": size["edges"]},
+        PAGERANK_ONE_TASK_MAX_EDGES,
+        "one_task" if one_task else "distributed",
+    )
+    if one_task:
+        ranks = _pagerank_one_task(e, n_iter, damping, size["null_edges"] > 0)
+    else:
+        ranks = _pagerank_rounds(e, n_iter, damping)
+    return ranks.select(
+        "node",
+        F.col("rf").alias("rank_fixed"),
+        (F.col("rf") / F.lit(float(PR_SCALE))).alias("rank"),
+    )
+
+
+def _pagerank_rounds(e: DataFrame, n_iter: int, damping: float) -> DataFrame:
+    """Distributed route: (node, deg, rf), checkpointed once at the end."""
     nodes = e.select(F.col("src").alias("node")).union(
         e.select(F.col("dst").alias("node"))
     ).distinct()
@@ -88,7 +148,7 @@ def pagerank(
     ranks = nd.select(
         "node", "deg", F.lit(PR_SCALE).cast("bigint").alias("rf")
     )
-    base = int((1.0 - damping) * PR_SCALE)
+    base = _base_rank(damping)
     for _ in range(n_iter):
         contribs = (
             e.join(ranks, e["src"] == ranks["node"])
@@ -111,12 +171,71 @@ def pagerank(
                 .alias("rf"),
             )
         )
-    ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(
-        "node",
-        F.col("rf").alias("rank_fixed"),
-        (F.col("rf") / F.lit(float(PR_SCALE))).alias("rank"),
+    return ranks.localCheckpoint(eager=True)
+
+
+def _pagerank_one_task(
+    e: DataFrame, n_iter: int, damping: float, has_null: bool
+) -> DataFrame:
+    """One-task route: (node, rf), lazy. NULL endpoints never reach
+    pandas, where a nullable integer column would become float64: each
+    row ships as two non-NULL ids ``a = coalesce(src, dst)`` and
+    ``b = coalesce(dst, src)`` plus flags saying which endpoints were
+    real, and the NULL node's constant rank row is unioned on in Spark."""
+    node_type = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .schema["node"]
+        .dataType
     )
+    s, d = F.col("src").cast(node_type), F.col("dst").cast(node_type)
+    rows = e.select(
+        F.lit(0).alias("g"),
+        F.coalesce(s, d).alias("a"),
+        F.coalesce(d, s).alias("b"),
+        s.isNotNull().alias("src_ok"),
+        d.isNotNull().alias("dst_ok"),
+    ).where(F.col("a").isNotNull())
+    schema = StructType(
+        [StructField("node", node_type), StructField("rf", LongType())]
+    )
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _one_task_ranks(pdf, n_iter, damping)
+
+    ranks = rows.groupBy("g").applyInPandas(run, schema=schema)
+    if has_null:
+        rf = PR_SCALE if n_iter == 0 else _base_rank(damping)
+        ranks = ranks.union(
+            e.sparkSession.range(1).select(
+                F.lit(None).cast(node_type).alias("node"),
+                F.lit(rf).cast("bigint").alias("rf"),
+            )
+        )
+    return ranks
+
+
+def _one_task_ranks(
+    pdf: pd.DataFrame, n_iter: int, damping: float
+) -> pd.DataFrame:
+    """All ``n_iter`` rounds over one task's (a, b, src_ok, dst_ok) rows,
+    with the distributed route's fixed-point arithmetic."""
+    m = len(pdf)
+    codes, nodes = pd.factorize(
+        pd.concat([pdf["a"], pdf["b"]], ignore_index=True)
+    )
+    src, dst = codes[:m], codes[m:]
+    src_ok = pdf["src_ok"].to_numpy(dtype=bool)
+    link = src_ok & pdf["dst_ok"].to_numpy(dtype=bool)
+    deg = np.bincount(src[src_ok], minlength=len(nodes)).astype(np.int64)
+    src, dst = src[link], dst[link]
+    base = _base_rank(damping)
+    rf = np.full(len(nodes), PR_SCALE, dtype=np.int64)
+    for _ in range(n_iter):
+        s = np.zeros(len(nodes), dtype=np.int64)
+        np.add.at(s, dst, rf[src] // deg[src])
+        rf = base + np.floor(damping * s.astype(np.float64)).astype(np.int64)
+    return pd.DataFrame({"node": nodes, "rf": rf})
 
 
 def pagerank_oracle_sql(
@@ -127,7 +246,7 @@ def pagerank_oracle_sql(
     term, and n_iter is a fixed plan-time constant anyway — the same
     generate-the-SQL move as the 16-column MinHash oracle). Identical
     fixed-point arithmetic at every step."""
-    base = int((1.0 - damping) * PR_SCALE)
+    base = _base_rank(damping)
     parts = [
         f"WITH e AS ({edges_sql})",
         "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",

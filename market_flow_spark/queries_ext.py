@@ -3872,10 +3872,12 @@ def q_pagerank_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (8 fixed-point rounds): the iterative-graph companion to the
     connected-components tier — rank concentration surfaces hub suppliers
     / hot parts. Symmetrizing makes the bipartite graph dangling-free, so
-    the no-redistribution formulation conserves interpretation. Past-
-    window: per-round join+agg machinery is in-window via
-    dedup-cluster-adjacent shapes; full oracle (unrolled CTE chain) in
-    pytest."""
+    the no-redistribution formulation conserves interpretation. The
+    graph is small at every shipped scale (2,100 nodes and 103,462 edges
+    at sf0.01), so ``graph.pagerank`` runs all 8 rounds in one
+    ``applyInPandas`` task; above its edge-count bound the rounds run
+    distributed. Full oracle (unrolled CTE chain) in pytest, on both
+    routes."""
     from market_flow_spark.operators import graph
 
     li = load_tables(spark, sf_dir)["lineitem"]

@@ -67,7 +67,20 @@ def test_topk_plans_as_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-PANDAS_UDF_QUERIES = {"linear_forecast"}
+# Python-side physical ops: each runs rows through a Python worker, so a
+# query may plan one only where it is declared below
+PYTHON_SIDE_OPS = ("FlatMapGroupsInPandas", "MapInPandas", "ArrowEvalPython")
+PANDAS_UDF_QUERIES = {
+    # per-group OLS fit (forecast.linear_forecast's applyInPandas)
+    "linear_forecast": {"FlatMapGroupsInPandas"},
+    "best_markets": {"FlatMapGroupsInPandas"},
+    # per-user sessionization fold (stateful.batch_user_sessions)
+    "user_sessions_core": {"FlatMapGroupsInPandas"},
+    # row-expanding frame sampler (multimodal.sample_frames)
+    "multimodal_frames": {"MapInPandas"},
+    # small graphs run every PageRank round in one applyInPandas task
+    "pagerank_part_supplier": {"FlatMapGroupsInPandas"},
+}
 # crossJoins whose broadcast side is scalar/constant-sized by construction
 # (a 12-row scaffold, a 5-row query set, a one-row aggregate): the BNLJ
 # they plan to is the intended physical op. Anywhere else a nested-loop
@@ -118,7 +131,7 @@ def test_all_plans_stay_jvm_side_and_join_sane(spark, sf_dir):
     """One sweep over EVERY registered query's executed plan:
 
     - row-at-a-time Python UDFs (BatchEvalPython) are banned everywhere;
-      Arrow UDFs only at the declared applyInPandas site
+      Arrow-batched Python ops only where PANDAS_UDF_QUERIES declares them
     - no CartesianProduct anywhere
     - BroadcastNestedLoopJoin only at the documented tiny-broadcast
       crossJoin sites
@@ -126,8 +139,9 @@ def test_all_plans_stay_jvm_side_and_join_sane(spark, sf_dir):
     for name, fn in QUERIES.items():
         plan = _executed_plan(fn(spark, sf_dir))
         assert "BatchEvalPython" not in plan, f"{name} uses a row Python UDF"
-        if name not in PANDAS_UDF_QUERIES:
-            assert "ArrowEvalPython" not in plan, f"{name} unexpectedly Arrow"
+        for op in PYTHON_SIDE_OPS:
+            if op not in PANDAS_UDF_QUERIES.get(name, ()):
+                assert op not in plan, f"{name} unexpectedly plans {op}"
         assert "CartesianProduct" not in plan, f"{name} plans a cartesian"
         if name not in INTENTIONAL_TINY_CROSSJOIN:
             assert "BroadcastNestedLoopJoin" not in plan, f"{name} plans BNLJ"
