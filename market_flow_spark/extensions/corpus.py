@@ -40,7 +40,6 @@ def clean_corpus(
     emb_threshold: float = 0.25,
     emb_id_col: str = "vec_id",
     emb_col: str = "embedding",
-    emb_n_bits: int = 8,
     gopher: bool = False,
 ) -> DataFrame:
     """(doc_id, keep, drop_reason) for every input document — the
@@ -124,7 +123,8 @@ def clean_corpus(
             "left_semi",
         )
         sem_pairs = embedding_neardup_pairs(
-            emb_surv, emb_threshold, emb_n_bits, emb_id_col, emb_col
+            emb_surv, threshold=emb_threshold, id_col=emb_id_col,
+            emb_col=emb_col,
         )
         sem_clusters = dedup.dedup_clusters(
             sem_pairs, id1="vec1", id2="vec2"

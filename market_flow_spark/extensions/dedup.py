@@ -622,7 +622,6 @@ def word_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.7,
     text_col: str = "text",
-    freq_ordered: bool | None = None,
     strategy: str = "auto",
     max_emission: float | None = WORD_JACCARD_MAX_EMISSION,
     n_full: int | None = None,
@@ -672,12 +671,8 @@ def word_jaccard_pairs(
       corpus crossed the cap gets a runtime signal, not a silent recall
       drop; pin ``strategy=`` explicitly to silence it either way.
 
-    ``freq_ordered`` (bool) is the legacy spelling and overrides
-    ``strategy`` when given. ``n_full`` (known corpus row count) is
-    forwarded to the chooser so 'auto' routing needs no full-input
-    count action."""
-    if freq_ordered is not None:
-        strategy = "freq_ordered" if freq_ordered else "count_common"
+    ``n_full`` (known corpus row count) is forwarded to the chooser so
+    'auto' routing needs no full-input count action."""
     if strategy == "auto":
         strategy = choose_word_jaccard_strategy(
             docs, text_col, threshold=threshold, max_emission=max_emission,
@@ -1400,7 +1395,7 @@ def estimate_exact_substring_window_rows(
     returns fewer rows than requested, else one ``docs.count()``.
 
     The sample is DETERMINISTIC (TakeOrdered on ``doc_id``, same
-    contract as ``choose_near_dup_bits``): a bare ``limit`` is
+    contract as ``similarity.choose_banded_layout``): a bare ``limit`` is
     partition-order dependent, so two runs of
     ``choose_exact_substring_route`` on the same data could flip
     'exact' vs 'winnow_containment' near the 6e8 threshold."""

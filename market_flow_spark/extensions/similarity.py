@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from market_flow_spark.decisions import decision_log
 from market_flow_spark.functions.aggregates import det_round
 
 
@@ -777,194 +778,18 @@ def knn_label_vote(
     )
 
 
-def embedding_neardup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.25,
-    n_bits: int = 8,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    max_block_size: int | None = None,
-) -> DataFrame:
-    """(vec1, vec2, cosine): embedding-space near-duplicate pairs —
-    sign-bucket LSH blocking (an equi-join on the bucket, never a cross
-    join) then exact cosine >= threshold within blocks. The recall
-    contract is the sign-LSH one: pairs straddling a hyperplane sign flip
-    are missed, which is the standard trade for corpus-scale semantic
-    dedup (raise n_bits for precision blocks, lower for recall).
-
-    The blocked frame is an alias self-join of one subtree, so the
-    embedding scan + bucket projection computes once (ReusedExchange).
-
-    ``max_block_size`` is the degenerate-bucket guard (same contract as
-    the MinHash tier's ``max_band_size``): a bucket holding k copies of a
-    near-identical embedding emits k² candidate rows, so buckets larger
-    than the cap are dropped from the join via ONE count-window sharing
-    the join's hash partitioning. Mass-duplicate clusters that big belong
-    to the exact-dedup tier upstream; opt-in, exact semantics when None."""
-    wb = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(emb_col).alias("emb"),
-        sign_bucket(F.col(emb_col), n_bits).alias("bucket"),
-    )
-    if max_block_size is not None:
-        wbk = Window.partitionBy("bucket")
-        wb = (
-            wb.withColumn("__bsz", F.count(F.lit(1)).over(wbk))
-            .filter(F.col("__bsz") <= max_block_size)
-            .drop("__bsz")
-        )
-    return _block_pairs(wb, "bucket", threshold)
-
-
-# Documented routing threshold for the sign-blocked exact cosine tier:
-# candidate pairs the block self-join materializes. Each candidate row
-# carries BOTH dim-64 arrays through the join and pays an exact cosine —
-# measured ~1.3e5 pairs/s/box at sf1 (Σ size² = 1.58e6 → 12 s at 8 bits;
-# 4.1e5 → 3.3 s at 10; 1.2e5 → 1.1 s at 12), ~250× costlier per row than
-# the word tier's bare index emission, hence a cap four orders below its
-# 1e10. 2e6 ≈ 15 s of verify: sf1 sits just under it (the registered
-# record's 8-bit shape stays the chooser's pick at every benched scale),
-# and emission grows ~N²/2^bits, so the first corpus past sf1 starts
-# buying hyperplanes and per-job verify cost stays roughly constant
-# thereafter — the recall trade is the documented sign-LSH contract.
+# Documented routing threshold for the sign-LSH near-dup tier: candidate
+# pairs the key join materializes. Each candidate row pays an exact
+# cosine over two dim-64 arrays — measured ~1.3e5 pairs/s/box at sf1
+# (Σ size² = 1.58e6 → 12 s at 8 bits; 4.1e5 → 3.3 s at 10; 1.2e5 → 1.1 s
+# at 12), ~250× costlier per row than the word tier's bare index
+# emission, hence a cap four orders below its 1e10. 2e6 ≈ 15 s of
+# verify: sf1 sits just under it (the registered (1, 8) layout stays the
+# chooser's pick at every benched scale), and emission grows ~N²/2^bits,
+# so the first corpus past sf1 starts buying hyperplanes and per-job
+# verify cost stays roughly constant thereafter — the recall trade is the
+# documented sign-LSH contract.
 NEAR_DUP_MAX_EMISSION = 2e6
-
-
-def choose_near_dup_bits(
-    embeddings: DataFrame,
-    n_bits: int = 8,
-    max_emission: float | None = NEAR_DUP_MAX_EMISSION,
-    sample_rows: int = 4096,
-    emb_col: str = "embedding",
-    max_bits: int | None = None,
-    id_col: str = "vec_id",
-    n_full: int | None = None,
-) -> int:
-    """Emission-aware block-width chooser for the sign-bucket near-dup
-    tier (the embedding mirror of ``dedup.choose_word_jaccard_strategy``'s
-    routing): estimate the block self-join's candidate emission Σ size²
-    from a bounded sample's bucket histogram — DIAGONAL-EXACT: the
-    estimate is N + (N/n_sample)²·(Σc² − n_sample), scaling only the
-    collision mass quadratically (frequency stationarity) while the
-    diagonal enters linearly — and add hyperplane bits until the
-    estimate fits ``max_emission`` or the embedding dimension runs out.
-    (Scaling the whole Σc² inflates the sample's singleton buckets into
-    n·(N/n)² phantom emission and over-escalates; measured round-11.)
-
-    More bits = smaller blocks = less emission but lower recall (a pair
-    straddling any added hyperplane is lost) — the standard sign-LSH
-    trade. Since round 11 the routed entry point uses this chooser only
-    as the escalation DETECTOR (does the base width's estimate fit the
-    cap?): escalated EXECUTION goes to the banded ladder, which the
-    ×4-sf1 measurement (bench_escalation.json) shows dominates
-    bit-walking on both recall and speed. A caller who wants the wider
-    single block anyway calls ``embedding_neardup_pairs(n_bits=chosen)``
-    directly — it stays DuckDB-twin-checkable at any width.
-
-    Cost: ONE bounded job for the histogram — the sample's buckets are
-    computed once at ``max_bits`` width and collected (≤ ``sample_rows``
-    ints, the same bounded-pull class as the IVF/PQ codebook builds);
-    bucket histograms at narrower widths are low-bit masks of that,
-    folded driver-side. The corpus count follows the word tier's
-    contract: caller-provided ``n_full``, else exact when the bounded
-    sample returns fewer rows than requested, else one ``count()``
-    (pass ``n_full`` from catalog stats to skip it at 100 TB).
-
-    The sample is DETERMINISTIC: the ``sample_rows`` lowest ``id_col``
-    values (TakeOrdered — one bounded pass, no full sort materialized).
-    A bare ``limit`` is partition-order dependent in Spark, so two runs
-    of the same chooser on the same data could disagree near the cap and
-    flip the chosen width — nondeterministic plans and driver-parity
-    flakes. When ``id_col`` is absent the first physical column is used
-    as the tiebreaker (still deterministic for a deterministic source)."""
-    if max_emission is None:
-        return n_bits
-    dim = embeddings.select(F.size(F.col(emb_col)).alias("d")).first()
-    if dim is None:
-        return n_bits
-    # bit weights are 2^i in an INT32 bucket — 30 bits is the safe ceiling
-    hi = min(max_bits if max_bits is not None else 24, int(dim["d"]), 30)
-    if hi <= n_bits:
-        return n_bits
-    order_key = id_col if id_col in embeddings.columns else embeddings.columns[0]
-    sample = (
-        embeddings.orderBy(order_key)
-        .limit(sample_rows)
-        .select(sign_bucket(F.col(emb_col), hi).alias("s"))
-    )
-    sigs = [r["s"] for r in sample.collect()]
-    n_s = len(sigs)
-    if not n_s:
-        return n_bits
-    if n_full is None:
-        n_full = n_s if n_s < sample_rows else embeddings.count()
-    scale = (max(n_full, n_s) / n_s) ** 2
-    from collections import Counter
-
-    bits = n_bits
-    while bits < hi:
-        counts = Counter(s & ((1 << bits) - 1) for s in sigs)
-        # diagonal-exact collision scaling (see choose_banded_layout.est):
-        # true Σc² = N + collision mass, and only the collision mass
-        # scales (N/n)² — scaling sample singletons quadratically
-        # overestimates wide-width emission by ~n·(N/n)² and walks the
-        # escalation further than the corpus warrants.
-        coll = sum(c * c for c in counts.values()) - n_s
-        if n_full + coll * scale <= max_emission:
-            break
-        bits += 1
-    return bits
-
-
-def embedding_neardup_pairs_routed(
-    embeddings: DataFrame,
-    threshold: float = 0.25,
-    n_bits: int = 8,
-    max_emission: float | None = NEAR_DUP_MAX_EMISSION,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    max_bits: int | None = None,
-    n_full: int | None = None,
-) -> DataFrame:
-    """The emission-routed embedding near-dup entry point: the base
-    ``n_bits`` sign-block tier while the sampled candidate-emission
-    estimate fits ``max_emission``, the BANDED sign-LSH ladder
-    (``embedding_neardup_pairs_banded_routed``) once it doesn't — the
-    steering that stops a 100 TB caller from launching the 8-bit
-    quadratic-block job the sf1 audit flagged (20.8 s at sf1 and growing
-    ~quadratically).
-
-    Why banded, not a wider single block (round-11; the round-10 ×4-sf1
-    head-to-head, bench_escalation.json): single-block bit-walking pays
-    recall geometrically per added hyperplane — the escalated 14-bit
-    block recalled 131/400 planted cos≈0.97 pairs vs the banded ladder's
-    289/400 AT EQUAL EMISSION, and the banded shape also beat the
-    unescalated 8-bit block (216/400) at ×4.6 its speed. Bit escalation
-    is dominated on both axes, so no caller should land on it:
-    ``choose_near_dup_bits`` serves here only as the escalation DETECTOR
-    (its width estimate at ``n_bits`` is exactly the block's emission
-    check); the escalated execution shape is the banded ladder. Output
-    schema is identical on both routes ((vec1, vec2, cosine)); the
-    escalated route is certified against its parameterized DuckDB twin
-    by tests/test_steering.py."""
-    # n_full is forwarded, never computed eagerly here: each chooser
-    # counts lazily BEHIND its early exits (max_emission=None, dim at or
-    # under the base width, sample covers corpus), so a call that never
-    # needs the estimate launches zero full-input jobs. Pass n_full from
-    # catalog stats to make the escalation regime count-free too.
-    bits = choose_near_dup_bits(
-        embeddings, n_bits, max_emission, emb_col=emb_col, max_bits=max_bits,
-        id_col=id_col, n_full=n_full,
-    )
-    if bits == n_bits:
-        return embedding_neardup_pairs(
-            embeddings, threshold=threshold, n_bits=bits,
-            id_col=id_col, emb_col=emb_col,
-        )
-    return embedding_neardup_pairs_banded_routed(
-        embeddings, threshold=threshold, max_emission=max_emission,
-        id_col=id_col, emb_col=emb_col, n_full=n_full,
-    )
 
 
 def band_sign_keys(emb: Column, n_bands: int, band_bits: int) -> Column:
@@ -1000,66 +825,84 @@ def band_sign_keys(emb: Column, n_bands: int, band_bits: int) -> Column:
     return F.array(*keys)
 
 
-def embedding_neardup_pairs_banded(
+def embedding_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.25,
-    n_bands: int = 4,
-    band_bits: int = 16,
+    n_bands: int = 1,
+    band_bits: int = 8,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     max_band_size: int | None = None,
 ) -> DataFrame:
-    """(vec1, vec2, cosine): the BANDED sign-LSH shape of the embedding
-    near-dup tier — candidate pair iff the two vectors agree on ALL sign
-    bits of AT LEAST ONE of ``n_bands`` disjoint ``band_bits``-dim
-    slices, then exact cosine ≥ threshold verification. The MinHash-LSH
-    banding construction transplanted to hyperplane signatures.
+    """(vec1, vec2, cosine): embedding-space near-duplicate pairs by
+    banded sign-LSH — candidate pair iff the two vectors agree on ALL
+    sign bits of AT LEAST ONE of ``n_bands`` disjoint ``band_bits``-dim
+    slices (``band_sign_keys``), then exact cosine ≥ threshold. The
+    MinHash-LSH banding construction (Leskovec et al., *Mining of Massive
+    Datasets*, ch. 3) on hyperplane signs. The default ``(1, 8)`` is the
+    classic 8-bit sign bucket; pairs straddling a sign flip in every band
+    are missed, the standard trade for corpus-scale semantic dedup.
 
-    Why it exists (measured, bench_escalation.json): the single-block
-    escalated shape holds emission bounded but pays recall
-    geometrically — at the ×4-sf1 point the 14-bit block recalled 131 of
-    400 planted cos≈0.97 pairs vs the 8-bit block's own 216/400 ceiling.
-    Banding spends the same emission budget better: expected candidate
-    emission is B·N²/2^r (4·N²/2¹⁶ = N²/2¹⁴ at the defaults — exactly
-    the single 14-bit block's), while per-pair recall is 1-(1-p^r)^B
-    instead of p^(r-log₂B) (p = 1-θ/π per hyperplane): at cos 0.97,
-    theory ~0.75 vs ~0.32 — measured at the ×4-sf1 point 289/400 planted
-    pairs vs the 14-bit block's 131/400, and even above the UNBANDED
-    8-bit block's 216/400 at 4.6× its speed (5.0 s vs 23.1 s,
-    bench_escalation.json). One extra join's worth of work
-    (candidates carry only (band, key, id) ints; the two dim-64 payloads
-    join in AFTER distinct-pair dedup, so the banded shape moves LESS
-    array payload than the single-block tier, which drags both arrays
-    through the block join).
+    Why bands (measured, bench_escalation.json): one wide block pays
+    recall geometrically per added hyperplane. Expected emission is
+    B·N²/2^r, so (4, 16) emits what one 14-bit block does, while per-pair
+    recall is 1-(1-p^r)^B instead of p^(r-log₂B) (p = 1-θ/π per
+    hyperplane): at cos 0.97, theory ~0.75 vs ~0.32. At the ×4-sf1 point
+    the banded ladder recalled 289/400 planted pairs vs the 14-bit
+    block's 131/400, and beat the 8-bit block's 216/400 at 4.6× its speed
+    (5.0 s vs 23.1 s).
 
-    Plan (100 TB shape): map-only explode to B (band, key, id) int rows
-    per vector → band equi-join (never a cross join) → distinct id pairs
-    → two hash joins back to the vectors for one exact cosine each.
-    ``max_band_size`` is the degenerate-bucket guard (same contract as
-    the MinHash tier's ``max_band_size``): mass-duplicate buckets belong
-    to the exact-dedup tier upstream. Scale ``band_bits`` up with corpus
-    size exactly as ``choose_near_dup_bits`` scales the single block —
-    the same sampled Σ size² estimator applies per band."""
-    dim_row = embeddings.select(F.size(F.col(emb_col)).alias("d")).first()
-    if dim_row is not None and n_bands * band_bits > int(dim_row["d"]):
-        raise ValueError(
-            f"n_bands*band_bits = {n_bands * band_bits} exceeds embedding "
-            f"dim {dim_row['d']}"
+    The execution shape follows ``n_bands`` (medians of 11 interleaved
+    reps after one warm-up, construct + noop write, 4 cores):
+
+    - one band: an alias self-join of the (id, embedding, key) frame on
+      the BIGINT key (``_block_pairs``; the scan and key projection
+      compute once, ReusedExchange). At (1, 8) 0.38 s vs 0.61 s for the
+      band shape at sf0.01, 0.56 s vs 0.65 s at sf0.1.
+    - several bands: map-only explode to B (band, key, id) rows per
+      vector → band equi-join (never a cross join) → distinct id pairs →
+      two hash joins back to the vectors for one exact cosine each; the
+      dim-64 payloads join in after the pair dedup. At (4, 10) 0.81 s vs
+      0.92 s for the payload self-join plus distinct at sf0.1 (a tie at
+      sf0.01, 0.95 s each). One eager job checks that the bands fit the
+      embedding dim.
+
+    ``max_band_size`` is the degenerate-bucket guard on both shapes (same
+    contract as the MinHash tier's): a bucket holding k copies of a
+    near-identical embedding emits k² candidate rows, so buckets larger
+    than the cap are dropped via ONE count window over the bucket key.
+    Mass-duplicate clusters that big belong to the exact-dedup tier
+    upstream; opt-in, exact semantics when None."""
+    keys = band_sign_keys(F.col(emb_col), n_bands, band_bits)
+    if n_bands == 1:
+        bucket = ["bkey"]
+        keyed = embeddings.select(
+            F.col(id_col).alias("vid"),
+            F.col(emb_col).alias("emb"),
+            keys.getItem(0).alias("bkey"),
         )
-    keys = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(
-            band_sign_keys(F.col(emb_col), n_bands, band_bits)
-        ).alias("band", "bkey"),
-    )
+    else:
+        dim_row = embeddings.select(F.size(F.col(emb_col)).alias("d")).first()
+        if dim_row is not None and n_bands * band_bits > int(dim_row["d"]):
+            raise ValueError(
+                f"n_bands*band_bits = {n_bands * band_bits} exceeds "
+                f"embedding dim {dim_row['d']}"
+            )
+        bucket = ["band", "bkey"]
+        keyed = embeddings.select(
+            F.col(id_col).alias("vid"), F.posexplode(keys).alias("band", "bkey")
+        )
     if max_band_size is not None:
-        wbk = Window.partitionBy("band", "bkey")
-        keys = (
-            keys.withColumn("__bsz", F.count(F.lit(1)).over(wbk))
+        keyed = (
+            keyed.withColumn(
+                "__bsz", F.count(F.lit(1)).over(Window.partitionBy(*bucket))
+            )
             .filter(F.col("__bsz") <= max_band_size)
             .drop("__bsz")
         )
-    ka, kb = keys.alias("ka"), keys.alias("kb")
+    if n_bands == 1:
+        return _block_pairs(keyed, "bkey", threshold)
+    ka, kb = keyed.alias("ka"), keyed.alias("kb")
     cand = (
         ka.join(
             kb,
@@ -1088,80 +931,81 @@ def embedding_neardup_pairs_banded(
 
 def choose_banded_layout(
     embeddings: DataFrame,
-    n_bands: int = 4,
-    band_bits: int = 16,
+    n_bands: int = 1,
+    band_bits: int = 8,
     max_emission: float | None = NEAR_DUP_MAX_EMISSION,
     sample_rows: int = 4096,
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     n_full: int | None = None,
 ) -> tuple[int, int]:
-    """Emission-aware LAYOUT chooser for the banded sign-LSH tier — the
-    banded mirror of ``choose_near_dup_bits``. Expected candidate
-    emission is B·N²/2^r, so the escalation ladder trades bands for
-    width: from the entry layout (B, r) it walks (B-1, dim//(B-1)),
-    (B-2, dim//(B-2)), … (1, dim) until the SAMPLED emission estimate —
-    Σ over bands of [N + (N/n)²·(Σ bucket-size² − n)], the
-    DIAGONAL-EXACT form of the frequency-stationarity estimator shared
-    with the single-block chooser (see ``est``'s comment for the
-    measured failure the naive form causes) — fits ``max_emission``.
-    Each rung divides
-    expected emission by ~2^(Δr)·B-ratio (e.g. dim 64: (4,16) → (3,21)
-    is ×43 less, (2,32) another ×1500), while recall decays only as one
-    band's worth of the 1-(1-p^r)^B curve per rung — far gentler than
-    the single block's per-bit p multiplier.
+    """Emission-aware (n_bands, band_bits) chooser for
+    ``embedding_neardup_pairs``: the first rung of one ladder whose
+    SAMPLED candidate-emission estimate fits ``max_emission``.
 
-    Cost: ONE bounded job for the histogram — the sample's full sign
-    pattern is collected as ceil(dim/8) 8-bit chunk keys per row
-    (≤ sample_rows small ints, the same bounded-pull class as the other
-    choosers), and every candidate layout's band histogram is folded
-    from those chunks driver-side. The corpus count follows the word
-    tier's contract: caller-provided ``n_full``, else exact when the
-    bounded sample returns fewer rows than requested, else one
-    ``count()`` (a full-input action — pass ``n_full`` from catalog
-    stats to skip it at 100 TB). The sample is deterministic
-    (TakeOrdered on id), same contract as ``choose_near_dup_bits``.
+    The ladder starts at the entry layout (B, r) and trades bands for
+    width: (B-1, dim//(B-1)), (B-2, dim//(B-2)), … (1, dim), each width
+    capped at 64 (one BIGINT key per band; for dim > 64 the deep rungs
+    hash a 64-dim prefix slice per band — still valid sign-LSH). A
+    one-band entry (1, r) continues into the scale-default ladder
+    (4, 16), (3, dim//3), (2, dim//2), (1, dim). Expected emission is
+    B·N²/2^r, so each rung divides it by ~2^(Δr)·B-ratio (dim 64:
+    (4, 16) → (3, 21) is ×43 less, (2, 32) another ×1500), while recall
+    decays by one band's worth of the 1-(1-p^r)^B curve per rung — far
+    gentler than adding bits to one block.
 
-    Last resort: if NO rung fits the cap (every band layout dominated
-    by degenerate buckets — near-identical sign patterns), the deepest
-    rung is returned even though its estimate exceeds the cap. Emission
-    is then driven by mass-near-duplicate buckets, which belong to the
-    exact-dedup tier UPSTREAM of any near-dup pass; pass
-    ``max_band_size`` to ``embedding_neardup_pairs_banded`` to bound
-    them explicitly (the MinHash tier's 64-cap contract)."""
+    The estimate is Σ over bands of [N + (N/n)²·(Σ bucket-size² − n)]:
+    DIAGONAL-EXACT. Per band the true Σ bucket² is N (every row pairs
+    with itself once) plus the collision mass, and only the collision
+    mass scales as (N/n)² under frequency stationarity. Scaling the
+    whole sample Σc², diagonal included, inflates the singleton buckets
+    a 4096-row sample of a big corpus mostly consists of into n·(N/n)²
+    phantom emission (~1.6e6 at ×4-sf1, nearly the whole 2e6 cap); that
+    walked the ladder to (1, 64) and collapsed planted-pair recall to
+    1/400 in the round-11 escalation measurement. At full sample
+    coverage the estimate is Σc² exactly.
+
+    Cost: ONE bounded sample job, 0.13-0.17 s on 4 cores at sf0.01 and
+    sf0.1. Each sampled row's sign pattern comes back as one boolean
+    array (a JVM-side ``transform``) that also gives the dim, and every
+    rung's band histogram is folded from those patterns driver-side.
+    (Per-bit CASE WHEN keys over the same sample took 0.29 s as 8-bit
+    chunks and 1.0 s packed into one BIGINT.) The sample is
+    DETERMINISTIC:
+    the ``sample_rows`` lowest ``id_col`` values (TakeOrdered — one
+    bounded pass). A bare ``limit`` is partition-order dependent, so two
+    runs could disagree near the cap and flip the layout; when
+    ``id_col`` is absent the first physical column breaks ties. The
+    corpus count follows the word tier's contract: caller-provided
+    ``n_full``, else exact when the sample returns fewer rows than
+    requested, else one ``count()`` (pass ``n_full`` from catalog stats
+    to skip it at 100 TB). ``max_emission=None`` returns the entry
+    layout without any job.
+
+    Last resort: if NO rung fits the cap (every layout dominated by
+    degenerate buckets — near-identical sign patterns), the deepest
+    structurally valid rung is returned even though its estimate exceeds
+    the cap. Emission is then driven by mass-near-duplicate buckets,
+    which belong to the exact-dedup tier upstream; pass
+    ``max_band_size`` to ``embedding_neardup_pairs`` to bound them.
+
+    Every call that samples logs one ``decisions.decision_log`` record:
+    the sampled and full row counts, the estimate per rung tried, the
+    cap and the chosen layout."""
     if max_emission is None:
         return n_bands, band_bits
-    dim_row = embeddings.select(F.size(F.col(emb_col)).alias("d")).first()
-    if dim_row is None:
-        return n_bands, band_bits
-    dim = int(dim_row["d"])
-    n_chunks = (dim + 7) // 8
-    chunk_keys = F.array(
-        *[
-            sum(
-                (
-                    F.when(
-                        F.col(emb_col).getItem(j * 8 + i) > 0, F.lit(2**i)
-                    ).otherwise(F.lit(0))
-                    for i in range(min(8, dim - j * 8))
-                ),
-                start=F.lit(0),
-            ).cast("int")
-            for j in range(n_chunks)
-        ]
-    )
     order_key = id_col if id_col in embeddings.columns else embeddings.columns[0]
     rows = (
         embeddings.orderBy(order_key)
         .limit(sample_rows)
-        .select(chunk_keys.alias("ck"))
+        .select(F.transform(F.col(emb_col), lambda x: x > 0).alias("s"))
         .collect()
     )
     if not rows:
         return n_bands, band_bits
-    patterns = [
-        sum(int(c) << (8 * j) for j, c in enumerate(r["ck"])) for r in rows
-    ]
+    signs = [r["s"] or [] for r in rows]
+    dim = max(map(len, signs))
+    patterns = [sum(1 << d for d, pos in enumerate(sg) if pos) for sg in signs]
     n_s = len(patterns)
     if n_full is None:
         n_full = n_s if n_s < sample_rows else embeddings.count()
@@ -1169,68 +1013,64 @@ def choose_banded_layout(
     from collections import Counter
 
     def est(bands: int, bits: int) -> float:
-        # Per band: true Σ bucket² = N (the diagonal — every row pairs
-        # with itself once) + the COLLISION mass, and only the collision
-        # mass scales as (N/n)² under frequency stationarity. Scaling
-        # the whole sample Σc² — diagonal included — inflates the n
-        # singleton buckets a 4096-row sample of a big corpus mostly
-        # consists of into n·(N/n)² phantom emission (~1.6e6 at ×4-sf1,
-        # nearly the whole 2e6 cap), which walked the ladder to (1, 64)
-        # and collapsed planted-pair recall to 1/400 in the round-11
-        # escalation measurement. At full sample coverage (scale = 1)
-        # this equals Σc² exactly, same as before.
+        mask = (1 << bits) - 1
         total = 0.0
         for b in range(bands):
-            mask = (1 << bits) - 1
             counts = Counter((p >> (b * bits)) & mask for p in patterns)
             coll = sum(c * c for c in counts.values()) - n_s
             total += n_full + coll * scale
         return total
 
-    # rung widths cap at 64: a band key is one BIGINT (band_sign_keys),
-    # so for dim > 64 the deep rungs hash a 64-dim prefix slice per band
-    # — still valid sign-LSH, just on a subset of hyperplanes
-    layouts = [(n_bands, band_bits)] + [
-        (b, min(dim // b, 64)) for b in range(n_bands - 1, 0, -1)
+    head = [(n_bands, band_bits)] if n_bands > 1 else [(1, band_bits), (4, 16)]
+    rungs = head + [
+        (b, min(dim // b, 64)) for b in range(head[-1][0] - 1, 0, -1)
     ]
-    # The last resort must still be STRUCTURALLY valid: layouts[-1]
-    # verbatim can be a rung the loop just rejected (entry n_bands=1
-    # with band_bits > 64 or > dim leaves the ladder with no generated
-    # rungs), which would crash band_sign_keys downstream instead of
-    # degrading gracefully. Track the deepest rung that passed the
-    # structural check; if none did, clamp to the always-valid (1,
-    # min(dim, 64)) single band.
-    deepest_valid: tuple[int, int] | None = None
-    for bands, bits in layouts:
-        if bands * bits > dim or bits > 64:
+    # a rung band_sign_keys cannot execute is skipped, never returned:
+    # the tail (1, min(dim, 64)) always passes, so the last resort below
+    # stays executable even from an entry wider than the embedding
+    tried = []
+    for bands, bits in rungs:
+        if not 1 <= bits <= 64 or bands * bits > dim:
             continue
-        deepest_valid = (bands, bits)
-        if est(bands, bits) <= max_emission:
-            return bands, bits
-    return deepest_valid if deepest_valid is not None else (1, min(dim, 64))
+        tried.append((bands, bits, est(bands, bits)))
+        if tried[-1][2] <= max_emission:
+            break
+    chosen = tried[-1][:2] if tried else (n_bands, band_bits)
+    decision_log(
+        "similarity.choose_banded_layout",
+        {"sample_rows": n_s, "rows": n_full, "estimates": tried},
+        max_emission,
+        str(chosen),
+    )
+    return chosen
 
 
-def embedding_neardup_pairs_banded_routed(
+def embedding_neardup_pairs_routed(
     embeddings: DataFrame,
     threshold: float = 0.25,
-    n_bands: int = 4,
-    band_bits: int = 16,
+    n_bands: int = 1,
+    band_bits: int = 8,
     max_emission: float | None = NEAR_DUP_MAX_EMISSION,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     n_full: int | None = None,
 ) -> DataFrame:
-    """``embedding_neardup_pairs_banded`` behind the emission-aware
-    layout chooser: the banded tier at whatever (n_bands, band_bits) rung
-    of the ladder fits the sampled emission cap — the shape a 100 TB
-    caller gets without thinking about N. Output semantics stay in-family
-    and DuckDB-twin-checkable at any chosen layout. ``n_full`` (e.g.
-    from catalog stats) skips the chooser's corpus count."""
+    """``embedding_neardup_pairs`` at the layout ``choose_banded_layout``
+    picks from the entry (``n_bands``, ``band_bits``): the entry layout
+    while its sampled emission estimate fits ``max_emission``, the first
+    ladder rung that fits once it doesn't — the steering that stops a
+    100 TB caller from launching the 8-bit quadratic-block job the sf1
+    audit flagged (20.8 s at sf1 and growing ~quadratically). From the
+    (1, 8) default the escalation goes to the banded ladder, never to a
+    wider single block: the ×4-sf1 head-to-head (bench_escalation.json)
+    measured bit-walking dominated on recall and speed. Output schema is
+    the generator's at every layout; ``n_full`` (e.g. from catalog
+    stats) skips the chooser's corpus count."""
     bands, bits = choose_banded_layout(
         embeddings, n_bands, band_bits, max_emission,
         emb_col=emb_col, id_col=id_col, n_full=n_full,
     )
-    return embedding_neardup_pairs_banded(
+    return embedding_neardup_pairs(
         embeddings, threshold=threshold, n_bands=bands, band_bits=bits,
         id_col=id_col, emb_col=emb_col,
     )
@@ -1249,11 +1089,11 @@ def semantic_dedup_keep(
     paraphrases and re-renderings that share no surface n-grams.
 
     Building the similarity graph and clustering it are separate steps,
-    as in the paper: ``pairs`` is any (vec1, vec2) frame — the
-    sign-bucket (``embedding_neardup_pairs``), banded, emission-routed
-    or IVF-cell generator. The generator's recall IS the tier's recall
-    (a near-dup the blocking misses is a duplicate that survives dedup);
-    the banded shape is the scale choice (289/400 planted pairs vs the
+    as in the paper: ``pairs`` is any (vec1, vec2) frame — the sign-LSH
+    generator (``embedding_neardup_pairs``, at any layout or routed) or
+    the IVF-cell one. The generator's recall IS the tier's recall (a
+    near-dup the blocking misses is a duplicate that survives dedup);
+    several bands are the scale choice (289/400 planted pairs vs the
     8-bit block's 216/400 at ×4.6 its speed, bench_escalation.json).
     Clustering is min-label propagation over the edge list (rounds =
     cluster diameter, clique-ish in practice). Returns (vec_id,

@@ -1387,34 +1387,34 @@ WHERE {_ROUNDED_COS_SQL} >= {threshold}
 
 @register("embedding_near_dup", _near_dup_oracle())
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup tier of the dedup ladder: sign-bucket
-    blocking (equi-join, never a cross join) then cosine ≥ threshold within
-    buckets. The registered threshold is 0.25 — low for a real near-dup
-    sweep, but the synthetic embeddings are uniform (max in-bucket cosine
-    ≈ 0.49), and a production-grade 0.9 would make the checked result the
-    empty set; 0.25 keeps tens-to-hundreds of pairs flowing through the
-    driver's value-hash comparison at every SF."""
+    """Embedding-cosine near-dup tier of the dedup ladder: the one-band
+    (1, 8) sign-LSH layout — an 8-bit sign bucket (equi-join, never a
+    cross join), then cosine ≥ threshold within buckets. The registered
+    threshold is 0.25 — low for a real near-dup sweep, but the synthetic
+    embeddings are uniform (max in-bucket cosine ≈ 0.49), and a
+    production-grade 0.9 would make the checked result the empty set;
+    0.25 keeps tens-to-hundreds of pairs flowing through the oracle's
+    value-hash comparison at every SF."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return similarity.embedding_neardup_pairs(emb, threshold=0.25, n_bits=8)
+    return similarity.embedding_neardup_pairs(emb, threshold=0.25)
 
 
 @register("embedding_near_dup_routed", _near_dup_oracle())
 def q_embedding_near_dup_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The emission-routed shape of the embedding near-dup tier (round-8
-    verdict ask #2, embedding mirror; escalation redirected round-11 per
-    verdict ask #2): while the sampled Σ block-size² candidate estimate
-    fits the cap this is the base 8-bit sign block; once it doesn't, the
-    routed entry now executes the BANDED sign-LSH ladder instead of
-    walking the block width up — the round-10 ×4-sf1 head-to-head
-    (bench_escalation.json) measured bit-walking dominated on both axes
-    (131/400 planted recall vs the banded ladder's 289/400 at equal
-    emission). At every registered SF the estimate sits far under
-    ``NEAR_DUP_MAX_EMISSION`` so the router provably stays on the base
-    8-bit block (pinned by tests/test_steering.py, which also certifies
-    the ESCALATED banded route against its parameterized DuckDB twin on
-    a skewed synthetic corpus) — the driver row certifies the routed
-    plumbing on real data; the escalation behavior is certified
-    locally."""
+    """The emission-routed shape of the embedding near-dup tier
+    (``embedding_neardup_pairs_routed`` from the (1, 8) entry): while the
+    sampled Σ bucket-size² candidate estimate fits the cap this is the
+    8-bit sign bucket; once it doesn't, ``choose_banded_layout`` walks on
+    into the banded ladder from (4, 16) instead of widening the one
+    bucket — the round-10 ×4-sf1 head-to-head (bench_escalation.json)
+    measured bit-walking dominated on both axes (131/400 planted recall
+    vs the banded ladder's 289/400 at equal emission). At every
+    registered SF the estimate sits far under ``NEAR_DUP_MAX_EMISSION``
+    so the router provably stays at (1, 8) (pinned by
+    tests/test_steering.py, which also certifies the ESCALATED route
+    against its parameterized DuckDB twin on a skewed synthetic corpus)
+    — the registered row certifies the routed plumbing on real data;
+    the escalation behavior is certified locally."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     return similarity.embedding_neardup_pairs_routed(emb, threshold=0.25)
 
@@ -1422,10 +1422,11 @@ def q_embedding_near_dup_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _banded_near_dup_oracle(
     n_bands: int = 4, band_bits: int = 16, threshold: float = 0.25
 ) -> str:
-    """DuckDB twin of similarity.embedding_neardup_pairs_banded: one
-    UNION-ALL arm per band building the same packed sign key over the
-    same disjoint dim slice, band equi-join, DISTINCT id pairs, then the
-    shared exact-cosine verify at det-round 6.
+    """DuckDB twin of similarity.embedding_neardup_pairs at any
+    (n_bands, band_bits) layout: one UNION-ALL arm per band building the
+    same packed sign key over the same disjoint dim slice, band
+    equi-join, DISTINCT id pairs, then the shared exact-cosine verify at
+    det-round 6.
 
     Keys are BIGINT, mirroring the Spark side's shiftleft/OR packing so
     the twin stays valid at every ladder rung: an INT cast overflows at
@@ -1491,8 +1492,8 @@ def q_embedding_near_dup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band, key, id) ints; the dim-64 payloads join in after
     DISTINCT-pair dedup."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return similarity.embedding_neardup_pairs_banded(
-        emb, threshold=0.25, band_bits=10
+    return similarity.embedding_neardup_pairs(
+        emb, threshold=0.25, n_bands=4, band_bits=10
     )
 
 
@@ -1502,20 +1503,19 @@ def q_embedding_near_dup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_near_dup_banded_routed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The banded tier behind its emission-aware LAYOUT chooser
-    (``choose_banded_layout`` — the banded mirror of the single-block
-    width chooser): from the (4, 10) entry the ladder walks to fewer,
-    wider bands ((3, 21) → (2, 32) → (1, 64)) until the sampled
-    Σ-over-bands bucket-size² estimate fits the 2e6 cap. At every
-    registered SF the estimate sits far under the cap so the chooser
-    provably keeps the entry layout (pinned by
+    """The banded tier behind its emission-aware layout chooser
+    (``embedding_neardup_pairs_routed`` from the (4, 10) entry): the
+    ladder walks to fewer, wider bands ((3, 21) → (2, 32) → (1, 64))
+    until the sampled Σ-over-bands bucket-size² estimate fits the 2e6
+    cap. At every registered SF the estimate sits far under the cap so
+    the chooser provably keeps the entry layout (pinned by
     tests/test_steering.py::test_choose_banded_layout_stays_base_on_testdata,
     which also certifies an ESCALATED layout against a DuckDB twin on a
     degenerate-band corpus) — the driver row certifies the routed
     plumbing on real data; the escalation behavior is certified
     locally."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return similarity.embedding_neardup_pairs_banded_routed(
+    return similarity.embedding_neardup_pairs_routed(
         emb, threshold=0.25, n_bands=4, band_bits=10
     )
 
@@ -3192,12 +3192,12 @@ FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.vec_id
 
 @register("semantic_dedup_keep", _semantic_keep_oracle(_near_dup_oracle()))
 def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup keep-list: embedding near-dup pairs (sign-bucket blocked
-    cosine) -> connected components -> one keeper per semantic cluster.
-    The embedding-tier analogue of dedup_clusters_minhash, catching
+    """SemDeDup keep-list: embedding near-dup pairs (the (1, 8)
+    sign-bucket layout, blocked cosine) -> connected components -> one
+    keeper per semantic cluster. The embedding-tier analogue of dedup_clusters_minhash, catching
     paraphrase-level duplicates that share no surface n-grams."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    pairs = similarity.embedding_neardup_pairs(emb, threshold=0.25, n_bits=8)
+    pairs = similarity.embedding_neardup_pairs(emb, threshold=0.25)
     return similarity.semantic_dedup_keep(emb, pairs)
 
 
@@ -3205,15 +3205,15 @@ def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semantic_dedup_keep_routed", _semantic_keep_oracle(_near_dup_oracle())
 )
 def q_semantic_dedup_keep_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup keep-list over the emission-routed candidate generator,
-    so no caller lands on the single-block generator (216/400 planted
-    recall, dominated by the banded ladder's 289/400 at ×4.6 the speed)
-    unaware once the corpus outgrows the block. At every registered SF
-    the sampled emission estimate sits far under NEAR_DUP_MAX_EMISSION
-    so the router provably stays on the base 8-bit block — byte-identical
-    pair graph to semantic_dedup_keep, hence the shared twin; the
-    ESCALATED route (banded-ladder pair graph) is certified against the
-    banded keep twin on a degenerate-block corpus by
+    """SemDeDup keep-list over the emission-routed candidate generator
+    (``embedding_neardup_pairs_routed``), so no caller keeps the one-band
+    8-bit layout (216/400 planted recall, dominated by the banded
+    ladder's 289/400 at ×4.6 the speed) unaware once the corpus outgrows
+    it. At every registered SF the sampled emission estimate sits far
+    under NEAR_DUP_MAX_EMISSION so the router provably stays at (1, 8) —
+    byte-identical pair graph to semantic_dedup_keep, hence the shared
+    twin; the ESCALATED route (banded-ladder pair graph) is certified
+    against the banded keep twin on a degenerate-block corpus by
     tests/test_steering.py. Same driver-row-certifies-plumbing,
     local-tests-certify-escalation split as embedding_near_dup_routed."""
     emb = load_tables(spark, sf_dir)["embeddings"]
@@ -3235,7 +3235,7 @@ def q_semantic_dedup_keep_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic embeddings are near-uniform; 16-bit bands leave ~1 pair at
     sf0.01)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    pairs = similarity.embedding_neardup_pairs_banded(
+    pairs = similarity.embedding_neardup_pairs(
         emb, threshold=0.25, n_bands=4, band_bits=10
     )
     return similarity.semantic_dedup_keep(emb, pairs)
@@ -3266,7 +3266,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-twin can never land in train. Unpaired docs are their own
     cluster; overall proportions stay ~train_frac."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    pairs = similarity.embedding_neardup_pairs(emb, threshold=0.25, n_bits=8)
+    pairs = similarity.embedding_neardup_pairs(emb, threshold=0.25)
     return cluster_safe_split(
         emb.select(F.col("vec_id").alias("doc_id")),
         pairs,

@@ -255,7 +255,9 @@ def test_word_jaccard_strategies_equivalent(spark, tables):
     )
     prefix = sorted(
         (r.doc1, r.doc2, r.jaccard)
-        for r in word_jaccard_pairs(docs, threshold=0.7, freq_ordered=True).collect()
+        for r in word_jaccard_pairs(
+            docs, threshold=0.7, strategy="freq_ordered"
+        ).collect()
     )
     assert count_common == prefix
     assert len(count_common) > 0

@@ -12,16 +12,10 @@ from tests.oracle_utils import assert_matches_oracle
 
 @pytest.mark.parametrize("name", sorted(ORACLES.keys()))
 def test_query_matches_oracle(name, spark, duck, sf_dir):
+    # every registered query has an oracle (test_contract_alignment), so
+    # this also executes every query's plan
     df = QUERIES[name](spark, sf_dir)
     assert_matches_oracle(df, duck, ORACLES[name])
-
-
-def test_every_query_returns_rows(spark, sf_dir):
-    for name, fn in QUERIES.items():
-        df = fn(spark, sf_dir)
-        # anti-join style queries may legitimately return few rows, but the
-        # plan must execute; count() forces it.
-        assert df.count() >= 0, name
 
 
 def test_entry_smoke(spark):
@@ -37,7 +31,8 @@ def test_contract_alignment():
 
     q = e.queries()
     o = e.oracle_sql()
-    assert set(o.keys()) <= set(q.keys())
+    assert set(o.keys()) == set(q.keys())
+    assert set(ORACLES) == set(QUERIES)
     assert len(q) >= 20
 
 

@@ -189,7 +189,7 @@ def test_semantic_dedup_keeps_one_per_chain(spark):
 
 def test_cluster_safe_split_never_straddles_pairs(spark, tables):
     emb = tables["embeddings"]
-    pairs = embedding_neardup_pairs(emb, threshold=0.25, n_bits=8)
+    pairs = embedding_neardup_pairs(emb, threshold=0.25)
     split = cluster_safe_split(
         emb.select(F.col("vec_id").alias("doc_id")),
         pairs,
@@ -270,7 +270,7 @@ def test_neardup_block_guard_drops_only_oversized_buckets(spark):
 
     unguarded = embedding_neardup_pairs(emb, threshold=0.9)
     assert unguarded.count() == 10 + 1  # C(5,2) hot pairs + the small pair
-    guarded = embedding_neardup_pairs(emb, threshold=0.9, max_block_size=4)
+    guarded = embedding_neardup_pairs(emb, threshold=0.9, max_band_size=4)
     got = {(r["vec1"], r["vec2"]) for r in guarded.collect()}
     assert got == {(5, 6)}
 

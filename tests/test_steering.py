@@ -1,6 +1,6 @@
 """Emission-aware steering of the exact pairwise tiers (round-8 verdict
 ask #2): the word-Jaccard strategy selector and the embedding near-dup
-block-width chooser must route off the exact/8-bit shapes when a sampled
+layout chooser must route off the exact/8-bit shapes when a sampled
 candidate-emission estimate exceeds the documented cap, and the routed
 outputs must stay oracle-checkable.
 
@@ -11,6 +11,9 @@ path.
 """
 
 from __future__ import annotations
+
+import logging
+import time
 
 import duckdb
 import pandas as pd
@@ -196,7 +199,7 @@ def test_unknown_strategy_still_raises(spark):
 
 
 # ---------------------------------------------------------------------------
-# embedding near-dup block-width chooser
+# embedding near-dup layout chooser
 # ---------------------------------------------------------------------------
 
 
@@ -217,32 +220,32 @@ def _skewed_embeddings(spark):
 
 
 def test_choose_bits_escalates_on_skewed_block(spark):
+    """From the one-band (1, 8) entry the skewed corpus escalates under
+    a 2e4 cap: (1, 8) is one 400-deep bucket, so the walk continues into
+    the scale-default ladder, where (4, 16) does not fit dim 16 and
+    (3, 5) and (2, 8) keep the degenerate head dims in band 0 — the
+    first rung that fits is the wide single band (1, 16)."""
     emb = _skewed_embeddings(spark)
-    bits = similarity.choose_near_dup_bits(emb, max_emission=2e4)
-    assert 8 < bits <= 16
-    # and the default cap leaves the base width alone (1.6e5 << 1e9)
-    assert similarity.choose_near_dup_bits(emb) == 8
+    assert similarity.choose_banded_layout(emb, max_emission=2e4) == (1, 16)
+    # and the default cap leaves the entry layout alone (1.6e5 << 2e6)
+    assert similarity.choose_banded_layout(emb) == (1, 8)
 
 
 def test_choose_bits_default_stays_8_on_testdata(tables):
-    """Pins the registered embedding_near_dup_routed oracle's n_bits=8
-    assumption at driver SFs."""
-    assert similarity.choose_near_dup_bits(tables["embeddings"]) == 8
+    """Pins the registered embedding_near_dup_routed oracle's (1, 8)
+    layout assumption at the registered SFs."""
+    assert similarity.choose_banded_layout(tables["embeddings"]) == (1, 8)
 
 
 def test_escalated_width_matches_duckdb_twin(spark):
-    """The single-block shape at an ESCALATED width stays a
-    bit-reproducible contract: run ``embedding_neardup_pairs`` directly
-    at the chooser's escalated width on the skewed corpus and check it
-    against the DuckDB twin generated at that width. (Round-11: the
-    routed ENTRY no longer executes this shape — its escalation regime
-    goes to the banded ladder, certified below — but the wide block
-    remains a caller-selectable tier and must stay twin-true.)"""
+    """A wide single band stays a bit-reproducible contract: the
+    (1, 12) layout on the skewed corpus (the one-band payload self-join
+    on a BIGINT key) matches the INT sign-bucket DuckDB twin generated
+    at 12 bits — the same buckets, so the same pairs."""
     emb = _skewed_embeddings(spark)
-    bits = similarity.choose_near_dup_bits(emb, max_emission=2e4)
-    assert bits > 8
+    bits = 12
     wide = similarity.embedding_neardup_pairs(
-        emb, threshold=0.25, n_bits=bits
+        emb, threshold=0.25, n_bands=1, band_bits=bits
     )
     pdf = pd.DataFrame(
         {
@@ -264,13 +267,14 @@ def test_routed_entry_escalates_onto_banded_ladder(spark):
     """Round-11 verdict ask #2: in the escalation regime the canonical
     routed entry must produce the BANDED ladder's output (the measured
     ×4-sf1 dominant shape), certified against the parameterized banded
-    DuckDB twin at the layout the banded chooser picks — no caller lands
-    on the dominated single-block bit-walk anymore."""
+    DuckDB twin at the layout the chooser picks — no caller lands on
+    the dominated single-block bit-walk anymore."""
     emb = _skewed_embeddings(spark)
     routed = similarity.embedding_neardup_pairs_routed(
         emb, threshold=0.25, max_emission=2e4
     )
     bands, bits = similarity.choose_banded_layout(emb, max_emission=2e4)
+    assert (bands, bits) == (1, 16)
     pdf = pd.DataFrame(
         {
             "vec_id": [r["vec_id"] for r in emb.collect()],
@@ -297,9 +301,7 @@ def test_routed_entry_stays_single_block_under_cap(tables):
     set on the driver's own embeddings table."""
     emb = tables["embeddings"]
     routed = similarity.embedding_neardup_pairs_routed(emb, threshold=0.25)
-    base = similarity.embedding_neardup_pairs(
-        emb, threshold=0.25, n_bits=8
-    )
+    base = similarity.embedding_neardup_pairs(emb, threshold=0.25)
     assert sorted(map(tuple, routed.collect())) == sorted(
         map(tuple, base.collect())
     )
@@ -355,8 +357,8 @@ def test_banded_candidate_semantics_by_construction(spark):
     )
     got = {
         (r["vec1"], r["vec2"])
-        for r in similarity.embedding_neardup_pairs_banded(
-            emb, threshold=-1.0
+        for r in similarity.embedding_neardup_pairs(
+            emb, threshold=-1.0, n_bands=4, band_bits=16
         ).collect()
     }
     assert (0, 1) in got
@@ -389,14 +391,14 @@ def test_banded_recall_beats_single_block_at_equal_emission(spark):
     planted = {(int(b), n + i) for i, b in enumerate(base_ids)}
     banded = {
         (r["vec1"], r["vec2"])
-        for r in similarity.embedding_neardup_pairs_banded(
-            emb, threshold=0.9
+        for r in similarity.embedding_neardup_pairs(
+            emb, threshold=0.9, n_bands=4, band_bits=16
         ).collect()
     }
     single14 = {
         (r["vec1"], r["vec2"])
         for r in similarity.embedding_neardup_pairs(
-            emb, threshold=0.9, n_bits=14
+            emb, threshold=0.9, n_bands=1, band_bits=14
         ).collect()
     }
     rec_banded = len(planted & banded)
@@ -412,7 +414,7 @@ def test_banded_dim_guard(spark):
         [(0, [0.1] * 32)], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ValueError, match="exceeds embedding dim"):
-        similarity.embedding_neardup_pairs_banded(emb, n_bands=4, band_bits=16)
+        similarity.embedding_neardup_pairs(emb, n_bands=4, band_bits=16)
 
 
 def test_banded_band_cap_drops_degenerate_buckets(spark):
@@ -423,8 +425,8 @@ def test_banded_band_cap_drops_degenerate_buckets(spark):
         [(i, [0.5] * 64) for i in range(100)],
         "vec_id long, embedding array<double>",
     )
-    capped = similarity.embedding_neardup_pairs_banded(
-        emb, max_band_size=10
+    capped = similarity.embedding_neardup_pairs(
+        emb, n_bands=4, band_bits=16, max_band_size=10
     )
     assert capped.count() == 0
 
@@ -452,15 +454,21 @@ def test_choose_banded_layout_stays_base_on_testdata(tables):
     assert similarity.choose_banded_layout(
         tables["embeddings"], n_bands=4, band_bits=10
     ) == (4, 10)
-    assert similarity.choose_banded_layout(tables["embeddings"]) == (4, 16)
+    assert similarity.choose_banded_layout(
+        tables["embeddings"], n_bands=4, band_bits=16
+    ) == (4, 16)
 
 
 def test_choose_banded_layout_escalates_down_the_ladder(spark):
     emb = _degenerate_band0_embeddings(spark)
-    layout = similarity.choose_banded_layout(emb, max_emission=2e4)
+    layout = similarity.choose_banded_layout(
+        emb, n_bands=4, band_bits=16, max_emission=2e4
+    )
     assert layout[0] < 4 and layout[0] * layout[1] <= 64
     # the default cap leaves the entry layout alone (1.6e5 << 2e6)
-    assert similarity.choose_banded_layout(emb) == (4, 16)
+    assert similarity.choose_banded_layout(
+        emb, n_bands=4, band_bits=16
+    ) == (4, 16)
 
 
 def test_banded_escalated_layout_matches_duckdb_twin(spark):
@@ -471,9 +479,11 @@ def test_banded_escalated_layout_matches_duckdb_twin(spark):
     from market_flow_spark.queries_ext import _banded_near_dup_oracle
 
     emb = _degenerate_band0_embeddings(spark)
-    bands, bits = similarity.choose_banded_layout(emb, max_emission=2e4)
-    routed = similarity.embedding_neardup_pairs_banded_routed(
-        emb, threshold=0.25, max_emission=2e4
+    bands, bits = similarity.choose_banded_layout(
+        emb, n_bands=4, band_bits=16, max_emission=2e4
+    )
+    routed = similarity.embedding_neardup_pairs_routed(
+        emb, threshold=0.25, n_bands=4, band_bits=16, max_emission=2e4
     )
     pdf = pd.DataFrame(
         {
@@ -570,7 +580,7 @@ def test_banded_scale_default_layout_matches_duckdb_twin(spark):
     corpus where 16-bit bands yield rows (planted duplicates collide in
     all bands; one-band-flipped near-dups collide in a strict subset)."""
     emb = _varied_band_embeddings(spark)
-    out = similarity.embedding_neardup_pairs_banded(
+    out = similarity.embedding_neardup_pairs(
         emb, threshold=0.25, n_bands=4, band_bits=16
     )
     assert out.count() >= 15  # 10 exact + 5 flipped planted pairs
@@ -588,7 +598,7 @@ def test_semantic_dedup_keep_banded_planted_clusters(spark):
         r["vec_id"]: (r["cluster_id"], r["keep"])
         for r in similarity.semantic_dedup_keep(
             emb,
-            similarity.embedding_neardup_pairs_banded(
+            similarity.embedding_neardup_pairs(
                 emb, threshold=0.25, n_bands=4, band_bits=16
             ),
         ).collect()
@@ -612,9 +622,11 @@ def test_banded_32bit_rung_routes_and_matches_twin(spark):
     deep-rung corpus — the chooser must land on (2, 32) — and certify
     the executed output against the BIGINT-keyed DuckDB twin."""
     emb = _deep_rung_embeddings(spark)
-    assert similarity.choose_banded_layout(emb, max_emission=2e4) == (2, 32)
-    routed = similarity.embedding_neardup_pairs_banded_routed(
-        emb, threshold=0.25, max_emission=2e4
+    assert similarity.choose_banded_layout(
+        emb, n_bands=4, band_bits=16, max_emission=2e4
+    ) == (2, 32)
+    routed = similarity.embedding_neardup_pairs_routed(
+        emb, threshold=0.25, n_bands=4, band_bits=16, max_emission=2e4
     )
     assert routed.count() >= 10  # the planted duplicate pairs
     _assert_banded_matches_twin(emb, routed, 2, 32)
@@ -627,7 +639,7 @@ def test_banded_64bit_rung_executes_and_matches_twin(spark):
     failed at PLAN BUILD (lit(2⁶³) → NumberFormatException). Execute it
     end-to-end and certify against the twin."""
     emb = _deep_rung_embeddings(spark)
-    out = similarity.embedding_neardup_pairs_banded(
+    out = similarity.embedding_neardup_pairs(
         emb, threshold=0.25, n_bands=1, band_bits=64
     )
     assert out.count() >= 10
@@ -656,31 +668,90 @@ def test_banded_ladder_caps_rung_width_at_64_for_wide_dims(spark):
         emb, n_bands=4, band_bits=32, max_emission=400.0
     )
     assert bits <= 64
-    out = similarity.embedding_neardup_pairs_banded_routed(
+    out = similarity.embedding_neardup_pairs_routed(
         emb, threshold=0.25, n_bands=4, band_bits=32, max_emission=400.0
     )
     assert out.count() >= 1  # the planted dup survives every layout
 
 
+def _construct_jobs(spark, build):
+    """Number of Spark jobs ``build()`` launches, counted through a
+    job group of its own on the status tracker."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"construct-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "near-dup construct")
+    try:
+        build()
+        # the status store follows the listener bus in order: once this
+        # later job shows, every job build() launched is in it
+        sc.setJobGroup(f"{group}-marker", "marker")
+        sc.parallelize([1]).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-marker"):
+        assert time.monotonic() < deadline
+        time.sleep(0.1)
+    return len(tracker.getJobIdsForGroup(group))
+
+
 def test_routed_entry_launches_no_full_job_when_routing_disabled(spark):
     """Round-11 review finding: the routed entry briefly counted the
-    corpus even when max_emission=None made the chooser a no-op. The
-    count must stay lazy: with routing disabled the plan builds and runs
-    without the chooser ever needing n_full — pinned by handing the
-    chooser an unanswerable n_full=None on a corpus whose dim equals the
-    base width (early exit before any count)."""
+    corpus even when max_emission=None made the chooser a no-op. With
+    routing disabled the chooser returns the entry layout and building
+    the routed plan launches no job at all."""
     emb = _skewed_embeddings(spark)
-    # dim 16 == max_bits cap at 16: hi <= n_bits -> early exit, no count
-    bits = similarity.choose_near_dup_bits(
-        emb, n_bits=16, max_emission=2e4, max_bits=16
-    )
-    assert bits == 16
-    # max_emission=None short-circuits before any job at all
-    assert similarity.choose_near_dup_bits(emb, max_emission=None) == 8
-    out = similarity.embedding_neardup_pairs_routed(
-        emb, threshold=0.25, max_emission=None
-    )
-    assert out.count() >= 0
+    assert _construct_jobs(
+        spark, lambda: similarity.choose_banded_layout(emb, max_emission=None)
+    ) == 0
+    built = []
+    assert _construct_jobs(
+        spark,
+        lambda: built.append(
+            similarity.embedding_neardup_pairs_routed(
+                emb, threshold=0.25, max_emission=None
+            )
+        ),
+    ) == 0
+    assert built[0].count() >= 0
+
+
+def test_escalated_routed_entry_construct_jobs(spark):
+    """Building the escalated routed plan on the skewed corpus runs one
+    job: the chooser's TakeOrdered sample (it reads the dim off the
+    sample, and 400 rows need no count), and the chosen one-band layout
+    adds no dim guard."""
+    emb = _skewed_embeddings(spark)
+    assert _construct_jobs(
+        spark,
+        lambda: similarity.embedding_neardup_pairs_routed(
+            emb, threshold=0.25, max_emission=2e4
+        ),
+    ) == 1
+
+
+def test_choose_banded_layout_logs_its_decision(spark, caplog):
+    """One decision record per routed call, with the sampled and full
+    row counts, the estimate of every rung tried, the cap and the
+    chosen layout."""
+    emb = _skewed_embeddings(spark)
+    with caplog.at_level(logging.INFO, logger="market_flow_spark.decisions"):
+        similarity.embedding_neardup_pairs_routed(
+            emb, threshold=0.25, max_emission=2e4
+        )
+    recs = [
+        r for r in caplog.records if r.name == "market_flow_spark.decisions"
+    ]
+    assert len(recs) == 1
+    d = recs[0].decision
+    assert d["operator"] == "similarity.choose_banded_layout"
+    assert d["threshold"] == 2e4 and d["choice"] == "(1, 16)"
+    assert d["stats"]["sample_rows"] == 400 and d["stats"]["rows"] == 400
+    tried = d["stats"]["estimates"]
+    assert [(b, r) for b, r, _ in tried] == [(1, 8), (3, 5), (2, 8), (1, 16)]
+    assert tried[0][2] == 400 * 400  # the one 400-deep 8-bit bucket
+    assert all(e > 2e4 for _, _, e in tried[:-1]) and tried[-1][2] <= 2e4
 
 
 def test_band_sign_keys_rejects_unpackable_widths(spark):
@@ -688,9 +759,7 @@ def test_band_sign_keys_rejects_unpackable_widths(spark):
     raise at plan build, not overflow silently."""
     emb = _deep_rung_embeddings(spark)
     with pytest.raises(ValueError, match=r"band_bits"):
-        similarity.embedding_neardup_pairs_banded(
-            emb, n_bands=1, band_bits=65
-        )
+        similarity.embedding_neardup_pairs(emb, n_bands=1, band_bits=65)
     with pytest.raises(ValueError, match=r"n_bands"):
         similarity.band_sign_keys(F.col("embedding"), 0, 8)
 
@@ -730,10 +799,10 @@ def test_banded_estimator_does_not_inflate_singleton_diagonal(spark):
 
 
 def test_block_chooser_does_not_inflate_singleton_diagonal(spark):
-    """Single-block mirror of the diagonal regression: 12-bit keys are
-    all-distinct (true Σc² = N = 2048 ≤ the 5e3 cap) so the walk must
-    stop at the base 12 bits; the naive estimator read 512·(2048/512)²
-    = 8192 > cap at EVERY width and walked to max_bits."""
+    """One-band mirror of the diagonal regression: 12-bit keys are
+    all-distinct (true Σc² = N = 2048 ≤ the 5e3 cap) so the chooser must
+    keep the (1, 12) entry; the naive estimator read 512·(2048/512)²
+    = 8192 > cap at every width and escalated."""
     rows = []
     for i in range(2048):
         vec = [
@@ -744,12 +813,9 @@ def test_block_chooser_does_not_inflate_singleton_diagonal(spark):
         ]
         rows.append((i, vec))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    assert (
-        similarity.choose_near_dup_bits(
-            emb, n_bits=12, max_emission=5e3, sample_rows=512, max_bits=16
-        )
-        == 12
-    )
+    assert similarity.choose_banded_layout(
+        emb, n_bands=1, band_bits=12, max_emission=5e3, sample_rows=512
+    ) == (1, 12)
 
 
 def test_banded_layout_estimator_exact_at_full_coverage(spark):
@@ -779,7 +845,9 @@ def test_banded_layout_estimator_exact_at_full_coverage(spark):
     e_next = true_emission(3, 21)
     assert e_next < e_entry
     cap = (e_next + e_entry) / 2
-    assert similarity.choose_banded_layout(emb, max_emission=cap) == (3, 21)
+    assert similarity.choose_banded_layout(
+        emb, n_bands=4, band_bits=16, max_emission=cap
+    ) == (3, 21)
 
 def test_banded_64bit_rung_matches_twin_with_negative_dim63(spark):
     """ADVICE r11: the (1, 64) ladder rung packs a sign into bit 63,
@@ -797,7 +865,7 @@ def test_banded_64bit_rung_matches_twin_with_negative_dim63(spark):
         ).collect()
     }
     assert signs[0] is False and signs[1] is True  # both polarities live
-    out = similarity.embedding_neardup_pairs_banded(
+    out = similarity.embedding_neardup_pairs(
         emb, threshold=0.25, n_bands=1, band_bits=64
     )
     assert out.count() >= 10  # the exact duplicates collide in the band
@@ -807,9 +875,10 @@ def test_banded_64bit_rung_matches_twin_with_negative_dim63(spark):
 def test_choose_banded_layout_last_resort_is_structurally_valid(spark):
     """ADVICE r11: with an unsatisfiable cap the chooser must degrade to
     a layout band_sign_keys can execute, not echo a rung the loop itself
-    rejected. Entry (1, 128) on a dim-16 corpus leaves the ladder with
-    zero structurally valid rungs -> clamp to (1, dim); a valid-entry
-    ladder under the same impossible cap returns its deepest VALID rung."""
+    rejected. Entry (1, 128) on a dim-16 corpus is skipped, and so is the
+    scale-default (4, 16); the walk ends at the deepest valid rung
+    (1, dim). A valid-entry ladder under the same impossible cap also
+    returns its deepest VALID rung."""
     rows = [(i, [0.1] * 16) for i in range(50)]  # one degenerate bucket
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     layout = similarity.choose_banded_layout(
@@ -817,7 +886,7 @@ def test_choose_banded_layout_last_resort_is_structurally_valid(spark):
     )
     assert layout == (1, 16)
     # and the returned layout actually executes
-    similarity.embedding_neardup_pairs_banded(
+    similarity.embedding_neardup_pairs(
         emb, threshold=0.25, n_bands=layout[0], band_bits=layout[1]
     ).count()
     assert similarity.choose_banded_layout(
@@ -827,15 +896,15 @@ def test_choose_banded_layout_last_resort_is_structurally_valid(spark):
 
 def test_semantic_keep_routed_stays_base_under_cap(tables):
     """The keep-list over the routed generator (semantic_dedup_keep_routed):
-    under the default cap its pair graph is byte-identical to the
-    single-block generator's — the registered twin's assumption, on the
-    driver's own embeddings table."""
+    under the default cap its pair graph is byte-identical to the (1, 8)
+    generator's — the registered twin's assumption, on the shipped
+    embeddings table."""
     emb = tables["embeddings"]
     routed = similarity.semantic_dedup_keep(
         emb, similarity.embedding_neardup_pairs_routed(emb, threshold=0.25)
     )
     base = similarity.semantic_dedup_keep(
-        emb, similarity.embedding_neardup_pairs(emb, threshold=0.25, n_bits=8)
+        emb, similarity.embedding_neardup_pairs(emb, threshold=0.25)
     )
     assert sorted(map(tuple, routed.collect())) == sorted(
         map(tuple, base.collect())
@@ -846,7 +915,7 @@ def test_semantic_keep_routed_escalates_onto_banded_graph(spark):
     """In the escalation regime the routed keep-list clusters the BANDED
     pair graph (no caller lands on the 216/400-recall single-block
     generator unaware) — certified against the recursive-CTE banded keep
-    twin at the layout the banded chooser picks on the skewed corpus."""
+    twin at the layout the chooser picks on the skewed corpus."""
     from market_flow_spark.queries_ext import _semantic_keep_oracle
 
     emb = _skewed_embeddings(spark)
@@ -857,7 +926,7 @@ def test_semantic_keep_routed_escalates_onto_banded_graph(spark):
         ),
     )
     bands, bits = similarity.choose_banded_layout(emb, max_emission=2e4)
-    assert (bands, bits) != (4, 16)  # genuinely the escalated regime
+    assert (bands, bits) == (1, 16)  # genuinely the escalated regime
     pdf = pd.DataFrame(
         {
             "vec_id": [r["vec_id"] for r in emb.collect()],
