@@ -924,6 +924,22 @@ def lsh_bands(signatures: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
     return signatures.select(*passthrough, F.inline(F.array(*entries)))
 
 
+def _lsh_banded(arrs: DataFrame) -> DataFrame:
+    """(doc_id, sig, band_idx, band_hash) from shingle arrays (doc_id,
+    sh): MinHash signatures, banded. The full signature travels WITH
+    each band row as a 16-element array, so a band equi-join directly
+    yields both sides' signatures and the estimate screen is an in-row
+    zip — no join back to the signature table, no persist, and query
+    construction stays fully lazy."""
+    words = arrs.select("doc_id", F.explode("sh").alias("word"))
+    sigs = minhash_signatures(words)
+    n = len([c for c in sigs.columns if c.startswith("mh")])
+    sig_arr = F.array(*[F.col(f"mh{i}") for i in range(n)])
+    return lsh_bands(sigs.withColumn("sig", sig_arr)).select(
+        "doc_id", "sig", "band_idx", "band_hash"
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -962,18 +978,7 @@ def minhash_lsh_pairs(
     ``word_jaccard_pairs``, candidate generation swapped for banding.
     """
     arrs = doc_shingle_arrays(docs, shingle_n, text_col)
-    words = arrs.select("doc_id", F.explode("sh").alias("word"))
-    sigs = minhash_signatures(words)
-    n = len([c for c in sigs.columns if c.startswith("mh")])
-    # The full signature travels WITH each band row as a 16-element array,
-    # so the band equi-join directly yields both sides' signatures and the
-    # estimate screen is an in-row zip — no join back to the signature
-    # table, no persist, and query construction stays fully lazy (the
-    # r2-flagged cache leak is gone because there is no cache).
-    sig_arr = F.array(*[F.col(f"mh{i}") for i in range(n)])
-    banded = lsh_bands(sigs.withColumn("sig", sig_arr)).select(
-        "doc_id", "sig", "band_idx", "band_hash"
-    )
+    banded = _lsh_banded(arrs)
     if max_band_size is not None:
         from pyspark.sql import Window
 
@@ -1048,59 +1053,15 @@ def minhash_lsh_pairs_against(
 
     Returns (new_doc_id, corpus_doc_id, jaccard) for exact shingle-Jaccard
     ≥ threshold among signature-screened band collisions — the same
-    three-stage narrowing as :func:`minhash_lsh_pairs`."""
-
-    def banded(docs: DataFrame, side: str) -> DataFrame:
-        arrs = doc_shingle_arrays(docs, text_col=text_col)
-        words = arrs.select("doc_id", F.explode("sh").alias("word"))
-        sigs = minhash_signatures(words)
-        n = len([c for c in sigs.columns if c.startswith("mh")])
-        sig_arr = F.array(*[F.col(f"mh{i}") for i in range(n)])
-        return lsh_bands(sigs.withColumn("sig", sig_arr)).select(
-            F.col("doc_id").alias(f"{side}_doc_id"),
-            F.col("sig").alias(f"sig_{side}"),
-            "band_idx",
-            "band_hash",
-        )
-
-    b_new = banded(new_docs, "new")
-    b_cor = banded(corpus_docs, "corpus")
-    matches = F.aggregate(
-        F.zip_with("sig_new", "sig_corpus", lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    screened = (
-        b_new.join(b_cor, ["band_idx", "band_hash"])
-        .filter(matches >= F.lit(min_sig_matches))
-        .select("new_doc_id", "corpus_doc_id")
-        .distinct()
-    )
-    ne = doc_shingle_arrays(new_docs, text_col=text_col).select(
-        F.col("doc_id").alias("new_doc_id"),
-        F.col("sh").alias("sh_new"),
-        F.col("sz").alias("n_new"),
-    )
-    co = doc_shingle_arrays(corpus_docs, text_col=text_col).select(
-        F.col("doc_id").alias("corpus_doc_id"),
-        F.col("sh").alias("sh_corpus"),
-        F.col("sz").alias("n_corpus"),
-    )
-    common = F.size(F.array_intersect("sh_new", "sh_corpus"))
-    return (
-        screened.join(ne, "new_doc_id")
-        .join(co, "corpus_doc_id")
-        .withColumn("common", common)
-        .withColumn(
-            "jaccard",
-            det_round(
-                F.col("common")
-                / (F.col("n_new") + F.col("n_corpus") - F.col("common")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_doc_id", "corpus_doc_id", "jaccard")
+    three-stage narrowing as :func:`minhash_lsh_pairs`. The corpus side
+    is :func:`build_lsh_index` built in the same plan, then
+    :func:`minhash_lsh_pairs_against_index`."""
+    return minhash_lsh_pairs_against_index(
+        new_docs,
+        build_lsh_index(corpus_docs, text_col),
+        threshold,
+        text_col,
+        min_sig_matches,
     )
 
 
@@ -1136,6 +1097,31 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return s.select("doc_id", sim.cast("bigint").alias("simhash"))
 
 
+def _hamming_blocks(
+    sig_col: str, max_hamming: int, n_tables: int, total_bits: int
+) -> Column:
+    """The block-explode generator of the rotated-block Hamming join: one
+    (block_idx, block_val) row per ``total_bits // n_tables``-bit block
+    of ``sig_col``."""
+    # pigeonhole completeness: <= max_hamming differing bits can touch at
+    # most max_hamming blocks, leaving one exact-match block only if
+    # max_hamming < n_tables
+    assert max_hamming < n_tables, "need max_hamming < n_tables"
+    assert total_bits % n_tables == 0, "n_tables must divide total_bits"
+    width = total_bits // n_tables
+    mask = (1 << width) - 1
+    entries = [
+        F.struct(
+            F.lit(b).alias("block_idx"),
+            F.shiftright(F.col(sig_col), b * width)
+            .bitwiseAND(F.lit(mask))
+            .alias("block_val"),
+        )
+        for b in range(n_tables)
+    ]
+    return F.inline(F.array(*entries))
+
+
 def hamming_block_pairs(
     sigs: DataFrame,
     sig_col: str = "simhash",
@@ -1155,26 +1141,10 @@ def hamming_block_pairs(
     corpus scale (2^(bits/tables) buckets per table). Built as one
     inline-explode + alias self-join (ReusedExchange for the other side);
     bit_count(xor) verifies in-row. Never an all-pairs distance matrix."""
-    # pigeonhole completeness: <= max_hamming differing bits can touch at
-    # most max_hamming blocks, leaving one exact-match block only if
-    # max_hamming < n_tables
-    assert max_hamming < n_tables, "need max_hamming < n_tables"
-    assert total_bits % n_tables == 0, "n_tables must divide total_bits"
-    width = total_bits // n_tables
-    mask = (1 << width) - 1
-    entries = [
-        F.struct(
-            F.lit(b).alias("block_idx"),
-            F.shiftright(F.col(sig_col), b * width)
-            .bitwiseAND(F.lit(mask))
-            .alias("block_val"),
-        )
-        for b in range(n_tables)
-    ]
     blocked = sigs.select(
         F.col(id_col).alias("doc_id"),
         F.col(sig_col).alias("__sig"),
-        F.inline(F.array(*entries)),
+        _hamming_blocks(sig_col, max_hamming, n_tables, total_bits),
     )
     b1, b2 = blocked.alias("b1"), blocked.alias("b2")
     ham = F.bit_count(F.col("b1.__sig").bitwiseXOR(F.col("b2.__sig")))
@@ -1212,25 +1182,13 @@ def hamming_block_pairs_against(
     persisted table each batch reuses. Returns
     (new_doc_id, corpus_doc_id, hamming); same pigeonhole-completeness
     guarantee as the self-join form."""
-    assert max_hamming < n_tables, "need max_hamming < n_tables"
-    assert total_bits % n_tables == 0, "n_tables must divide total_bits"
-    width = total_bits // n_tables
-    mask = (1 << width) - 1
-    entries = [
-        F.struct(
-            F.lit(b).alias("block_idx"),
-            F.shiftright(F.col(sig_col), b * width)
-            .bitwiseAND(F.lit(mask))
-            .alias("block_val"),
-        )
-        for b in range(n_tables)
-    ]
+    blocks = _hamming_blocks(sig_col, max_hamming, n_tables, total_bits)
 
     def blocked(sigs: DataFrame, side: str) -> DataFrame:
         return sigs.select(
             F.col(id_col).alias(f"{side}_doc_id"),
             F.col(sig_col).alias(f"__sig_{side}"),
-            F.inline(F.array(*entries)),
+            blocks,
         )
 
     ham = F.bit_count(F.col("__sig_new").bitwiseXOR(F.col("__sig_corpus")))
@@ -2149,14 +2107,7 @@ def build_lsh_index(
     and every nightly batch dedups against the stored index without
     re-shingling the corpus."""
     arrs = doc_shingle_arrays(docs, text_col=text_col)
-    words = arrs.select("doc_id", F.explode("sh").alias("word"))
-    sigs = minhash_signatures(words)
-    n = len([c for c in sigs.columns if c.startswith("mh")])
-    sig_arr = F.array(*[F.col(f"mh{i}") for i in range(n)])
-    banded = lsh_bands(sigs.withColumn("sig", sig_arr)).select(
-        "doc_id", "sig", "band_idx", "band_hash"
-    )
-    return banded, arrs
+    return _lsh_banded(arrs), arrs
 
 
 def save_lsh_index(
@@ -2188,19 +2139,17 @@ def minhash_lsh_pairs_against_index(
     min_sig_matches: int = NUM_MINHASHES // 2,
 ) -> DataFrame:
     """Incremental MinHash+LSH dedup of a NEW batch against a PREBUILT
-    corpus index (``build_lsh_index`` / ``load_lsh_index``): identical
-    three-stage narrowing and identical results to
-    :func:`minhash_lsh_pairs_against`, but the corpus side is read from
-    the stored signatures/shingles instead of being re-derived — the per-
-    batch cost drops to shingling the batch plus the (pruned) band join.
-    Returns (new_doc_id, corpus_doc_id, jaccard)."""
+    corpus index (``build_lsh_index`` / ``load_lsh_index``): the
+    three-stage narrowing of :func:`minhash_lsh_pairs` with a cross-side
+    band join, so its cost scales with |new| × collision rate, not
+    |corpus|². With a loaded index the corpus side is read from the
+    stored signatures/shingles instead of being re-derived — the per-
+    batch cost drops to shingling the batch plus the (pruned) band join;
+    :func:`minhash_lsh_pairs_against` passes an index built in the same
+    plan. Returns (new_doc_id, corpus_doc_id, jaccard)."""
     corpus_banded, corpus_arrs = index
     new_arrs = doc_shingle_arrays(new_docs, text_col=text_col)
-    words = new_arrs.select("doc_id", F.explode("sh").alias("word"))
-    sigs = minhash_signatures(words)
-    n = len([c for c in sigs.columns if c.startswith("mh")])
-    sig_arr = F.array(*[F.col(f"mh{i}") for i in range(n)])
-    b_new = lsh_bands(sigs.withColumn("sig", sig_arr)).select(
+    b_new = _lsh_banded(new_arrs).select(
         F.col("doc_id").alias("new_doc_id"),
         F.col("sig").alias("sig_new"),
         "band_idx",

@@ -1,24 +1,44 @@
 """Similarity search over embedding columns (north-star extensions).
 
-Two tiers:
+Every vector top-k operator is a candidate generator over one
+verify-and-rank core, the split the top-k search literature uses (a
+candidate filter, then one exact verify-and-rank step):
 
-- **Brute-force cosine top-k** — broadcast the (small) query set, score
-  every corpus vector with JVM-side array expressions (zip_with +
-  aggregate: a sequential in-order fold, so results are bit-deterministic),
-  rank per query. At 100 TB the corpus side stays partitioned; cost is one
-  scan per query batch. The correctness baseline.
-- **LSH-bucketed ANN** — sign-bucket blocking (here: signs of the leading
-  dimensions; at scale: random hyperplanes), candidates only within the
-  query's bucket → turns the scan into an equi-join. The scale path; recall
-  is traded for the bucket count.
+- **Query side** (``_queries``): the query vectors (vec_id <
+  n_queries) with their norms, broadcast to the corpus side.
+- **Candidates**: every corpus vector (``cosine_topk``, brute force, the
+  correctness baseline); the query's own sign bucket (``ann_lsh_topk``,
+  an equi-join on the bucket key); or the query's ``nprobe`` nearest IVF
+  cells (``ivf_topk`` with k-means cells, ``ivf_hyperplane_topk`` with
+  fixed sign-bit cells; ``_probe`` picks the cells, an equi-join on the
+  cell id finds the vectors). The ANN generators never scan the corpus
+  per query.
+- **Verify and rank** (``_cosine_rank``): exact cosine from JVM-side
+  array expressions (zip_with + aggregate: a sequential in-order fold,
+  so results are bit-deterministic) at det-round 6, then one
+  ``row_number`` window per query (``_rank``: score desc, neighbor_id).
 
-No Python UDFs: dot products run inside codegen via higher-order functions.
-A Pandas-UDF variant would batch via Arrow, but for 64-dim vectors the
-built-in fold is already JVM-side and avoids the Python roundtrip entirely.
+Product quantization scores candidates from m-byte codes instead
+(``pq_topk``; ``ivf_pq_topk`` prunes to IVF cells first and re-ranks a
+3k shortlist through the same exact core). Both share one query set,
+lookup table and ADC scorer (``_pq_query_set``) and one encoder
+(``_pq_encoder``); the k-means cells of ``ivf_topk``, ``ivf_pq_topk``
+and ``embedding_neardup_pairs_ivf`` come from one nearest-centroid
+closure (``_center_dist``).
+
+A NULL element contributes 0 to every dot product, so a vector with a
+missing component still scores (DuckDB's ``list_sum`` skips NULLs the
+same way), and probe cells at a NULL distance rank last.
+
+Python runs only where built-ins cannot express the step: the driver-side
+quantizer training and the Arrow-batched k-means assignment / PQ encode
+and score maps. For 64-dim vectors the built-in fold is already JVM-side
+and avoids the Python roundtrip entirely.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -28,9 +48,11 @@ from market_flow_spark.functions.aggregates import det_round
 
 
 def _dot(a: Column, b: Column) -> Column:
-    """Σ a_i * b_i in double, sequential in-order fold (deterministic)."""
+    """Σ a_i * b_i in double, sequential in-order fold (deterministic). A
+    product with a NULL factor adds 0 — the DuckDB twins' ``list_sum``
+    skips NULLs the same way."""
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + F.coalesce(x, F.lit(0.0)))
 
 
 def _norm_sq(a: Column) -> Column:
@@ -61,39 +83,77 @@ def _block_pairs(blocked: DataFrame, key: str, threshold: float) -> DataFrame:
     )
 
 
+# --- the top-k core ----------------------------------------------------------
+
+
+def _with_norm(df: DataFrame) -> DataFrame:
+    """``df`` plus each vector's L2 ``norm``, computed once per vector
+    BEFORE any fan-out to queries — the per-pair arithmetic (so the
+    oracles agree), 1/Nth the work."""
+    return df.withColumn("norm", F.sqrt(_norm_sq(F.col("embedding"))))
+
+
+def _queries(data: DataFrame, n_queries: int, *keep: str) -> DataFrame:
+    """(query_id, qe, qnorm, *keep): the query vectors (vec_id <
+    n_queries) of a ``_with_norm`` frame; the filter pushes into the
+    parquet scan."""
+    return data.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qe"),
+        F.col("norm").alias("qnorm"),
+        *keep,
+    )
+
+
+def _probe(queries: DataFrame, cells: DataFrame, d2: Column, nprobe: int) -> DataFrame:
+    """(query_id, qe, qnorm, cell): each query's ``nprobe`` nearest cells
+    by ``d2`` (ties by cell id, NULL distances last) over the tiny
+    broadcast cell table."""
+    wq = Window.partitionBy("query_id").orderBy(d2.asc_nulls_last(), F.col("cell"))
+    return (
+        queries.crossJoin(F.broadcast(cells))
+        .withColumn("cell_rank", F.row_number().over(wq))
+        .filter(F.col("cell_rank") <= nprobe)
+        .select("query_id", "qe", "qnorm", "cell")
+    )
+
+
+def _rank(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """The top ``k`` rows per query_id by (``score`` desc, neighbor_id),
+    with their ``rank`` — the tie-break makes the k-boundary
+    deterministic."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _cosine_rank(cand: DataFrame, k: int, *keep: str) -> DataFrame:
+    """Verify and rank: (query_id, neighbor_id, *keep, cosine, rank) from
+    candidate rows pairing a corpus vector (vec_id, embedding, norm) with
+    a query (query_id, qe, qnorm) — self excluded, exact cosine at
+    det-round 6, the top ``k`` per query."""
+    cos = _dot(F.col("embedding"), F.col("qe")) / (F.col("norm") * F.col("qnorm"))
+    scored = cand.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        *keep,
+        det_round(cos, 6).alias("cosine"),
+    )
+    return _rank(scored, k)
+
+
 def cosine_topk(
     embeddings: DataFrame, n_queries: int = 5, k: int = 5
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (vec_id <
-    n_queries), self excluded. Ties broken by neighbor_id so the k-boundary
+    n_queries), self excluded: every corpus vector is a candidate of
+    every broadcast query. Ties broken by neighbor_id so the k-boundary
     is deterministic."""
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.sqrt(_norm_sq(F.col("embedding"))).alias("qnorm"),
-    )
-    # corpus norms are computed once per vector BEFORE the fan-out to
-    # queries — same arithmetic as per-pair (so the oracle agrees), 1/Nth
-    # the work
-    corpus = embeddings.withColumn(
-        "norm", F.sqrt(_norm_sq(F.col("embedding")))
-    )
-    pairs = corpus.crossJoin(F.broadcast(q)).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cos = _dot(F.col("embedding"), F.col("qe")) / (F.col("norm") * F.col("qnorm"))
-    scored = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        det_round(cos, 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    data = _with_norm(embeddings)
+    return _cosine_rank(data.crossJoin(F.broadcast(_queries(data, n_queries))), k)
 
 
 def sign_bucket(emb: Column, n_bits: int = 8) -> Column:
@@ -112,8 +172,6 @@ def train_kmeans_quantizer(X, n_cells: int, seed: int = 42, max_iter: int = 8):
     sample (the FAISS-style IVF coarse-quantizer build). Pure numpy and
     fully deterministic for a given (X, n_cells, seed, max_iter) — which is
     what lets tests re-derive the exact centroids the operator used."""
-    import numpy as np
-
     rng = np.random.RandomState(seed)
     n_cells = min(n_cells, len(X))
     # k-means++ seeding: spread initial centroids ∝ squared distance,
@@ -141,6 +199,60 @@ def train_kmeans_quantizer(X, n_cells: int, seed: int = 42, max_iter: int = 8):
     return C
 
 
+def _train_sample(embeddings: DataFrame, train_rows: int):
+    """The quantizer training set as a float64 matrix: a deterministic
+    bounded sample, the lowest vec_ids. The predicate pushes into the
+    parquet scan (no global top-k sort job, unlike orderBy+limit); a
+    sparse/offset id space falls back to an actual top-k."""
+    sample = (
+        embeddings.filter(F.col("vec_id") < train_rows).select("embedding").toPandas()
+    )
+    if sample.empty:
+        sample = (
+            embeddings.orderBy("vec_id").limit(train_rows).select("embedding").toPandas()
+        )
+    return np.asarray(sample["embedding"].tolist(), dtype=np.float64)
+
+
+def _given_or(given, train):
+    """A pre-trained quantizer as float64, else ``train()``'s — the
+    build-once/query-many switch every IVF and PQ operator takes."""
+    return np.asarray(given, dtype=np.float64) if given is not None else train()
+
+
+def _unit(X):
+    """Rows scaled to unit L2 norm (zero rows stay zero)."""
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+
+
+def _center_dist(C):
+    """X ↦ ||c||² − 2·x·c for every row x and centroid row c: ||x−c||²
+    less the per-row constant ||x||², so its argmin is the nearest
+    centroid. One closure for the IVF cells, the PQ codes and the probe
+    order, pickled into the Arrow maps."""
+    cnorm2 = (C * C).sum(1)
+
+    def dist(X):
+        return cnorm2 - 2.0 * (X @ C.T)
+
+    return dist
+
+
+def _cell_udf(C):
+    """Arrow-batched k-means cell assignment: (array) -> int nearest
+    centroid of ``C``, one argmin over an n_cells×dim matmul per batch."""
+    from pyspark.sql.functions import pandas_udf
+
+    dist = _center_dist(C)
+
+    @pandas_udf("int")
+    def assign_cell(emb: pd.Series) -> pd.Series:
+        X = np.asarray(emb.tolist(), dtype=np.float64)
+        return pd.Series(dist(X).argmin(1).astype("int32"))
+
+    return assign_cell
+
+
 def train_ivf_centroids(
     embeddings: DataFrame,
     n_cells: int = 16,
@@ -154,21 +266,7 @@ def train_ivf_centroids(
     with ``save_ivf_centroids``, and serve every later query from the
     loaded centroids — ``ivf_topk(..., centroids=...)`` then runs no
     sampling, no training, and no driver-side data pull at query time."""
-    import numpy as np
-
-    # deterministic bounded sample = the lowest vec_ids; the predicate pushes
-    # into the parquet scan (no global top-k sort job, unlike orderBy+limit)
-    sample = (
-        embeddings.filter(F.col("vec_id") < train_rows).select("embedding").toPandas()
-    )
-    if sample.empty:  # sparse/offset id space: fall back to an actual top-k
-        sample = (
-            embeddings.orderBy("vec_id")
-            .limit(train_rows)
-            .select("embedding")
-            .toPandas()
-        )
-    X = np.asarray(sample["embedding"].tolist(), dtype=np.float64)
+    X = _train_sample(embeddings, train_rows)
     return train_kmeans_quantizer(X, n_cells, seed, max_iter)
 
 
@@ -186,8 +284,6 @@ def load_ivf_centroids(spark, path: str):
     """Load centroids saved by ``save_ivf_centroids`` back into the numpy
     matrix ``ivf_topk`` consumes. The table is n_cells rows — collecting it
     is index-metadata I/O, not a data pull."""
-    import numpy as np
-
     rows = spark.read.parquet(path).orderBy("cell").collect()
     return np.asarray([r["centroid"] for r in rows], dtype=np.float64)
 
@@ -226,47 +322,19 @@ def ivf_topk(
     ``load_ivf_centroids``) skips training entirely — the query-many path:
     no sample collection, no k-means, no ``toPandas`` anywhere.
     """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    data = embeddings.withColumn("norm", F.sqrt(_norm_sq(F.col("embedding"))))
-
-    C = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else train_ivf_centroids(embeddings, n_cells, seed, train_rows, max_iter)
+    C = _given_or(
+        centroids,
+        lambda: train_ivf_centroids(embeddings, n_cells, seed, train_rows, max_iter),
     )
-    n_cells = len(C)
-    cnorm2 = (C * C).sum(1)
-
-    @pandas_udf("int")
-    def assign_cell(emb: pd.Series) -> pd.Series:
-        import numpy as _np
-
-        Xb = _np.asarray(emb.tolist(), dtype=_np.float64)
-        # argmin ||x-c||² == argmin ||c||² - 2·x·c  (x² constant per row)
-        return pd.Series((cnorm2 - 2.0 * (Xb @ C.T)).argmin(1).astype("int32"))
-
+    data = _with_norm(embeddings)
     assigned = data.select(
-        "vec_id", "embedding", "norm", assign_cell("embedding").alias("cell")
+        "vec_id", "embedding", "norm", _cell_udf(C)("embedding").alias("cell")
     )
-
     # centroid table: n_cells rows — broadcast everywhere
-    spark = embeddings.sparkSession
-    centroids = spark.createDataFrame(
+    cells = embeddings.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(C)],
         "cell int, centroid array<double>",
     )
-    # queries never use their own cell — derive them from the raw table so
-    # the vec_id filter pushes into the parquet scan instead of forcing a
-    # second full-corpus assignment pass in this plan branch
-    queries = data.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("norm").alias("qnorm"),
-    )
-    # pick nprobe nearest cells per query (distance to centroid, tiny table)
-    qc = queries.crossJoin(F.broadcast(centroids))
     d2 = F.aggregate(
         F.zip_with(
             F.col("qe").cast("array<double>"),
@@ -276,27 +344,11 @@ def ivf_topk(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    wq = Window.partitionBy("query_id").orderBy(d2.asc(), F.col("cell"))
-    probes = (
-        qc.withColumn("cell_rank", F.row_number().over(wq))
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", "qe", "qnorm", "cell")
-    )
-    cand = assigned.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cos = _dot(F.col("embedding"), F.col("qe")) / (F.col("norm") * F.col("qnorm"))
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        det_round(cos, 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    # queries never use their own cell — derive them from the raw table so
+    # the vec_id filter pushes into the parquet scan instead of forcing a
+    # second full-corpus assignment pass in this plan branch
+    probes = _probe(_queries(data, n_queries), cells, d2, nprobe)
+    return _cosine_rank(assigned.join(F.broadcast(probes), "cell"), k)
 
 
 def ivf_hyperplane_topk(
@@ -324,17 +376,12 @@ def ivf_hyperplane_topk(
     Σ q_i² over the bits where c disagrees with sign(q_i) — so probes are
     ordered by how cheaply q could cross into each cell.
     """
-    spark = embeddings.sparkSession
-    data = embeddings.withColumn(
-        "norm", F.sqrt(_norm_sq(F.col("embedding")))
-    ).withColumn("cell", sign_bucket(F.col("embedding"), n_bits))
-    queries = data.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("norm").alias("qnorm"),
+    data = _with_norm(embeddings).withColumn(
+        "cell", sign_bucket(F.col("embedding"), n_bits)
     )
-    cells = spark.range(2**n_bits).select(F.col("id").cast("int").alias("cell"))
-    qc = queries.crossJoin(F.broadcast(cells))
+    cells = embeddings.sparkSession.range(2**n_bits).select(
+        F.col("id").cast("int").alias("cell")
+    )
     d2 = None
     for i in range(n_bits):
         qi = F.col("qe").getItem(i).cast("double")
@@ -342,28 +389,8 @@ def ivf_hyperplane_topk(
         q_bit = F.when(qi > 0, F.lit(1)).otherwise(F.lit(0))
         term = F.when(cell_bit != q_bit, qi * qi).otherwise(F.lit(0.0))
         d2 = term if d2 is None else d2 + term
-    wq = Window.partitionBy("query_id").orderBy(d2.asc(), F.col("cell"))
-    probes = (
-        qc.withColumn("cell_rank", F.row_number().over(wq))
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", "qe", "qnorm", "cell")
-    )
-    cand = data.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cos = _dot(F.col("embedding"), F.col("qe")) / (F.col("norm") * F.col("qnorm"))
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cell"),
-        det_round(cos, 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    probes = _probe(_queries(data, n_queries), cells, d2, nprobe)
+    return _cosine_rank(data.join(F.broadcast(probes), "cell"), k, "cell")
 
 
 def ann_lsh_topk(
@@ -371,31 +398,11 @@ def ann_lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: candidates limited to the query's sign-bucket —
     an equi-join on the bucket key instead of a full scan per query."""
-    with_bucket = embeddings.withColumn(
-        "bucket", sign_bucket(F.col("embedding"), n_bits)
-    ).withColumn("norm", F.sqrt(_norm_sq(F.col("embedding"))))
-    q = with_bucket.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("norm").alias("qnorm"),
-        "bucket",
+    data = _with_norm(
+        embeddings.withColumn("bucket", sign_bucket(F.col("embedding"), n_bits))
     )
-    cand = with_bucket.join(F.broadcast(q), "bucket").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cos = _dot(F.col("embedding"), F.col("qe")) / (F.col("norm") * F.col("qnorm"))
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        "bucket",
-        det_round(cos, 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    q = _queries(data, n_queries, "bucket")
+    return _cosine_rank(data.join(F.broadcast(q), "bucket"), k, "bucket")
 
 
 # --- product quantization (PQ) ---------------------------------------------
@@ -416,17 +423,7 @@ def train_pq_codebooks(
     (m, n_codes, dim/m) numpy tensor. Vectors compress from dim×4 bytes
     to m bytes (dim=64, m=8, k=16 → 32×), which is what lets a 100 TB
     embedding corpus's search structure fit a cluster's memory."""
-    import numpy as np
-
-    sample = (
-        embeddings.filter(F.col("vec_id") < train_rows).select("embedding").toPandas()
-    )
-    if sample.empty:
-        sample = (
-            embeddings.orderBy("vec_id").limit(train_rows).select("embedding").toPandas()
-        )
-    X = np.asarray(sample["embedding"].tolist(), dtype=np.float64)
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _unit(_train_sample(embeddings, train_rows))
     d = X.shape[1]
     assert d % m == 0, f"dim {d} not divisible by m={m}"
     sub = d // m
@@ -437,31 +434,82 @@ def train_pq_codebooks(
     return np.stack(books)
 
 
+def _pq_encoder(B):
+    """X ↦ (n, m) int32 PQ codes: per subspace, the nearest codeword of
+    the L2-normalized row."""
+    sub = B.shape[2]
+    dists = [_center_dist(b) for b in B]
+
+    def encode(X):
+        Xn = _unit(X)
+        codes = [d(Xn[:, j * sub : (j + 1) * sub]).argmin(1) for j, d in enumerate(dists)]
+        return np.stack(codes, axis=1).astype(np.int32)
+
+    return encode
+
+
 def pq_encode(embeddings: DataFrame, codebooks) -> DataFrame:
     """(vec_id, code): the m-byte PQ code per vector — argmin centroid per
     subspace over the L2-normalized vector, one Arrow-batched vectorized
     map over the corpus (broadcast codebooks, no shuffle)."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    B = np.asarray(codebooks, dtype=np.float64)  # (m, k, sub)
-    m, _, sub = B.shape
+    to_codes = _pq_encoder(np.asarray(codebooks, dtype=np.float64))
 
     @pandas_udf("array<int>")
     def encode(emb: pd.Series) -> pd.Series:
-        import numpy as _np
-
-        X = _np.asarray(emb.tolist(), dtype=_np.float64)
-        X = X / _np.maximum(_np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        codes = _np.empty((len(X), m), dtype=_np.int32)
-        for j in range(m):
-            Xj = X[:, j * sub : (j + 1) * sub]
-            # argmin ||x-c||² == argmin ||c||² - 2 x·c
-            d2 = (B[j] ** 2).sum(1)[None, :] - 2.0 * (Xj @ B[j].T)
-            codes[:, j] = d2.argmin(1)
-        return pd.Series(list(codes))
+        return pd.Series(list(to_codes(np.asarray(emb.tolist(), dtype=np.float64))))
 
     return embeddings.select("vec_id", encode("embedding").alias("code"))
+
+
+def _pq_query_set(embeddings: DataFrame, n_queries: int, B):
+    """The bounded PQ query set (vec_id < n_queries, collected to the
+    driver like the quantizer sample) as ``(qids, Q, Qn, adc_frame)``:
+    the ids, the raw and L2-normalized query matrices, and the ADC
+    scorer. ``adc_frame(pdf, qi)`` scores a (vec_id, code) batch against
+    the query rows ``qi`` — one per row, or a column of query rows
+    against every row — as a (query_id, neighbor_id, score) frame:
+    score = Σ_j LUT[q, j, code_j] at det-round 6, LUT[q, j, c] =
+    <Qn[q] subvector j, codebook j centroid c>. None when no query id
+    exists (sparse/offset id space)."""
+    rows = (
+        embeddings.filter(F.col("vec_id") < n_queries)
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    if not rows:
+        return None
+    Q = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    Qn = _unit(Q)
+    qids = np.asarray([r["vec_id"] for r in rows], dtype=np.int64)
+    m, _, sub = B.shape
+    lut = np.stack([Qn[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m)], axis=1)
+
+    def adc_frame(pdf, qi):
+        codes = np.asarray(pdf["code"].tolist(), dtype=np.int64)
+        s = 0.0
+        for j in range(m):
+            s += lut[qi, j, codes[:, j]]
+        return pd.DataFrame(
+            {
+                "query_id": np.broadcast_to(qids[qi], s.shape).ravel(),
+                "neighbor_id": np.broadcast_to(pdf["vec_id"].to_numpy(), s.shape).ravel(),
+                "score": np.round(s, 6).ravel(),
+            }
+        )
+
+    return qids, Q, Qn, adc_frame
+
+
+def _empty_topk(spark, score: str) -> DataFrame:
+    """The top-k schema with no rows: a PQ search without queries."""
+    return spark.createDataFrame(
+        [], f"query_id long, neighbor_id long, {score} double, rank int"
+    )
+
+
+_ADC_SCHEMA = "query_id long, neighbor_id long, score double"
 
 
 def pq_topk(
@@ -487,71 +535,27 @@ def pq_topk(
     sample). ``codebooks`` accepts a pre-trained tensor (the
     build-once/query-many path, pairing with
     save/load via plain numpy files or a parquet table)."""
-    import numpy as np
-
-    B = (
-        np.asarray(codebooks, dtype=np.float64)
-        if codebooks is not None
-        else train_pq_codebooks(embeddings, m, n_codes, seed, train_rows)
+    B = _given_or(
+        codebooks,
+        lambda: train_pq_codebooks(embeddings, m, n_codes, seed, train_rows),
     )
-    m = B.shape[0]
-    sub = B.shape[2]
-
-    qrows = (
-        embeddings.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    spark = embeddings.sparkSession
-    if not qrows:  # sparse/offset id space: no queries -> empty result
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, score double, rank int"
-        )
-    Q = np.asarray([r["embedding"] for r in qrows], dtype=np.float64)
-    Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    qids = np.asarray([r["vec_id"] for r in qrows], dtype=np.int64)
-    # LUT[q, j, c] = <Q[q] subvector j, codebook j centroid c>
-    lut = np.stack(
-        [Q[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m)], axis=1
-    )
-
-    codes = pq_encode(embeddings, B)
+    qs = _pq_query_set(embeddings, n_queries, B)
+    if qs is None:
+        return _empty_topk(embeddings.sparkSession, "score")
+    qids, _, _, adc_frame = qs
+    every_query = np.arange(len(qids))[:, None]  # query-major output
 
     def score_batches(batches):
-        import numpy as _np
-
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = _np.asarray(pdf["code"].tolist(), dtype=_np.int64)  # (n, m)
-            out = []
-            for qi, qid in enumerate(qids):
-                # gather: sum over subspaces of LUT[qi, j, C[:, j]]
-                s = _np.zeros(len(C))
-                for j in range(m):
-                    s += lut[qi, j, C[:, j]]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": _np.full(len(C), qid),
-                            "neighbor_id": pdf["vec_id"].to_numpy(),
-                            "score": _np.round(s, 6),
-                        }
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "score": []}
-            )
+            if len(pdf):
+                yield adc_frame(pdf, every_query)
 
-    scored = codes.mapInPandas(
-        score_batches, "query_id long, neighbor_id long, score double"
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
+    scored = (
+        pq_encode(embeddings, B)
+        .mapInPandas(score_batches, _ADC_SCHEMA)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank(scored, k, "score")
 
 
 def ivf_pq_topk(
@@ -580,60 +584,34 @@ def ivf_pq_topk(
     (vec_id, cell, code) — m bytes + 4 per vector — and the refine join
     touches full vectors for ~3k rows per query. Both quantizers accept
     pre-trained artifacts (build-once/query-many)."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    C = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else train_ivf_centroids(embeddings, n_cells, seed, train_rows)
+    C = _given_or(
+        centroids, lambda: train_ivf_centroids(embeddings, n_cells, seed, train_rows)
     )
-    B = (
-        np.asarray(codebooks, dtype=np.float64)
-        if codebooks is not None
-        else train_pq_codebooks(embeddings, m, n_codes, seed, train_rows)
+    B = _given_or(
+        codebooks,
+        lambda: train_pq_codebooks(embeddings, m, n_codes, seed, train_rows),
     )
-    n_cells = len(C)
-    m, _, sub = B.shape
-    cnorm2 = (C * C).sum(1)
+    dist, encode = _center_dist(C), _pq_encoder(B)
 
     @pandas_udf("struct<cell:int, code:array<int>>")
     def assign_and_encode(emb: pd.Series) -> pd.DataFrame:
-        import numpy as _np
-
-        X = _np.asarray(emb.tolist(), dtype=_np.float64)
-        cell = (cnorm2 - 2.0 * (X @ C.T)).argmin(1).astype("int32")
-        Xn = X / _np.maximum(_np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        codes = _np.empty((len(X), m), dtype=_np.int32)
-        for j in range(m):
-            d2 = (B[j] ** 2).sum(1)[None, :] - 2.0 * (Xn[:, j * sub:(j + 1) * sub] @ B[j].T)
-            codes[:, j] = d2.argmin(1)
-        return pd.DataFrame({"cell": cell, "code": list(codes)})
+        X = np.asarray(emb.tolist(), dtype=np.float64)
+        cell = dist(X).argmin(1).astype("int32")
+        return pd.DataFrame({"cell": cell, "code": list(encode(X))})
 
     index = embeddings.select(
         "vec_id", assign_and_encode("embedding").alias("ac")
     ).select("vec_id", F.col("ac.cell").alias("cell"), F.col("ac.code").alias("code"))
 
-    qrows = (
-        embeddings.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    if not qrows:  # sparse/offset id space: no queries -> empty result
-        return embeddings.sparkSession.createDataFrame(
-            [],
-            "query_id long, neighbor_id long, "
-            + ("cosine double, rank int" if refine else "score double, rank int"),
-        )
-    Q = np.asarray([r["embedding"] for r in qrows], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    qids = np.asarray([r["vec_id"] for r in qrows], dtype=np.int64)
-    # nprobe nearest cells per query (tiny, driver-side numpy)
-    qcell_d2 = cnorm2[None, :] - 2.0 * (Q @ C.T)
-    probe_cells = np.argsort(qcell_d2, axis=1, kind="stable")[:, :nprobe]
-    lut = np.stack([Qn[:, j * sub:(j + 1) * sub] @ B[j].T for j in range(m)], axis=1)
-
     spark = embeddings.sparkSession
+    qs = _pq_query_set(embeddings, n_queries, B)
+    if qs is None:
+        return _empty_topk(spark, "cosine" if refine else "score")
+    qids, Q, Qn, adc_frame = qs
+    # nprobe nearest cells per query (tiny, driver-side numpy)
+    probe_cells = np.argsort(dist(Q), axis=1, kind="stable")[:, :nprobe]
     probes = spark.createDataFrame(
         [
             (int(qids[qi]), int(c))
@@ -645,64 +623,31 @@ def ivf_pq_topk(
     cand = index.join(F.broadcast(probes), "cell").filter(
         F.col("vec_id") != F.col("query_id")
     )
-
     qpos = {int(q): i for i, q in enumerate(qids)}
 
     def adc(batches):
-        import numpy as _np
-
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Cd = _np.asarray(pdf["code"].tolist(), dtype=_np.int64)
-            qi = pdf["query_id"].map(qpos).to_numpy()
-            s = _np.zeros(len(Cd))
-            for j in range(m):
-                s += lut[qi, j, Cd[:, j]]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(),
-                    "neighbor_id": pdf["vec_id"].to_numpy(),
-                    "score": _np.round(s, 6),
-                }
-            )
+            if len(pdf):
+                yield adc_frame(pdf, pdf["query_id"].map(qpos).to_numpy())
 
     scored = cand.select("query_id", "vec_id", "code").mapInPandas(
-        adc, "query_id long, neighbor_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
+        adc, _ADC_SCHEMA
     )
     if not refine:
-        return scored.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
-        )
-    shortlist = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= 3 * k
-    ).drop("rank", "score")
-    # exact re-rank of the bounded shortlist: join back to raw vectors once
+        return _rank(scored, k, "score")
+    shortlist = _rank(scored, 3 * k, "score").select(
+        "query_id", F.col("neighbor_id").alias("vec_id")
+    )
+    # exact re-rank of the bounded shortlist: join back to raw vectors
+    # once; qe is pre-normalized, so its qnorm is exactly 1
     qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in Qn[i]]) for i, q in enumerate(qids)],
-        "query_id long, qe array<double>",
+        [(int(q), [float(x) for x in Qn[i]], 1.0) for i, q in enumerate(qids)],
+        "query_id long, qe array<double>, qnorm double",
     )
-    full = (
-        shortlist.join(
-            embeddings.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
-            "neighbor_id",
-        )
-        .join(F.broadcast(qdf), "query_id")
-    )
-    nrm = F.sqrt(_norm_sq(F.col("embedding")))
-    cos = _dot(F.col("embedding"), F.col("qe")) / nrm  # qe pre-normalized
-    exact = full.select(
-        "query_id", "neighbor_id", det_round(cos, 6).alias("cosine")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return exact.withColumn("rank", F.row_number().over(w2)).filter(
-        F.col("rank") <= k
-    )
+    full = shortlist.join(
+        _with_norm(embeddings.select("vec_id", "embedding")), "vec_id"
+    ).join(F.broadcast(qdf), "query_id")
+    return _cosine_rank(full, k)
 
 
 def save_pq_codebooks(spark, codebooks, path: str) -> None:
@@ -722,8 +667,6 @@ def save_pq_codebooks(spark, codebooks, path: str) -> None:
 def load_pq_codebooks(spark, path: str):
     """Load codebooks saved by ``save_pq_codebooks`` back into the
     (m, n_codes, sub_dim) numpy tensor the PQ operators consume."""
-    import numpy as np
-
     rows = spark.read.parquet(path).orderBy("subspace", "code").collect()
     m = rows[-1]["subspace"] + 1
     k = rows[-1]["code"] + 1
@@ -1135,34 +1078,21 @@ def embedding_neardup_pairs_ivf(
     ``ivf_topk``); cell assignment is ONE Arrow-batched map over the
     corpus, then the same alias self-join on the cell id as the sign
     tier. No cross join, no driver-side pair loop."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    C = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else train_ivf_centroids(
+    C = _given_or(
+        centroids,
+        lambda: train_ivf_centroids(
             embeddings.select(
                 F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding")
             ),
             n_cells,
             seed,
             train_rows,
-        )
+        ),
     )
-    cnorm2 = (C * C).sum(1)
-
-    @pandas_udf("int")
-    def assign_cell(emb: pd.Series) -> pd.Series:
-        import numpy as _np
-
-        Xb = _np.asarray(emb.tolist(), dtype=_np.float64)
-        return pd.Series((cnorm2 - 2.0 * (Xb @ C.T)).argmin(1).astype("int32"))
-
     assigned = embeddings.select(
         F.col(id_col).alias("vid"),
         F.col(emb_col).alias("emb"),
-        assign_cell(emb_col).alias("cell"),
+        _cell_udf(C)(emb_col).alias("cell"),
     )
     return _block_pairs(assigned, "cell", threshold)
 

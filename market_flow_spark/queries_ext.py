@@ -662,20 +662,22 @@ def _cos_terms_sql(a: str, b: str) -> str:
     )
 
 
-def _cosine_topk_oracle(n_queries: int = 5, k: int = 5) -> str:
-    return f"""
-WITH q AS (
-  SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-  WHERE vec_id < {n_queries}
-),
-p AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         {_cos_terms_sql("e.embedding", "q.qe")}
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id <> q.query_id
+def _topk_rank_sql(q: str, src: str, k: int, keep: str = "") -> str:
+    """The ``p`` → ``c`` → ``r`` CTE tail and final select of the
+    exact-cosine top-k twins: score every candidate row of ``src``
+    (corpus alias ``e``, query alias ``q``, self excluded), round the
+    cosine, keep the top ``k`` per query by (cosine desc, neighbor_id).
+    ``keep`` names one corpus column carried to the output."""
+    e_keep = f", e.{keep}" if keep else ""
+    c_keep = f", {keep}" if keep else ""
+    return f"""p AS (
+  SELECT {q}.query_id, e.vec_id AS neighbor_id{e_keep},
+         {_cos_terms_sql("e.embedding", f"{q}.qe")}
+  FROM {src}
+  WHERE e.vec_id <> {q}.query_id
 ),
 c AS (
-  SELECT query_id, neighbor_id,
+  SELECT query_id, neighbor_id{c_keep},
          {_ROUNDED_COS_SQL} AS cosine
   FROM p
 ),
@@ -684,8 +686,17 @@ r AS (
     PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS INT) AS rank
   FROM c
 )
-SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= {k}
+SELECT query_id, neighbor_id{c_keep}, cosine, rank FROM r WHERE rank <= {k}
 """
+
+
+def _cosine_topk_oracle(n_queries: int = 5, k: int = 5) -> str:
+    return f"""
+WITH q AS (
+  SELECT vec_id AS query_id, embedding AS qe FROM embeddings
+  WHERE vec_id < {n_queries}
+),
+{_topk_rank_sql("q", "embeddings e CROSS JOIN q", k)}"""
 
 
 @register("cosine_topk", _cosine_topk_oracle())
@@ -708,24 +719,7 @@ q AS (
   SELECT vec_id AS query_id, embedding AS qe, bucket FROM wb
   WHERE vec_id < {n_queries}
 ),
-p AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id, e.bucket,
-         {_cos_terms_sql("e.embedding", "q.qe")}
-  FROM wb e JOIN q USING (bucket)
-  WHERE e.vec_id <> q.query_id
-),
-c AS (
-  SELECT query_id, neighbor_id, bucket,
-         {_ROUNDED_COS_SQL} AS cosine
-  FROM p
-),
-r AS (
-  SELECT *, CAST(row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS INT) AS rank
-  FROM c
-)
-SELECT query_id, neighbor_id, bucket, cosine, rank FROM r WHERE rank <= {k}
-"""
+{_topk_rank_sql("q", "wb e JOIN q USING (bucket)", k, "bucket")}"""
 
 
 @register("ann_lsh_topk", _ann_lsh_oracle())
@@ -768,35 +762,20 @@ probes AS (
     FROM qc
   ) WHERE cell_rank <= {nprobe}
 ),
-p AS (
-  SELECT pr.query_id, e.vec_id AS neighbor_id, e.cell,
-         {_cos_terms_sql("e.embedding", "pr.qe")}
-  FROM d e JOIN probes pr USING (cell)
-  WHERE e.vec_id <> pr.query_id
-),
-c AS (
-  SELECT query_id, neighbor_id, cell,
-         {_ROUNDED_COS_SQL} AS cosine
-  FROM p
-),
-r AS (
-  SELECT *, CAST(row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS INT) AS rank
-  FROM c
-)
-SELECT query_id, neighbor_id, cell, cosine, rank FROM r WHERE rank <= {k}
-"""
+{_topk_rank_sql("pr", "d e JOIN probes pr USING (cell)", k, "cell")}"""
 
 
 @register("ivf_topk", _ivf_hyperplane_oracle())
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver entry for the IVF family: the deterministic hyperplane
-    quantizer variant — identical plan skeleton to the k-means IVF
-    (assign cells → probe nprobe nearest → equi-join on cell) with every
-    step SQL-expressible, so the whole operator is oracle-checked. The
-    k-means-quantizer IVF (`similarity.ivf_topk`) remains the library op;
-    tests/test_similarity_ivf.py pins its exactness within probed cells
-    and recall vs brute force at two scale factors."""
+    quantizer variant. Both IVF operators are candidate generators over
+    the one top-k core (assign cells → probe the nprobe nearest, NULL
+    distances last → equi-join on cell → exact cosine → rank); only the
+    quantizer differs, and the hyperplane one is SQL-expressible, so the
+    whole operator is oracle-checked. The k-means-quantizer IVF
+    (`similarity.ivf_topk`) remains the library op;
+    tests/test_similarity_ivf.py pins it bit-exact against a Python
+    reference and its recall vs brute force at two scale factors."""
     return similarity.ivf_hyperplane_topk(
         load_tables(spark, sf_dir)["embeddings"], n_queries=5, k=5
     )

@@ -18,6 +18,73 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
     assert_matches_oracle(df, duck, ORACLES[name])
 
 
+# Query 0 has a NULL element. DuckDB's list_sum skips NULL, so every
+# exact-cosine twin scores it as if the element were 0, and its NULL
+# probe distances sort last.
+_PLANTED_NULL = [
+    (0, [None, 1.0, 1.0, 1.0, 0.5]),
+    (1, [1.0, 1.0, 1.0, 1.0, 0.5]),
+    (2, [-1.0, 1.0, 1.0, 1.0, 0.4]),
+    (3, [-1.0, -1.0, 1.0, 1.0, 0.3]),
+    (4, [1.0, -1.0, -1.0, 1.0, 0.2]),
+    (5, [-1.0, 1.0, 1.0, 1.0, 0.9]),
+]
+
+
+def _null_element_cases():
+    from market_flow_spark.extensions import similarity as S
+    from market_flow_spark.queries_ext import (
+        _cosine_topk_oracle,
+        _ivf_hyperplane_oracle,
+        _near_dup_oracle,
+    )
+
+    return {
+        "cosine_topk": (
+            lambda e: S.cosine_topk(e, n_queries=1, k=3),
+            _cosine_topk_oracle(n_queries=1, k=3),
+        ),
+        "ivf_hyperplane_topk": (
+            lambda e: S.ivf_hyperplane_topk(e, n_queries=1, k=5, n_bits=4, nprobe=1),
+            _ivf_hyperplane_oracle(n_queries=1, k=5, n_bits=4, nprobe=1),
+        ),
+        "embedding_neardup_pairs": (
+            lambda e: S.embedding_neardup_pairs(e, threshold=0.25, band_bits=4),
+            _near_dup_oracle(n_bits=4, threshold=0.25),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "op", ["cosine_topk", "ivf_hyperplane_topk", "embedding_neardup_pairs"]
+)
+def test_similarity_twin_on_planted_null_element(op, spark):
+    """A NULL embedding element adds 0 to every dot product on both
+    engines: cosine_topk ranks neighbors 1, 5, 2 with non-NULL cosines,
+    ivf_hyperplane_topk probes the query's own cell 14 first (not a cell
+    at a NULL distance) and finds 5 and 2 there, and the near-dup pairs
+    of vector 0 survive the threshold."""
+    import duckdb
+
+    run, sql = _null_element_cases()[op]
+    emb = spark.createDataFrame(_PLANTED_NULL, "vec_id long, embedding array<float>")
+    values = ", ".join(
+        f"(CAST({i} AS BIGINT), "
+        f"[{', '.join('NULL' if x is None else repr(x) for x in v)}]::FLOAT[])"
+        for i, v in _PLANTED_NULL
+    )
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW embeddings AS SELECT * FROM (VALUES {values}) "
+            "t(vec_id, embedding)"
+        )
+        assert con.sql(sql).fetchall()  # the twin result is not empty
+        assert_matches_oracle(run(emb), con, sql)
+    finally:
+        con.close()
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 
