@@ -34,12 +34,11 @@ def _register_udf_modules_by_value() -> None:
         import market_flow_spark.extensions.multimodal as _mm
         import market_flow_spark.extensions.similarity as _sim
         import market_flow_spark.operators.forecast as _fc
-        import market_flow_spark.operators.graph as _gr
         import market_flow_spark.sources.api_source as _api
         import market_flow_spark.streaming.stateful as _st
         import market_flow_spark.streaming.tws as _tws
 
-        for mod in (_fc, _gr, _mm, _sim, _api, _st, _tws):
+        for mod in (_fc, _mm, _sim, _api, _st, _tws):
             cloudpickle.register_pickle_by_value(mod)
     except Exception:
         pass  # older pickler without the API; --py-files still works

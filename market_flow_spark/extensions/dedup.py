@@ -22,10 +22,19 @@ All tiers are pure DataFrame ops — explode/groupBy/join — no UDFs.
 
 from __future__ import annotations
 
+from typing import NoReturn
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
+from market_flow_spark.decisions import decision_log
 from market_flow_spark.functions.aggregates import det_round
+from market_flow_spark.operators.graph import collect_small_graph
 from market_flow_spark.sources.layout import spread_to_cores as _spread
 
 NUM_MINHASHES = 16
@@ -458,6 +467,10 @@ WORD_JACCARD_MAX_EMISSION = 1e10
 # (fingerprint) tier upstream, per the minhash_lsh_pairs contract.
 WORD_JACCARD_LSH_BAND_CAP = 64
 
+# A sampled top-token share above this marks a stop-word corpus, which
+# the freq_ordered prefix filter keeps out of the inverted index.
+WORD_JACCARD_STOPWORD_SHARE = 0.02
+
 
 def choose_word_jaccard_strategy(
     docs: DataFrame,
@@ -533,7 +546,12 @@ def choose_word_jaccard_strategy(
     transform); else, when the ``limit(sample_docs)`` pull returns fewer
     rows than requested, the sample IS the corpus and its own row count
     is exact; only otherwise does the chooser run ``docs.count()`` — one
-    full-input action, the price of routing on an unknown-size input."""
+    full-input action, the price of routing on an unknown-size input.
+
+    Every call logs one ``decisions.decision_log`` record: the sampled
+    doc count, vocabulary and top-token share (plus the corpus rows and
+    the emission estimate when routing ran), the two thresholds and the
+    pick."""
     # the bounded sampled index is persisted so the two stat grains (per-
     # word dfs, distinct doc count) share one shingle build instead of
     # re-tokenizing the sample per action; docs with empty token sets are
@@ -559,6 +577,20 @@ def choose_word_jaccard_strategy(
         )
         vocab = row["vocab"] or 0
         top_share = (row["max_df"] or 0) / max(row["total"] or 0, 1)
+        stats = {"sample_docs": n_docs, "vocab": vocab, "top_share": top_share}
+
+        def decide(pick: str, **more) -> str:
+            decision_log(
+                "dedup.choose_word_jaccard_strategy",
+                {**stats, **more},
+                {
+                    "top_share": WORD_JACCARD_STOPWORD_SHARE,
+                    "max_emission": max_emission,
+                },
+                pick,
+            )
+            return pick
+
         if vocab < 0.5 * n_docs:
             # saturated token universe → output is dense. If the sampled
             # vocabulary also fits one machine word, the bitset path skips
@@ -567,15 +599,19 @@ def choose_word_jaccard_strategy(
             # the sample under-counted); otherwise count_common's emission
             # tracks the dense output and is the optimal shape.
             if vocab <= 64:
-                return "bitmask"
+                return decide("bitmask")
             pick = "count_common"
         else:
             # >2% of all sampled token occurrences in ONE token =
             # shared-vocabulary corpus; posting-list join emission would be
             # quadratic vs sparse output.
-            pick = "count_common" if top_share <= 0.02 else "freq_ordered"
+            pick = (
+                "count_common"
+                if top_share <= WORD_JACCARD_STOPWORD_SHARE
+                else "freq_ordered"
+            )
         if max_emission is None:
-            return pick
+            return decide(pick)
         # route off the exact tier when the PICKED shape's estimated
         # emission exceeds the cap. n_full counts all docs (empty-text docs
         # included) while n_docs counts tokenized sample docs — the scale
@@ -612,7 +648,11 @@ def choose_word_jaccard_strategy(
                 F.slice("sh", F.lit(1), pref_len).alias("sh")
             )
             est = estimate_index_emission(pref, n_full, n_docs)
-        return pick if est <= max_emission else "lsh_prefilter"
+        return decide(
+            pick if est <= max_emission else "lsh_prefilter",
+            rows=n_full,
+            emission=est,
+        )
     finally:
         sample.unpersist()
         raw_sample.unpersist()
@@ -1388,13 +1428,22 @@ def choose_exact_substring_route(
     under one function: the two routes return DIFFERENT shapes (exact
     char spans vs containment scores), so the chooser only advises and
     callers pick the operator — which is why there is no *_routed query:
-    an auto-switch that changes the output schema would be a lie."""
+    an auto-switch that changes the output schema would be a lie. A call
+    that samples logs the estimate, the cap and the route through
+    ``decisions.decision_log``."""
     if max_window_rows is None:
         return "exact"
     est = estimate_exact_substring_window_rows(
         docs, text_col, sample_docs, n_full
     )
-    return "exact" if est <= max_window_rows else "winnow_containment"
+    route = "exact" if est <= max_window_rows else "winnow_containment"
+    decision_log(
+        "dedup.choose_exact_substring_route",
+        {"window_rows": est},
+        max_window_rows,
+        route,
+    )
+    return route
 
 
 def exact_substring_spans(
@@ -1854,37 +1903,72 @@ def dedup_clusters(
     Min-label propagation (the MapReduce connected-components shape,
     cf. Kiveris et al., "Connected Components in MapReduce and Beyond"):
     each round every node adopts the minimum label in its closed
-    neighborhood — one groupBy-min over the (undirected) edge list per
-    round. Rounds needed = graph diameter, and near-dup clusters are
-    clique-ish (diameter 1-2), so convergence is 2-3 rounds in practice;
-    a driver-side convergence check (one count per round — this is an
-    iterative algorithm, the one place an action per step is the design)
-    stops early, ``max_iter`` bounds the worst case. Each round is one
-    shuffle on doc_id over the EDGE list — never all-pairs, never a
-    collect of the graph.
+    neighborhood. Rounds needed = graph diameter, and near-dup clusters
+    are clique-ish (diameter 1-2), so convergence is 2-3 rounds in
+    practice; a round that changes no label stops the loop, and
+    ``max_iter`` bounds the worst case. A NULL id is a node of its own
+    that links nothing: its cluster_id is NULL.
 
-    Lineage is truncated EVERY round (eager localCheckpoint of the tiny
-    label table, after checkpointing the edge list once): without this,
-    round N's plan chains N copies of the label join on top of the full
-    pair-generation expression tree, and Catalyst re-analyzes that
-    ever-growing tree each round — measured 164 s of pure driver-side
-    planning (vs ~5 s data time) for an 8-round run whose pair query
-    carried 64-dim cosine folds. Checkpointed rounds keep every plan
-    constant-size; the data cost is one labels-table materialization per
-    round, which the old persist() already paid."""
+    The undirected edge list is checkpointed once (the pair generators
+    upstream are expensive), then ``graph.collect_small_graph`` routes
+    it by size, logging the decision:
+
+    - **one task, on the driver** (at most ``graph.DRIVER_MAX_EDGES``
+      directed edges): the collected edges run the same synchronous
+      rounds in numpy (``np.minimum.at`` over the edge list), and the
+      labels return as a local Arrow relation.
+    - **distributed** (larger graphs): each round is one groupBy-min over
+      the edge list, a shuffle on doc_id, never all-pairs; the new label
+      table is checkpointed every round with its changed? flag, and one
+      count over it is the convergence check. Without the per-round
+      checkpoint round N's plan chains N copies of the label join on top
+      of the full pair-generation expression tree, and Catalyst
+      re-analyzes that ever-growing tree each round (measured: 164 s of
+      driver-side planning vs ~5 s data time for an 8-round run whose
+      pair query carried 64-dim cosine folds).
+
+    Both routes run the same rounds, so a graph whose diameter exceeds
+    ``max_iter`` raises the same ``RuntimeError`` on either, from the
+    driver.
+
+    Crossover, measured on 4 cores over the distinct (part, supplier)
+    pairs of ``pagerank_part_supplier``'s lineitem, clustered with
+    ``max_iter=40`` (construct plus a noop write, medians of 6, 6 and 3
+    interleaved same-process reps after a warm-up; outputs identical
+    across routes). Peak RSS: one cold run per route in a fresh process,
+    read as the Python driver's ``ru_maxrss`` (143 MB on the distributed
+    route at every scale) and the Spark JVM's ``VmHWM``:
+
+    ======  ==========  =======  =======  ===========  =========  ==========
+    scale   edges       nodes    driver   distributed  Python     JVM drv /
+                                                       RSS (drv)  distrib.
+    ======  ==========  =======  =======  ===========  =========  ==========
+    sf0.01     103,462    2,100   0.60 s       2.28 s     163 MB  1.6/2.2 GB
+    sf0.1    1,181,946   21,000   2.57 s       7.24 s     264 MB  2.1/3.3 GB
+    sf1     11,819,460  201,000  26.51 s      72.10 s    1340 MB  5.1/5.9 GB
+    ======  ==========  =======  =======  ===========  =========  ==========
+
+    Edges are directed (both orientations); sf1 is ``gen_sf1.py``. The
+    driver route wins at every measured size."""
     edges = (
         pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
         .union(pairs.select(F.col(id2).alias("a"), F.col(id1).alias("b")))
         .distinct()
         .localCheckpoint(eager=True)
     )
+    table = collect_small_graph(edges, "dedup.dedup_clusters")
+    if table is not None:
+        t = edges.schema["a"].dataType
+        return edges.sparkSession.createDataFrame(
+            _min_labels(table, max_iter),
+            StructType([StructField("doc_id", t), StructField("cluster_id", t)]),
+        )
     labels = (
         edges.select(F.col("a").alias("doc_id"))
         .distinct()
         .withColumn("cluster_id", F.col("doc_id"))
         .localCheckpoint(eager=True)
     )
-    converged = False
     for _ in range(max_iter):
         neighbor_min = (
             edges.join(
@@ -1898,8 +1982,7 @@ def dedup_clusters(
         # strictly decreases whenever it changes, so changed ⇔ the
         # neighborhood min undercut the old label) — the convergence
         # count is then a scan of the just-materialized tiny table
-        # instead of the former new⋈old join job (round-13: one fewer
-        # shuffle job per round across every cluster-family query)
+        # instead of a new⋈old join job
         new_labels = (
             labels.join(neighbor_min, "doc_id", "left")
             .select(
@@ -1918,19 +2001,52 @@ def dedup_clusters(
         changed = new_labels.filter(F.col("__changed")).count()
         labels = new_labels.select("doc_id", "cluster_id")
         if changed == 0:
-            converged = True
+            return labels
+    _not_converged(max_iter)
+
+
+def _not_converged(max_iter: int) -> NoReturn:
+    # silently-wrong labels would let duplicates survive — fail loudly;
+    # chains longer than max_iter need a bigger budget (rounds = graph
+    # diameter; near-dup clusters are clique-ish, so hitting this means
+    # pathological chained drift)
+    raise RuntimeError(
+        f"dedup_clusters did not converge within max_iter={max_iter} "
+        "rounds (pair-graph diameter exceeds the budget); raise max_iter"
+    )
+
+
+def _min_labels(edges: pa.Table, max_iter: int) -> pa.Table:
+    """Driver route of :func:`dedup_clusters`: (doc_id, cluster_id) from
+    the collected symmetric (a, b) edge table, by the distributed route's
+    synchronous rounds. Ids are coded in sorted order, so the minimum
+    code is the minimum id."""
+    a, b = edges["a"], edges["b"]
+    link = pc.and_(pc.is_valid(a), pc.is_valid(b))
+    # the edge list is symmetric: every non-NULL id is some row's ``a``
+    ids, la, lb = pc.drop_null(a), a.filter(link), b.filter(link)
+    n, m = len(ids), len(la)
+    codes, nodes = pd.factorize(
+        pd.concat([c.to_pandas() for c in (ids, la, lb)], ignore_index=True),
+        sort=True,
+    )
+    src, dst = codes[n : n + m], codes[n + m :]
+    label = np.arange(len(nodes))
+    for _ in range(max_iter):
+        new = label.copy()
+        np.minimum.at(new, src, label[dst])
+        changed = (new < label).any()
+        label = new
+        if not changed:
             break
-    if not converged:
-        # silently-wrong labels would let duplicates survive — fail
-        # loudly; chains longer than max_iter need a bigger budget
-        # (rounds = graph diameter; near-dup clusters are clique-ish,
-        # so hitting this means pathological chained drift)
-        raise RuntimeError(
-            f"dedup_clusters did not converge within max_iter={max_iter} "
-            "rounds (pair-graph diameter exceeds the budget); raise "
-            "max_iter"
-        )
-    return labels.select("doc_id", "cluster_id")
+    else:
+        _not_converged(max_iter)
+    doc = pa.array(nodes.to_numpy(), type=a.type)
+    cluster = pc.take(doc, pa.array(label))
+    if a.null_count:  # a NULL id: its own node, with a NULL cluster
+        doc = pa.concat_arrays([doc, pa.nulls(1, a.type)])
+        cluster = pa.concat_arrays([cluster, pa.nulls(1, a.type)])
+    return pa.table({"doc_id": doc, "cluster_id": cluster})
 
 
 def dedup_clusters_twostar(

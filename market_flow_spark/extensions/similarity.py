@@ -59,10 +59,17 @@ def _norm_sq(a: Column) -> Column:
     return _dot(a, a)
 
 
+def _cosine(dot: Column, norms: Column) -> Column:
+    """``dot / norms`` at det-round 6. A zero norm makes the cosine NULL
+    instead of failing the query under ANSI mode — the DuckDB twins'
+    ``x / 0`` is NULL too."""
+    return det_round(F.try_divide(dot, norms), 6)
+
+
 def _pair_cosine(a: Column, b: Column) -> Column:
-    """Exact cosine of two embedding arrays at det-round 6: the verify
-    every near-dup pair generator applies to its candidates."""
-    return det_round(_dot(a, b) / (F.sqrt(_norm_sq(a)) * F.sqrt(_norm_sq(b))), 6)
+    """Exact cosine of two embedding arrays: the verify every near-dup
+    pair generator applies to its candidates."""
+    return _cosine(_dot(a, b), F.sqrt(_norm_sq(a)) * F.sqrt(_norm_sq(b)))
 
 
 def _block_pairs(blocked: DataFrame, key: str, threshold: float) -> DataFrame:
@@ -133,14 +140,13 @@ def _rank(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
 def _cosine_rank(cand: DataFrame, k: int, *keep: str) -> DataFrame:
     """Verify and rank: (query_id, neighbor_id, *keep, cosine, rank) from
     candidate rows pairing a corpus vector (vec_id, embedding, norm) with
-    a query (query_id, qe, qnorm) — self excluded, exact cosine at
-    det-round 6, the top ``k`` per query."""
-    cos = _dot(F.col("embedding"), F.col("qe")) / (F.col("norm") * F.col("qnorm"))
+    a query (query_id, qe, qnorm) — self excluded, exact cosine (NULL
+    for a zero vector, ranked last), the top ``k`` per query."""
+    cos = _cosine(
+        _dot(F.col("embedding"), F.col("qe")), F.col("norm") * F.col("qnorm")
+    )
     scored = cand.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        *keep,
-        det_round(cos, 6).alias("cosine"),
+        "query_id", F.col("vec_id").alias("neighbor_id"), *keep, cos.alias("cosine")
     )
     return _rank(scored, k)
 
@@ -211,13 +217,20 @@ def _train_sample(embeddings: DataFrame, train_rows: int):
         sample = (
             embeddings.orderBy("vec_id").limit(train_rows).select("embedding").toPandas()
         )
-    return np.asarray(sample["embedding"].tolist(), dtype=np.float64)
+    return _matrix(sample["embedding"])
 
 
 def _given_or(given, train):
     """A pre-trained quantizer as float64, else ``train()``'s — the
     build-once/query-many switch every IVF and PQ operator takes."""
     return np.asarray(given, dtype=np.float64) if given is not None else train()
+
+
+def _matrix(vectors) -> np.ndarray:
+    """Embedding rows as a float64 matrix, a NULL element as 0: the rule
+    ``_dot`` follows, so numpy cells, codes and probes agree with it."""
+    X = np.asarray(list(vectors), dtype=np.float64)
+    return np.where(np.isnan(X), 0.0, X)
 
 
 def _unit(X):
@@ -247,8 +260,7 @@ def _cell_udf(C):
 
     @pandas_udf("int")
     def assign_cell(emb: pd.Series) -> pd.Series:
-        X = np.asarray(emb.tolist(), dtype=np.float64)
-        return pd.Series(dist(X).argmin(1).astype("int32"))
+        return pd.Series(dist(_matrix(emb)).argmin(1).astype("int32"))
 
     return assign_cell
 
@@ -335,12 +347,14 @@ def ivf_topk(
         [(i, [float(x) for x in c]) for i, c in enumerate(C)],
         "cell int, centroid array<double>",
     )
+
+    def sq_diff(x: Column, y: Column) -> Column:
+        # a NULL query element counts as 0, as in the numpy cell assignment
+        d = F.coalesce(x, F.lit(0.0)) - y
+        return d * d
+
     d2 = F.aggregate(
-        F.zip_with(
-            F.col("qe").cast("array<double>"),
-            F.col("centroid"),
-            lambda x, y: (x - y) * (x - y),
-        ),
+        F.zip_with(F.col("qe").cast("array<double>"), F.col("centroid"), sq_diff),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
@@ -458,7 +472,7 @@ def pq_encode(embeddings: DataFrame, codebooks) -> DataFrame:
 
     @pandas_udf("array<int>")
     def encode(emb: pd.Series) -> pd.Series:
-        return pd.Series(list(to_codes(np.asarray(emb.tolist(), dtype=np.float64))))
+        return pd.Series(list(to_codes(_matrix(emb))))
 
     return embeddings.select("vec_id", encode("embedding").alias("code"))
 
@@ -480,7 +494,7 @@ def _pq_query_set(embeddings: DataFrame, n_queries: int, B):
     )
     if not rows:
         return None
-    Q = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    Q = _matrix(r["embedding"] for r in rows)
     Qn = _unit(Q)
     qids = np.asarray([r["vec_id"] for r in rows], dtype=np.int64)
     m, _, sub = B.shape
@@ -597,7 +611,7 @@ def ivf_pq_topk(
 
     @pandas_udf("struct<cell:int, code:array<int>>")
     def assign_and_encode(emb: pd.Series) -> pd.DataFrame:
-        X = np.asarray(emb.tolist(), dtype=np.float64)
+        X = _matrix(emb)
         cell = dist(X).argmin(1).astype("int32")
         return pd.DataFrame({"cell": cell, "code": list(encode(X))})
 
@@ -776,6 +790,7 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     max_band_size: int | None = None,
+    dim: int | None = None,
 ) -> DataFrame:
     """(vec1, vec2, cosine): embedding-space near-duplicate pairs by
     banded sign-LSH — candidate pair iff the two vectors agree on ALL
@@ -807,8 +822,8 @@ def embedding_neardup_pairs(
       two hash joins back to the vectors for one exact cosine each; the
       dim-64 payloads join in after the pair dedup. At (4, 10) 0.81 s vs
       0.92 s for the payload self-join plus distinct at sf0.1 (a tie at
-      sf0.01, 0.95 s each). One eager job checks that the bands fit the
-      embedding dim.
+      sf0.01, 0.95 s each). The bands must fit the embedding ``dim``;
+      when the caller does not pass it, one eager job reads it.
 
     ``max_band_size`` is the degenerate-bucket guard on both shapes (same
     contract as the MinHash tier's): a bucket holding k copies of a
@@ -825,11 +840,13 @@ def embedding_neardup_pairs(
             keys.getItem(0).alias("bkey"),
         )
     else:
-        dim_row = embeddings.select(F.size(F.col(emb_col)).alias("d")).first()
-        if dim_row is not None and n_bands * band_bits > int(dim_row["d"]):
+        if dim is None:
+            dim_row = embeddings.select(F.size(F.col(emb_col)).alias("d")).first()
+            dim = None if dim_row is None else int(dim_row["d"])
+        if dim is not None and n_bands * band_bits > dim:
             raise ValueError(
                 f"n_bands*band_bits = {n_bands * band_bits} exceeds "
-                f"embedding dim {dim_row['d']}"
+                f"embedding dim {dim}"
             )
         bucket = ["band", "bkey"]
         keyed = embeddings.select(
@@ -935,8 +952,26 @@ def choose_banded_layout(
     Every call that samples logs one ``decisions.decision_log`` record:
     the sampled and full row counts, the estimate per rung tried, the
     cap and the chosen layout."""
+    return _banded_layout(
+        embeddings, n_bands, band_bits, max_emission, sample_rows, emb_col,
+        id_col, n_full,
+    )[:2]
+
+
+def _banded_layout(
+    embeddings: DataFrame,
+    n_bands: int,
+    band_bits: int,
+    max_emission: float | None,
+    sample_rows: int = 4096,
+    emb_col: str = "embedding",
+    id_col: str = "vec_id",
+    n_full: int | None = None,
+) -> tuple[int, int, int | None]:
+    """:func:`choose_banded_layout`'s (bands, bits) plus the embedding dim
+    it read off its sample (None when it sampled nothing)."""
     if max_emission is None:
-        return n_bands, band_bits
+        return n_bands, band_bits, None
     order_key = id_col if id_col in embeddings.columns else embeddings.columns[0]
     rows = (
         embeddings.orderBy(order_key)
@@ -945,7 +980,7 @@ def choose_banded_layout(
         .collect()
     )
     if not rows:
-        return n_bands, band_bits
+        return n_bands, band_bits, None
     signs = [r["s"] or [] for r in rows]
     dim = max(map(len, signs))
     patterns = [sum(1 << d for d, pos in enumerate(sg) if pos) for sg in signs]
@@ -985,7 +1020,7 @@ def choose_banded_layout(
         max_emission,
         str(chosen),
     )
-    return chosen
+    return *chosen, dim
 
 
 def embedding_neardup_pairs_routed(
@@ -1008,14 +1043,15 @@ def embedding_neardup_pairs_routed(
     wider single block: the ×4-sf1 head-to-head (bench_escalation.json)
     measured bit-walking dominated on recall and speed. Output schema is
     the generator's at every layout; ``n_full`` (e.g. from catalog
-    stats) skips the chooser's corpus count."""
-    bands, bits = choose_banded_layout(
+    stats) skips the chooser's corpus count. The chooser's sample gives
+    the embedding dim, so a multi-band layout needs no dim guard job."""
+    bands, bits, dim = _banded_layout(
         embeddings, n_bands, band_bits, max_emission,
         emb_col=emb_col, id_col=id_col, n_full=n_full,
     )
     return embedding_neardup_pairs(
         embeddings, threshold=threshold, n_bands=bands, band_bits=bits,
-        id_col=id_col, emb_col=emb_col,
+        id_col=id_col, emb_col=emb_col, dim=dim,
     )
 
 

@@ -1,14 +1,17 @@
-"""Iterative graph algebra: fixed-point PageRank, routed by graph size.
+"""Iterative graph algebra: fixed-point PageRank, routed by graph size,
+and the one bounded collect that routes every small graph to the driver.
 
 The reference has no graph surface; at 100 TB link-analysis ranks (domain
 authority for crawl prioritization, near-dup-cluster centrality) are a
 standard corpus-curation signal, and PageRank is the canonical iterative
 companion to the connected-components propagation in
-``extensions.dedup.dedup_clusters``. The edge list is checkpointed once
-and counted; a small graph then runs every round inside one Python task,
-a large one runs each round as a keyed edge-list join plus one
-map-side-combined aggregate, with one eager ``localCheckpoint`` of the
-final rank table. Neither route collects the graph to the driver.
+``extensions.dedup.dedup_clusters``. Both operators take the same first
+step, :func:`collect_small_graph`: one collect, bounded at
+``DRIVER_MAX_EDGES + 1`` rows, loads a small graph onto the driver, where
+every round runs in numpy in one thread; a larger graph keeps its
+distributed rounds (for PageRank: a keyed edge-list join plus one
+map-side-combined aggregate per round, with one eager ``localCheckpoint``
+of the final rank table).
 
 Determinism (what makes an iterative float algorithm oracle-checkable):
 ranks live as 1e-9 **fixed-point BIGINTs**. Per-edge contributions use
@@ -29,6 +32,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -37,9 +42,36 @@ from market_flow_spark.decisions import decision_log
 
 PR_SCALE = 10**9
 
-# Largest edge count that takes the one-task route: the largest graph
-# measured (sf1), where that route still won (see ``pagerank``).
-PAGERANK_ONE_TASK_MAX_EDGES = 11_819_460
+# Largest edge count that runs on the driver (see ``collect_small_graph``).
+DRIVER_MAX_EDGES = 11_819_460
+
+
+def collect_small_graph(rows: DataFrame, operator: str) -> pa.Table | None:
+    """``rows`` as one Arrow table when it holds at most
+    ``DRIVER_MAX_EDGES`` rows, else None — the route decision of every
+    size-routed graph operator, logged through ``decisions.decision_log``
+    as ``operator`` with the true edge count.
+
+    One collect, ``limit(bound + 1).toArrow()``, both decides and loads:
+    a small graph costs no separate count job. ``limit`` takes an int32,
+    so the bound is clamped to ``2**31 - 2``. Only a graph above the
+    bound pays a second job, the count that logs its size.
+
+    Crossover, measured on 4 cores over the symmetrized part-supplier
+    graph of ``pagerank_part_supplier``: see :func:`pagerank` and
+    ``dedup.dedup_clusters``. Both operators still ran faster on the
+    driver at sf1, the largest graph measured, so the bound is that edge
+    count rather than an extrapolated crossover."""
+    bound = min(DRIVER_MAX_EDGES, 2**31 - 2)
+    table = rows.limit(bound + 1).toArrow()
+    small = table.num_rows <= bound
+    decision_log(
+        operator,
+        {"edges": table.num_rows if small else rows.count()},
+        DRIVER_MAX_EDGES,
+        "one_task" if small else "distributed",
+    )
+    return table if small else None
 
 
 def _base_rank(damping: float) -> int:
@@ -61,21 +93,20 @@ def pagerank(
     ranks (rank ``1 - damping``); an edge to NULL still counts in its
     source's out-degree, and an edge from NULL contributes nothing.
 
-    Two routes, picked by the edge count of the eagerly checkpointed
-    edge list (one count job) against ``PAGERANK_ONE_TASK_MAX_EDGES``
-    and logged through ``decisions.decision_log``:
+    Two routes, picked by :func:`collect_small_graph`:
 
-    - **one task** (``edges <= bound``): the edge list gets a constant
-      grouping column and one ``applyInPandas`` task runs all rounds in
-      numpy with the same arithmetic (int64 ``rf // deg``, exact
-      ``np.add.at`` sums, one IEEE ``floor(damping * s)`` per node). The
-      result is lazy. On a small graph the distributed rounds cost
+    - **one task, on the driver** (``edges <= DRIVER_MAX_EDGES``): the
+      collected rows run all rounds in numpy with the same arithmetic
+      (int64 ``rf // deg``, exact ``np.add.at`` sums, one IEEE
+      ``floor(damping * s)`` per node), and the rank table returns as a
+      local Arrow relation. No Python worker starts and the result plans
+      no shuffle. On a small graph the distributed rounds cost
       scheduling, not data: about 0.13 s per sequential stage on 4 cores.
-    - **distributed** (larger graphs): the (node, deg) table is
-      checkpointed once; each round is one equi-join of the rank table
-      onto the edge list plus one map-side-combined sum on dst. The
-      recurrence references the previous rank table once, so the plan
-      grows linearly and only the final table is checkpointed: all
+    - **distributed** (larger graphs): the edge list and the (node, deg)
+      table are checkpointed once; each round is one equi-join of the
+      rank table onto the edge list plus one map-side-combined sum on
+      dst. The recurrence references the previous rank table once, so
+      the plan grows linearly and only the final table is checkpointed: all
       rounds run as one job in which each round's join output is
       already hash-clustered on the node key, so only the contribution
       aggregate exchanges per round. (A per-round checkpoint would cost
@@ -84,43 +115,51 @@ def pagerank(
 
     Crossover, measured on 4 cores over the symmetrized part-supplier
     graph of ``pagerank_part_supplier`` (8 rounds; construct plus a noop
-    write, median of 8, 6 and 3 interleaved same-process reps; every
-    output bit-identical across routes):
+    write, medians of 6, 6 and 3 interleaved same-process reps after a
+    warm-up; every output bit-identical across routes). Peak RSS: one
+    cold run per route in a fresh process, read as the Python driver's
+    ``ru_maxrss`` (143 MB on the distributed route at every scale) and
+    the Spark JVM's ``VmHWM``:
 
-    ========  ==========  ========  ========  ===========
-    scale     edges       nodes     one task  distributed
-    ========  ==========  ========  ========  ===========
-    sf0.01       103,462     2,100    0.79 s       2.60 s
-    sf0.1      1,181,946    21,000    2.78 s       5.77 s
-    sf1       11,819,460   201,000   18.84 s      35.68 s
-    ========  ==========  ========  ========  ===========
+    ======  ==========  =======  =======  ===========  =========  ==========
+    scale   edges       nodes    driver   distributed  Python     JVM drv /
+                                                       RSS (drv)  distrib.
+    ======  ==========  =======  =======  ===========  =========  ==========
+    sf0.01     103,462    2,100   0.48 s       3.49 s     162 MB  1.1/1.8 GB
+    sf0.1    1,181,946   21,000   1.68 s       7.63 s     266 MB  1.4/2.6 GB
+    sf1     11,819,460  201,000  12.82 s      50.15 s    1306 MB  3.9/6.9 GB
+    ======  ==========  =======  =======  ===========  =========  ==========
 
-    The one-task route still wins at sf1, the largest graph measured, so
-    the bound sits at that edge count rather than at an extrapolated
-    crossover. The sf1 task holds the whole edge list in one Python
-    worker: replayed in a plain Python process, its body took 3.9 s and
-    peaked at 1.4 GB RSS."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .localCheckpoint(eager=True)
+    sf1 is ``gen_sf1.py``. The driver route wins at every measured size.
+    Without its edge-list checkpoint the distributed route took 65.85 s
+    at sf1: every round re-read the edge plan."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    node_type = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .schema["node"]
+        .dataType
     )
-    size = e.agg(
-        F.count(F.lit(1)).alias("edges"),
-        F.count_if(F.col("src").isNull() | F.col("dst").isNull()).alias(
-            "null_edges"
-        ),
-    ).first()
-    one_task = size["edges"] <= PAGERANK_ONE_TASK_MAX_EDGES
-    decision_log(
-        "graph.pagerank",
-        {"edges": size["edges"]},
-        PAGERANK_ONE_TASK_MAX_EDGES,
-        "one_task" if one_task else "distributed",
+    # NULL endpoints never reach pandas, where a nullable integer column
+    # would become float64: each row ships as two ids a = coalesce(src,
+    # dst) and b = coalesce(dst, src) plus flags saying which were real
+    s, d = F.col("src").cast(node_type), F.col("dst").cast(node_type)
+    rows = e.select(
+        F.coalesce(s, d).alias("a"),
+        F.coalesce(d, s).alias("b"),
+        s.isNotNull().alias("src_ok"),
+        d.isNotNull().alias("dst_ok"),
     )
-    if one_task:
-        ranks = _pagerank_one_task(e, n_iter, damping, size["null_edges"] > 0)
+    table = collect_small_graph(rows, "graph.pagerank")
+    if table is None:
+        ranks = _pagerank_rounds(e.localCheckpoint(eager=True), n_iter, damping)
     else:
-        ranks = _pagerank_rounds(e, n_iter, damping)
+        schema = StructType(
+            [StructField("node", node_type), StructField("rf", LongType())]
+        )
+        ranks = e.sparkSession.createDataFrame(
+            _driver_ranks(table, n_iter, damping), schema
+        )
     return ranks.select(
         "node",
         F.col("rf").alias("rank_fixed"),
@@ -174,52 +213,29 @@ def _pagerank_rounds(e: DataFrame, n_iter: int, damping: float) -> DataFrame:
     return ranks.localCheckpoint(eager=True)
 
 
-def _pagerank_one_task(
-    e: DataFrame, n_iter: int, damping: float, has_null: bool
-) -> DataFrame:
-    """One-task route: (node, rf), lazy. NULL endpoints never reach
-    pandas, where a nullable integer column would become float64: each
-    row ships as two non-NULL ids ``a = coalesce(src, dst)`` and
-    ``b = coalesce(dst, src)`` plus flags saying which endpoints were
-    real, and the NULL node's constant rank row is unioned on in Spark."""
-    node_type = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .schema["node"]
-        .dataType
-    )
-    s, d = F.col("src").cast(node_type), F.col("dst").cast(node_type)
-    rows = e.select(
-        F.lit(0).alias("g"),
-        F.coalesce(s, d).alias("a"),
-        F.coalesce(d, s).alias("b"),
-        s.isNotNull().alias("src_ok"),
-        d.isNotNull().alias("dst_ok"),
-    ).where(F.col("a").isNotNull())
-    schema = StructType(
-        [StructField("node", node_type), StructField("rf", LongType())]
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _one_task_ranks(pdf, n_iter, damping)
-
-    ranks = rows.groupBy("g").applyInPandas(run, schema=schema)
+def _driver_ranks(table: pa.Table, n_iter: int, damping: float) -> pa.Table:
+    """Driver route: the (node, rf) table of the collected (a, b, src_ok,
+    dst_ok) rows. A row with both endpoints NULL has a NULL ``a`` and
+    only marks the NULL node, whose constant rank row is appended."""
+    ok = pc.and_(table["src_ok"], table["dst_ok"])
+    has_null = not pc.all(ok, min_count=0).as_py()
+    linked = table.filter(pc.is_valid(table["a"]))
+    ranks = _one_task_ranks(linked.to_pandas(), n_iter, damping)
+    node = pa.array(ranks["node"].to_numpy(), type=table.schema.field("a").type)
+    rf = pa.array(ranks["rf"].to_numpy(), type=pa.int64())
     if has_null:
-        rf = PR_SCALE if n_iter == 0 else _base_rank(damping)
-        ranks = ranks.union(
-            e.sparkSession.range(1).select(
-                F.lit(None).cast(node_type).alias("node"),
-                F.lit(rf).cast("bigint").alias("rf"),
-            )
+        node = pa.concat_arrays([node, pa.nulls(1, node.type)])
+        rf = pa.concat_arrays(
+            [rf, pa.array([PR_SCALE if n_iter == 0 else _base_rank(damping)])]
         )
-    return ranks
+    return pa.table({"node": node, "rf": rf})
 
 
 def _one_task_ranks(
     pdf: pd.DataFrame, n_iter: int, damping: float
 ) -> pd.DataFrame:
-    """All ``n_iter`` rounds over one task's (a, b, src_ok, dst_ok) rows,
-    with the distributed route's fixed-point arithmetic."""
+    """All ``n_iter`` rounds over (a, b, src_ok, dst_ok) rows with no NULL
+    id, with the distributed route's fixed-point arithmetic."""
     m = len(pdf)
     codes, nodes = pd.factorize(
         pd.concat([pdf["a"], pdf["b"]], ignore_index=True)

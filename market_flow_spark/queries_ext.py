@@ -3853,8 +3853,8 @@ def q_pagerank_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     / hot parts. Symmetrizing makes the bipartite graph dangling-free, so
     the no-redistribution formulation conserves interpretation. The
     graph is small at every shipped scale (2,100 nodes and 103,462 edges
-    at sf0.01), so ``graph.pagerank`` runs all 8 rounds in one
-    ``applyInPandas`` task; above its edge-count bound the rounds run
+    at sf0.01), so ``graph.pagerank`` collects it once and runs all 8
+    rounds on the driver; above its edge-count bound the rounds run
     distributed. Full oracle (unrolled CTE chain) in pytest, on both
     routes."""
     from market_flow_spark.operators import graph

@@ -53,3 +53,20 @@ def duck(sf_dir):
         )
     yield con
     con.close()
+
+
+# a bound that forces each size-routed graph route for any edge count
+GRAPH_ROUTE_BOUNDS = {"one_task": 10**18, "distributed": -1}
+
+
+@pytest.fixture(params=list(GRAPH_ROUTE_BOUNDS))
+def graph_route(request, monkeypatch):
+    """Runs a test once per route of ``graph.collect_small_graph`` (the
+    driver's one task, then the distributed rounds) by patching the
+    shared edge bound."""
+    from market_flow_spark.operators import graph
+
+    monkeypatch.setattr(
+        graph, "DRIVER_MAX_EDGES", GRAPH_ROUTE_BOUNDS[request.param]
+    )
+    return request.param

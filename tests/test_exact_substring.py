@@ -133,6 +133,27 @@ def test_route_chooser_estimate_and_flip(spark):
     assert est == 23.0 / 3 * 300
 
 
+def test_route_chooser_logs_its_decision(spark, caplog):
+    import logging
+
+    from market_flow_spark.extensions.dedup import choose_exact_substring_route
+
+    docs = spark.createDataFrame(
+        [(0, "one document"), (1, "another doc")], "doc_id long, text string"
+    )
+    with caplog.at_level(logging.INFO, logger="market_flow_spark.decisions"):
+        choose_exact_substring_route(docs, max_window_rows=10)
+    [rec] = [
+        r for r in caplog.records if r.name == "market_flow_spark.decisions"
+    ]
+    assert rec.decision == {
+        "operator": "dedup.choose_exact_substring_route",
+        "stats": {"window_rows": 23.0},
+        "threshold": 10,
+        "choice": "winnow_containment",
+    }
+
+
 def test_dedup_apply_cuts_exactly_the_spans(spark):
     """exact_substring_dedup (round 11, the APPLY half): the cleaned text
     must equal the normalized text with every reported span's char range

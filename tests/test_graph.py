@@ -1,15 +1,13 @@
-"""PageRank operator properties, each on both routes (forced by
-monkeypatching the edge-count bound); the registered query is also
-full-oracle-checked per route here and in test_oracle_parity against the
-unrolled-CTE twin."""
+"""PageRank operator properties, each on both routes (the
+``graph_route`` fixture forces the edge-count bound); the registered
+query is also full-oracle-checked per route here and in
+test_oracle_parity against the unrolled-CTE twin."""
 
 from __future__ import annotations
 
 import logging
 
 import duckdb
-import pytest
-
 from market_flow_spark.operators import graph
 from market_flow_spark.operators.graph import (
     PR_SCALE,
@@ -18,18 +16,6 @@ from market_flow_spark.operators.graph import (
 )
 from market_flow_spark.queries_all import ORACLES, QUERIES
 from tests.oracle_utils import assert_matches_oracle
-
-# bound that forces each route for any edge count
-ROUTE_BOUNDS = {"one_task": 10**18, "distributed": -1}
-
-
-@pytest.fixture(params=list(ROUTE_BOUNDS))
-def route(request, monkeypatch):
-    monkeypatch.setattr(
-        graph, "PAGERANK_ONE_TASK_MAX_EDGES", ROUTE_BOUNDS[request.param]
-    )
-    return request.param
-
 
 def _reference_pagerank(edges, n_iter, damping=0.85):
     """Plain-python fixed-point replica (the operator's spec). NULL is a
@@ -53,7 +39,7 @@ def _reference_pagerank(edges, n_iter, damping=0.85):
     return rf
 
 
-def test_pagerank_matches_python_replica(spark, route):
+def test_pagerank_matches_python_replica(spark, graph_route):
     edges = [
         (1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (4, 2), (5, 4), (3, 5),
     ]
@@ -66,7 +52,7 @@ def test_pagerank_matches_python_replica(spark, route):
     assert got == want
 
 
-def test_pagerank_sink_outranks_source(spark, route):
+def test_pagerank_sink_outranks_source(spark, graph_route):
     """A node every other node points to must outrank a node nothing
     points to."""
     edges = [(1, 9), (2, 9), (3, 9), (9, 1)]
@@ -76,7 +62,7 @@ def test_pagerank_sink_outranks_source(spark, route):
     assert ranks[9] > ranks[3]
 
 
-def test_pagerank_uniform_on_symmetric_cycle(spark, route):
+def test_pagerank_uniform_on_symmetric_cycle(spark, graph_route):
     """On a directed cycle every node has the same rank (symmetry), and
     with no dangling nodes total fixed-point mass stays ~conserved."""
     n = 6
@@ -93,10 +79,10 @@ def _ranks(df, n_iter):
     return {r["node"]: r["rank_fixed"] for r in rows}
 
 
-def test_pagerank_null_endpoints_match_duckdb_twin(spark, route):
+def test_pagerank_null_endpoints_match_duckdb_twin(spark, graph_route):
     """A NULL endpoint is one node ranked ``base``; an edge to NULL still
     counts in its source's out-degree. pandas would read a nullable
-    bigint column as float64, so the one-task route must never see it."""
+    bigint column as float64, so the driver route must never see it."""
     edges = [(1, 2), (2, 1), (2, None), (None, 1), (3, 1)]
     want = {1: 856031250, 2: 747125000, 3: 150000000, None: 150000000}
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
@@ -111,7 +97,7 @@ def test_pagerank_null_endpoints_match_duckdb_twin(spark, route):
     assert {n: rf for n, rf, _ in duckdb.sql(twin).fetchall()} == want
 
 
-def test_pagerank_empty_edge_list_keeps_schema(spark, route):
+def test_pagerank_empty_edge_list_keeps_schema(spark, graph_route):
     df = spark.createDataFrame([], "src bigint, dst bigint")
     out = pagerank(df, n_iter=3)
     assert out.dtypes == [
@@ -120,14 +106,14 @@ def test_pagerank_empty_edge_list_keeps_schema(spark, route):
     assert out.collect() == []
 
 
-def test_pagerank_zero_rounds_is_the_initial_rank(spark, route):
+def test_pagerank_zero_rounds_is_the_initial_rank(spark, graph_route):
     df = spark.createDataFrame(
         [(1, 2), (2, None), (3, 1)], "src bigint, dst bigint"
     )
     assert _ranks(df, 0) == dict.fromkeys([1, 2, 3, None], PR_SCALE)
 
 
-def test_pagerank_string_node_ids(spark, route):
+def test_pagerank_string_node_ids(spark, graph_route):
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")]
     df = spark.createDataFrame(edges, "src string, dst string")
     out = pagerank(df, n_iter=5)
@@ -137,7 +123,7 @@ def test_pagerank_string_node_ids(spark, route):
     )
 
 
-def test_pagerank_int64_ids_above_2_pow_53_stay_exact(spark, route):
+def test_pagerank_int64_ids_above_2_pow_53_stay_exact(spark, graph_route):
     """Ids that differ only below float64 precision stay distinct and
     round-trip exactly, with a NULL present (the column pandas would
     otherwise read as float64)."""
@@ -150,13 +136,13 @@ def test_pagerank_int64_ids_above_2_pow_53_stay_exact(spark, route):
 
 
 def test_part_supplier_matches_oracle_on_each_route(
-    spark, duck, sf_dir, route
+    spark, duck, sf_dir, graph_route
 ):
     df = QUERIES["pagerank_part_supplier"](spark, sf_dir)
     assert_matches_oracle(df, duck, ORACLES["pagerank_part_supplier"])
 
 
-def test_pagerank_logs_its_route(spark, route, caplog):
+def test_pagerank_logs_its_route(spark, graph_route, caplog):
     df = spark.createDataFrame([(1, 2), (2, 1)], "src bigint, dst bigint")
     with caplog.at_level(logging.INFO, logger="market_flow_spark.decisions"):
         pagerank(df, n_iter=1)
@@ -166,6 +152,6 @@ def test_pagerank_logs_its_route(spark, route, caplog):
     assert rec.decision == {
         "operator": "graph.pagerank",
         "stats": {"edges": 2},
-        "threshold": ROUTE_BOUNDS[route],
-        "choice": route,
+        "threshold": graph.DRIVER_MAX_EDGES,
+        "choice": graph_route,
     }

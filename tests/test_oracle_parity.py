@@ -64,14 +64,53 @@ def test_similarity_twin_on_planted_null_element(op, spark):
     ivf_hyperplane_topk probes the query's own cell 14 first (not a cell
     at a NULL distance) and finds 5 and 2 there, and the near-dup pairs
     of vector 0 survive the threshold."""
+    run, sql = _null_element_cases()[op]
+    _assert_twin_on(spark, _PLANTED_NULL, run, sql)
+
+
+# Vector 0 has no direction; 4 and 5 share its 4-bit sign bucket.
+_ZERO_VECTOR = [
+    (0, [0.0, 0.0, 0.0, 0.0]),
+    (1, [1.0, 1.0, 1.0, 1.0]),
+    (2, [1.0, 1.0, -1.0, 1.0]),
+    (3, [1.0, 1.0, 1.0, 0.5]),
+    (4, [-1.0, -1.0, -1.0, -1.0]),
+    (5, [-1.0, -1.0, -0.5, -1.0]),
+]
+
+
+@pytest.mark.parametrize("op", ["cosine_topk", "embedding_neardup_pairs"])
+def test_similarity_twin_on_zero_vector(op, spark):
+    """An all-zero vector's cosines are NULL on both engines (DuckDB's
+    ``x / 0`` is NULL; under ANSI mode a plain Spark division would fail
+    the whole query): cosine_topk ranks it last, and the near-dup
+    threshold drops its pairs."""
+    from market_flow_spark.extensions import similarity as S
+    from market_flow_spark.queries_ext import _cosine_topk_oracle, _near_dup_oracle
+
+    run, sql = {
+        "cosine_topk": (
+            lambda e: S.cosine_topk(e, n_queries=2, k=3),
+            _cosine_topk_oracle(n_queries=2, k=3),
+        ),
+        "embedding_neardup_pairs": (
+            lambda e: S.embedding_neardup_pairs(e, threshold=0.25, band_bits=4),
+            _near_dup_oracle(n_bits=4, threshold=0.25),
+        ),
+    }[op]
+    _assert_twin_on(spark, _ZERO_VECTOR, run, sql)
+
+
+def _assert_twin_on(spark, rows, run, sql):
+    """``run`` over the (vec_id, embedding) ``rows`` matches the DuckDB
+    twin ``sql`` over the same rows, and the twin result is not empty."""
     import duckdb
 
-    run, sql = _null_element_cases()[op]
-    emb = spark.createDataFrame(_PLANTED_NULL, "vec_id long, embedding array<float>")
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     values = ", ".join(
         f"(CAST({i} AS BIGINT), "
         f"[{', '.join('NULL' if x is None else repr(x) for x in v)}]::FLOAT[])"
-        for i, v in _PLANTED_NULL
+        for i, v in rows
     )
     con = duckdb.connect()
     try:
@@ -79,7 +118,7 @@ def test_similarity_twin_on_planted_null_element(op, spark):
             f"CREATE VIEW embeddings AS SELECT * FROM (VALUES {values}) "
             "t(vec_id, embedding)"
         )
-        assert con.sql(sql).fetchall()  # the twin result is not empty
+        assert con.sql(sql).fetchall()
         assert_matches_oracle(run(emb), con, sql)
     finally:
         con.close()

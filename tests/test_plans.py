@@ -78,8 +78,6 @@ PANDAS_UDF_QUERIES = {
     "user_sessions_core": {"FlatMapGroupsInPandas"},
     # row-expanding frame sampler (multimodal.sample_frames)
     "multimodal_frames": {"MapInPandas"},
-    # small graphs run every PageRank round in one applyInPandas task
-    "pagerank_part_supplier": {"FlatMapGroupsInPandas"},
 }
 # crossJoins whose broadcast side is scalar/constant-sized by construction
 # (a 12-row scaffold, a 5-row query set, a one-row aggregate): the BNLJ

@@ -17,6 +17,7 @@ import pytest
 
 from market_flow_spark.extensions.similarity import (
     cosine_topk,
+    embedding_neardup_pairs_ivf,
     ivf_hyperplane_topk,
     ivf_topk,
     train_kmeans_quantizer,
@@ -36,16 +37,18 @@ def _det_round6(x: float) -> float:
 
 
 def _reference_ivf(emb_rows, n_queries, k, n_cells, nprobe, train_rows):
-    """Pure-Python IVF mirroring similarity.ivf_topk step for step."""
+    """Pure-Python IVF mirroring similarity.ivf_topk step for step; a
+    NULL element counts as 0 everywhere."""
     import numpy as np
 
-    X = np.asarray(
-        [list(r.embedding) for r in emb_rows if r.vec_id < train_rows],
-        dtype=np.float64,
-    )
+    def matrix(rows):
+        X = np.asarray([list(r.embedding) for r in rows], dtype=np.float64)
+        return np.nan_to_num(X, nan=0.0)
+
+    X = matrix(r for r in emb_rows if r.vec_id < train_rows)
     C = train_kmeans_quantizer(X, n_cells, seed=42, max_iter=8)
     cnorm2 = (C * C).sum(1)
-    all_X = np.asarray([list(r.embedding) for r in emb_rows], dtype=np.float64)
+    all_X = matrix(emb_rows)
     cells = (cnorm2 - 2.0 * (all_X @ C.T)).argmin(1)
     ids = [r.vec_id for r in emb_rows]
     norms = {i: math.sqrt(_fold_dot(e, e)) for i, e in zip(ids, all_X)}
@@ -90,6 +93,32 @@ def test_ivf_topk_matches_reference_bit_exact(spark, sf):
         emb.select("vec_id", "embedding").collect(), train_rows=2048, **params
     )
     assert got == want
+
+
+def test_ivf_null_element_counts_as_zero(spark):
+    """A NULL query element adds 0 to the probe distance and to the numpy
+    cell assignment, as it does to every dot product: the query
+    [NULL, 1, 1, 1] is nearest the all-ones centroid (cell 1), so with
+    nprobe=1 it searches that cell and finds vectors 1 and 2. Before,
+    its probe distances were all NULL (the probe fell back to cell 0) and
+    NaN sent it to cell 0."""
+    import numpy as np
+
+    emb = spark.createDataFrame(
+        [
+            (0, [None, 1.0, 1.0, 1.0]),
+            (1, [1.0, 1.0, 1.0, 0.5]),
+            (2, [0.5, 1.0, 0.5, 1.0]),
+            (3, [-1.0, -1.0, 0.5, -1.0]),
+            (4, [-1.0, -1.0, -1.0, -1.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    centroids = np.array([[-1.0] * 4, [1.0] * 4])
+    got = ivf_topk(emb, n_queries=1, k=2, nprobe=1, centroids=centroids)
+    assert {r.neighbor_id for r in got.collect()} == {1, 2}
+    pairs = embedding_neardup_pairs_ivf(emb, threshold=0.5, centroids=centroids)
+    assert {(r.vec1, r.vec2) for r in pairs.collect()} >= {(0, 1), (0, 2)}
 
 
 def test_ivf_topk_recall_and_exactness(spark, tables):

@@ -105,6 +105,25 @@ def test_selector_estimates_prefix_grain_for_freq_ordered(spark):
     )
 
 
+def test_selector_logs_stopword_pick_with_its_top_share(spark, caplog):
+    """The planted stop-word corpus logs one decision: freq_ordered, from
+    its sampled top-token share 600/15000 = 0.04 against the 0.02 cut,
+    with the prefix-grain emission estimate under the cap."""
+    docs = _stopword_corpus(spark)
+    with caplog.at_level(logging.INFO, logger="market_flow_spark.decisions"):
+        dedup.choose_word_jaccard_strategy(docs, max_emission=1e5)
+    [rec] = [
+        r for r in caplog.records if r.name == "market_flow_spark.decisions"
+    ]
+    d = rec.decision
+    assert d["operator"] == "dedup.choose_word_jaccard_strategy"
+    assert d["choice"] == "freq_ordered"
+    assert d["threshold"] == {"top_share": 0.02, "max_emission": 1e5}
+    assert d["stats"]["top_share"] == 600 / 15000
+    assert d["stats"]["sample_docs"] == d["stats"]["rows"] == 600
+    assert d["stats"]["emission"] <= 1e5
+
+
 def test_selector_none_cap_disables_routing(spark):
     docs = _dense_shared_vocab(spark)
     assert (
@@ -729,6 +748,17 @@ def test_escalated_routed_entry_construct_jobs(spark):
             emb, threshold=0.25, max_emission=2e4
         ),
     ) == 1
+
+
+def test_banded_routed_query_reads_dim_off_the_sample(spark, sf_dir):
+    """The registered multi-band routed query builds with one job, the
+    chooser's sample: the generator takes the dim the sample gave and
+    runs no dim guard of its own."""
+    from market_flow_spark.queries_all import QUERIES
+
+    build = QUERIES["embedding_near_dup_banded_routed"]
+    build(spark, sf_dir)  # warm the relation cache
+    assert _construct_jobs(spark, lambda: build(spark, sf_dir)) == 1
 
 
 def test_choose_banded_layout_logs_its_decision(spark, caplog):
