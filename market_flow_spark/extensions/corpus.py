@@ -152,7 +152,6 @@ def cluster_safe_split(
     salt: str = "split",
     id1: str = "doc1",
     id2: str = "doc2",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Leakage-safe train/test split: assign splits per NEAR-DUP CLUSTER,
     not per document, so no near-duplicate pair ever straddles the
@@ -168,9 +167,7 @@ def cluster_safe_split(
     (doc_id, cluster_id, split) over ALL docs."""
     from market_flow_spark.extensions.sampling import assign_split
 
-    keep = dedup.dedup_keep_list(
-        docs, pairs, max_iter=max_iter, id1=id1, id2=id2
-    )
+    keep = dedup.dedup_keep_list(docs, pairs, id1=id1, id2=id2)
     return assign_split(
         keep.select("doc_id", "cluster_id"),
         "cluster_id",

@@ -22,8 +22,6 @@ All tiers are pure DataFrame ops — explode/groupBy/join — no UDFs.
 
 from __future__ import annotations
 
-from typing import NoReturn
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -1888,313 +1886,191 @@ def winnow_containment(
     )
 
 
+# Rounds of two-star after which the distributed route gives up: the
+# alternating algorithm needs O(log² n) rounds, so reaching this means a
+# fault, not a hard graph.
+_STAR_MAX_ROUNDS = 30
+
+
 def dedup_clusters(
-    pairs: DataFrame,
-    max_iter: int = 20,
-    id1: str = "doc1",
-    id2: str = "doc2",
+    pairs: DataFrame, id1: str = "doc1", id2: str = "doc2"
 ) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id) with
     cluster_id = the MINIMUM doc_id reachable through the pair graph — the
     step that turns pairwise near-dup evidence into keep/drop decisions
     (pairs alone over-delete: A~B and B~C must not drop both B and C
-    independently of each other).
+    independently of each other). Every id of ``pairs`` is a node: a
+    self-pair (a, a) gives node a labelled a, and a NULL id is a node of
+    its own that links nothing, with a NULL cluster_id.
 
-    Min-label propagation (the MapReduce connected-components shape,
-    cf. Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    each round every node adopts the minimum label in its closed
-    neighborhood. Rounds needed = graph diameter, and near-dup clusters
-    are clique-ish (diameter 1-2), so convergence is 2-3 rounds in
-    practice; a round that changes no label stops the loop, and
-    ``max_iter`` bounds the worst case. A NULL id is a node of its own
-    that links nothing: its cluster_id is NULL.
-
-    The undirected edge list is checkpointed once (the pair generators
-    upstream are expensive), then ``graph.collect_small_graph`` routes
-    it by size, logging the decision:
+    The pairs are checkpointed once as one orientation each, (u, v) =
+    (greatest, least) with v NULL when either id is NULL, and
+    deduplicated (the pair generators upstream are expensive); then
+    ``graph.collect_small_graph`` routes them by size, logging the
+    decision with the undirected pair count:
 
     - **one task, on the driver** (at most ``graph.DRIVER_MAX_EDGES``
-      directed edges): the collected edges run the same synchronous
-      rounds in numpy (``np.minimum.at`` over the edge list), and the
-      labels return as a local Arrow relation.
-    - **distributed** (larger graphs): each round is one groupBy-min over
-      the edge list, a shuffle on doc_id, never all-pairs; the new label
-      table is checkpointed every round with its changed? flag, and one
-      count over it is the convergence check. Without the per-round
-      checkpoint round N's plan chains N copies of the label join on top
-      of the full pair-generation expression tree, and Catalyst
-      re-analyzes that ever-growing tree each round (measured: 164 s of
-      driver-side planning vs ~5 s data time for an 8-round run whose
-      pair query carried 64-dim cosine folds).
+      pairs): :func:`_min_labels`, min-label rounds with pointer jumping
+      in numpy, whose round count does not follow the graph diameter
+      (measured: 15 rounds, 0.8 s, on a shuffled 1M-node chain; 3 rounds,
+      0.3 s, on sf1's part-supplier graph); the labels return as a local
+      Arrow relation.
+    - **distributed** (larger graphs): :func:`_star_labels`, the
+      alternating large-star / small-star algorithm of Kiveris et al.,
+      "Connected Components in MapReduce and Beyond" (SoCC 2014): O(log² n)
+      rounds at any diameter, each a few equi-joins and hash aggregates on
+      node id, checkpointed per round.
 
-    Both routes run the same rounds, so a graph whose diameter exceeds
-    ``max_iter`` raises the same ``RuntimeError`` on either, from the
-    driver.
+    Plain min-label rounds need one round per hop of graph diameter, so
+    neither route uses them: a chained duplication graph (A~B~…~Z with no
+    pair spanning the chain) would need one round per link.
 
     Crossover, measured on 4 cores over the distinct (part, supplier)
-    pairs of ``pagerank_part_supplier``'s lineitem, clustered with
-    ``max_iter=40`` (construct plus a noop write, medians of 6, 6 and 3
-    interleaved same-process reps after a warm-up; outputs identical
-    across routes). Peak RSS: one cold run per route in a fresh process,
-    read as the Python driver's ``ru_maxrss`` (143 MB on the distributed
-    route at every scale) and the Spark JVM's ``VmHWM``:
+    pairs of ``pagerank_part_supplier``'s lineitem (construct plus a noop
+    write, medians of 6, 6, 3 and 3 interleaved same-process reps;
+    outputs identical across routes). Peak RSS: one cold run per route in
+    a fresh process with a 6 GB driver heap, read as the Python driver's
+    ``ru_maxrss`` (141-142 MB on the distributed route at every scale)
+    and the Spark JVM's ``VmHWM``:
 
-    ======  ==========  =======  =======  ===========  =========  ==========
-    scale   edges       nodes    driver   distributed  Python     JVM drv /
-                                                       RSS (drv)  distrib.
-    ======  ==========  =======  =======  ===========  =========  ==========
-    sf0.01     103,462    2,100   0.60 s       2.28 s     163 MB  1.6/2.2 GB
-    sf0.1    1,181,946   21,000   2.57 s       7.24 s     264 MB  2.1/3.3 GB
-    sf1     11,819,460  201,000  26.51 s      72.10 s    1340 MB  5.1/5.9 GB
-    ======  ==========  =======  =======  ===========  =========  ==========
+    =======  ==========  =======  =======  ===========  =========  ==========
+    scale    pairs       nodes    driver   distributed  Python     JVM drv /
+                                                        RSS (drv)  distrib.
+    =======  ==========  =======  =======  ===========  =========  ==========
+    sf0.01       51,731    2,100   0.46 s       2.52 s     150 MB  0.8/1.5 GB
+    sf0.1       590,973   21,000   1.23 s       5.90 s     213 MB  1.0/2.2 GB
+    sf1       5,909,730  201,000   8.52 s      26.70 s     610 MB  3.0/4.7 GB
+    sf1 ×2   11,819,460  402,000  23.54 s      55.47 s    1078 MB  5.2/6.7 GB
+    =======  ==========  =======  =======  ===========  =========  ==========
 
-    Edges are directed (both orientations); sf1 is ``gen_sf1.py``. The
-    driver route wins at every measured size."""
+    sf1 is ``gen_sf1.py``; sf1 ×2 is two disjoint id-shifted copies of
+    it, exactly ``graph.DRIVER_MAX_EDGES`` pairs. The sf1 rows ran with
+    a 6 GB driver heap. The driver route wins at every measured size, up
+    to the bound."""
+    a, b = F.col(id1), F.col(id2)
     edges = (
-        pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
-        .union(pairs.select(F.col(id2).alias("a"), F.col(id1).alias("b")))
+        pairs.select(
+            F.greatest(a, b).alias("u"),
+            F.when(a.isNotNull() & b.isNotNull(), F.least(a, b)).alias("v"),
+        )
         .distinct()
         .localCheckpoint(eager=True)
     )
     table = collect_small_graph(edges, "dedup.dedup_clusters")
-    if table is not None:
-        t = edges.schema["a"].dataType
-        return edges.sparkSession.createDataFrame(
-            _min_labels(table, max_iter),
-            StructType([StructField("doc_id", t), StructField("cluster_id", t)]),
-        )
-    labels = (
-        edges.select(F.col("a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(
-                labels.withColumnRenamed("doc_id", "b"), "b"
-            )
-            .groupBy("a")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-            .withColumnRenamed("a", "doc_id")
-        )
-        # the changed? flag rides INSIDE the checkpointed row (label
-        # strictly decreases whenever it changes, so changed ⇔ the
-        # neighborhood min undercut the old label) — the convergence
-        # count is then a scan of the just-materialized tiny table
-        # instead of a new⋈old join job
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-                (
-                    F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-                    < F.col("cluster_id")
-                ).alias("__changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.filter(F.col("__changed")).count()
-        labels = new_labels.select("doc_id", "cluster_id")
-        if changed == 0:
-            return labels
-    _not_converged(max_iter)
-
-
-def _not_converged(max_iter: int) -> NoReturn:
-    # silently-wrong labels would let duplicates survive — fail loudly;
-    # chains longer than max_iter need a bigger budget (rounds = graph
-    # diameter; near-dup clusters are clique-ish, so hitting this means
-    # pathological chained drift)
-    raise RuntimeError(
-        f"dedup_clusters did not converge within max_iter={max_iter} "
-        "rounds (pair-graph diameter exceeds the budget); raise max_iter"
+    if table is None:
+        return _star_labels(edges)
+    t = edges.schema["u"].dataType
+    return edges.sparkSession.createDataFrame(
+        _min_labels(table),
+        StructType([StructField("doc_id", t), StructField("cluster_id", t)]),
     )
 
 
-def _min_labels(edges: pa.Table, max_iter: int) -> pa.Table:
+def _min_labels(edges: pa.Table) -> pa.Table:
     """Driver route of :func:`dedup_clusters`: (doc_id, cluster_id) from
-    the collected symmetric (a, b) edge table, by the distributed route's
-    synchronous rounds. Ids are coded in sorted order, so the minimum
-    code is the minimum id."""
-    a, b = edges["a"], edges["b"]
-    link = pc.and_(pc.is_valid(a), pc.is_valid(b))
-    # the edge list is symmetric: every non-NULL id is some row's ``a``
-    ids, la, lb = pc.drop_null(a), a.filter(link), b.filter(link)
-    n, m = len(ids), len(la)
+    the collected (u, v) pair table. Ids are coded in sorted order, so the
+    minimum code is the minimum id.
+
+    Each round every node takes the minimum label of its closed
+    neighborhood, each old label takes the minimum new label of its
+    members (the hook), and labels then follow labels to their roots
+    (pointer jumping, ``label = label[label]`` until stable). A label
+    never exceeds its node's code, so the labels form a forest rooted at
+    component minima, and a round that changes nothing leaves every node
+    on its component's root."""
+    u, v = edges["u"], edges["v"]
+    # a standalone node (its partner NULL) links to itself; only the
+    # all-NULL pair has a NULL u
+    node = pc.is_valid(u)
+    s, d = u.filter(node), pc.coalesce(v, u).filter(node)
+    m = len(s)
     codes, nodes = pd.factorize(
-        pd.concat([c.to_pandas() for c in (ids, la, lb)], ignore_index=True),
-        sort=True,
+        pd.concat([s.to_pandas(), d.to_pandas()], ignore_index=True), sort=True
     )
-    src, dst = codes[n : n + m], codes[n + m :]
+    src, dst = codes, np.concatenate([codes[m:], codes[:m]])
     label = np.arange(len(nodes))
-    for _ in range(max_iter):
+    while True:
         new = label.copy()
-        np.minimum.at(new, src, label[dst])
-        changed = (new < label).any()
-        label = new
-        if not changed:
+        np.minimum.at(new, src, label[dst])  # neighborhood minimum
+        np.minimum.at(new, label, new)  # hook
+        while not np.array_equal(hop := new[new], new):  # pointer jumping
+            new = hop
+        if np.array_equal(new, label):
             break
-    else:
-        _not_converged(max_iter)
-    doc = pa.array(nodes.to_numpy(), type=a.type)
+        label = new
+    doc = pa.array(nodes.to_numpy(), type=u.type)
     cluster = pc.take(doc, pa.array(label))
-    if a.null_count:  # a NULL id: its own node, with a NULL cluster
-        doc = pa.concat_arrays([doc, pa.nulls(1, a.type)])
-        cluster = pa.concat_arrays([cluster, pa.nulls(1, a.type)])
+    if v.null_count:  # a NULL id: its own node, with a NULL cluster
+        doc = pa.concat_arrays([doc, pa.nulls(1, u.type)])
+        cluster = pa.concat_arrays([cluster, pa.nulls(1, u.type)])
     return pa.table({"doc_id": doc, "cluster_id": cluster})
 
 
-def dedup_clusters_twostar(
-    pairs: DataFrame,
-    max_iter: int = 30,
-    id1: str = "doc1",
-    id2: str = "doc2",
-) -> DataFrame:
-    """Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond", Alternating algorithm) — same output contract as
-    ``dedup_clusters`` ((doc_id, cluster_id), cluster_id = minimum
-    reachable id), different round complexity: O(log² n) rounds in the
-    WORST case regardless of graph diameter, vs min-label propagation's
-    Θ(diameter).
+def _star_labels(edges: DataFrame) -> DataFrame:
+    """Distributed route of :func:`dedup_clusters` over the checkpointed
+    (u, v) pairs: alternating large-star / small-star rounds on the links
+    u > v.
 
-    Why both exist (the 100 TB split): near-dup clusters from
-    LSH/banded candidate generation are clique-ish — diameter 1-2, so
-    min-label converges in 2-3 rounds and its per-round work (one
-    groupBy-min over the edge list) is the cheaper shape; that is the
-    default everywhere. But CHAINED duplication graphs — drifting
-    boilerplate where A~B~C~…~Z and no pair spans the chain — have
-    diameter proportional to chain length, and min-label needs one
-    full edge-list shuffle PER HOP (a 10⁶-long chain = 10⁶ rounds:
-    effectively never terminates). Star operations contract such
-    chains geometrically: each round every node links toward the
-    minimum of a neighborhood that itself grows as prior rounds hang
-    subtrees under smaller nodes.
-
-    Per round: large-star (every node points its LARGER neighbors at
-    the minimum of its closed neighborhood — one groupBy-min over both
-    edge orientations + one join) then small-star (every node points
-    its SMALLER neighbors, and itself, at its minimum neighbor — one
-    groupBy-min over the larger-endpoint orientation + one join), edge
-    set deduplicated and lineage-truncated (localCheckpoint) per
-    round. Convergence is detected STRUCTURALLY in ONE bounded action
-    per round: the round's fixed points are exactly the star sets
-    (Kiveris et al.), and an edge set is a star set iff no node is
-    both a child and a parent AND no child has two parents — both
-    violations probed by a single union + isEmpty job. Checking
-    star-ness directly (instead of diffing against the previous
-    round's edge set) needs one action per round instead of three and
-    stops a full confirming round earlier on clique-ish graphs
-    (measured at sf0.1 on the MinHash pair graph: construct 8.4 →
-    ~5 s). At the fixed point the edge set IS the answer: stars rooted
-    at each component's minimum node (the u > v orientation invariant
-    plus connectivity preservation make each star's sink its
-    component's minimum). Never all-pairs, never a graph collect;
-    every stage is an equi-join or hash aggregate on node id.
-    """
-    e = (
-        pairs.select(
-            F.greatest(F.col(id1), F.col(id2)).alias("u"),
-            F.least(F.col(id1), F.col(id2)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if e.isEmpty():
-        return e.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
-    converged = False
-    for _ in range(max_iter):
-        # large-star: group every orientation; x's closed-neighborhood
-        # minimum m = least(x, min Γ(x)); larger neighbors y > x re-link
-        # to (y, m)
-        nbrs = e.select(F.col("u").alias("x"), F.col("v").alias("y")).union(
-            e.select(F.col("v").alias("x"), F.col("u").alias("y"))
-        )
-        mins = nbrs.groupBy("x").agg(F.min("y").alias("mn"))
-        m = F.least(F.col("x"), F.col("mn"))
+    Large-star: every node points its LARGER neighbors at the minimum of
+    its closed neighborhood (one groupBy-min over both orientations + one
+    join). Small-star: every node points its SMALLER neighbors, and
+    itself, at its minimum neighbor (one groupBy-min + one join). Each
+    round's edge set is deduplicated and checkpointed, so no round's plan
+    carries the earlier rounds or the pair generator. Its fixed points
+    are the star sets (no node is both a child and a parent, no child
+    has two parents), so one union + isEmpty job per round detects
+    convergence; the stars are then rooted at their component minima. A
+    node no star lists as a child (a root, a self-pair, NULL) labels
+    itself."""
+    e = edges.filter(F.col("u") != F.col("v"))
+    for _ in range(_STAR_MAX_ROUNDS):
+        nbrs = e.union(e.select("v", "u"))
         large = (
-            nbrs.join(mins, "x")
-            .filter(F.col("y") > F.col("x"))
-            .select(F.col("y").alias("u"), m.alias("v"))
+            nbrs.join(nbrs.groupBy("u").agg(F.min("v").alias("mn")), "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.least("u", "mn").alias("v"))
             .distinct()
         )
-        # small-star: edges already oriented u > v; u's minimum smaller
-        # neighbor mn re-links every smaller neighbor v (and u itself)
         smins = large.groupBy("u").agg(F.min("v").alias("mn"))
-        small = (
+        e = (
             large.join(smins, "u")
-            .select(F.col("v").alias("a"), F.col("mn").alias("b"))
-            .union(smins.select(F.col("u").alias("a"), F.col("mn").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .select(F.col("a").alias("u"), F.col("b").alias("v"))
+            .select("v", "mn")
+            .union(smins.select("u", "mn"))
+            .toDF("u", "v")
+            .filter(F.col("u") != F.col("v"))
             .distinct()
             .localCheckpoint(eager=True)
         )
-        e = small
-        # star check, one action: (a) a child (v) that is also a parent
-        # (u) means a chain remains; (b) a parent with two children rows
-        # under the same u is fine, but a CHILD u appearing with two
-        # parents (two rows sharing u) means an unresolved multi-parent
-        # node. Either violation -> not yet a star set.
-        child_is_parent = (
-            small.select(F.col("v").alias("n"))
-            .join(small.select(F.col("u").alias("n")), "n", "left_semi")
-            .select("n")
+        child_is_parent = e.select(F.col("v").alias("n")).join(
+            e.select(F.col("u").alias("n")), "n", "left_semi"
         )
-        multi_parent = (
-            small.groupBy("u")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") > 1)
-            .select(F.col("u").alias("n"))
-        )
-        if child_is_parent.union(multi_parent).isEmpty():
-            converged = True
+        multi_parent = e.groupBy(F.col("u").alias("n")).count().filter("count > 1")
+        if child_is_parent.union(multi_parent.select("n")).isEmpty():
             break
-    if not converged:
+    else:
         raise RuntimeError(
-            f"dedup_clusters_twostar did not converge within max_iter="
-            f"{max_iter} rounds — far beyond the O(log² n) bound for any "
-            "realistic n; raise max_iter"
+            f"dedup_clusters did not converge within {_STAR_MAX_ROUNDS} "
+            "two-star rounds"
         )
-    roots = e.select(F.col("v").alias("doc_id")).distinct().join(
-        e.select(F.col("u").alias("doc_id")).distinct(), "doc_id", "left_anti"
+    stars = e.toDF("doc_id", "cluster_id")
+    nodes = edges.select("u").union(edges.select("v")).distinct().toDF("doc_id")
+    return stars.union(
+        nodes.join(stars, "doc_id", "left_anti").select(
+            "doc_id", F.col("doc_id").alias("cluster_id")
+        )
     )
-    return e.select(
-        F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
-    ).union(roots.select("doc_id", F.col("doc_id").alias("cluster_id")))
 
 
 def dedup_keep_list(
-    docs: DataFrame,
-    pairs: DataFrame,
-    max_iter: int = 20,
-    id1: str = "doc1",
-    id2: str = "doc2",
-    algo: str = "label_prop",
+    docs: DataFrame, pairs: DataFrame, id1: str = "doc1", id2: str = "doc2"
 ) -> DataFrame:
     """Keep/drop decision per document from near-dup pairs: cluster the
-    pair graph, keep the minimum doc_id of each cluster, keep every
-    unpaired document. Returns (doc_id, cluster_id, keep) over ALL docs —
-    the materializable output a dedup job actually writes. ``id1``/``id2``
-    name the pair frame's id columns (``docs`` must carry ``doc_id``).
-    ``algo``: ``'label_prop'`` (default — Θ(diameter) rounds, cheapest
-    per round, right for clique-ish near-dup graphs) or ``'two_star'``
-    (``dedup_clusters_twostar`` — O(log² n) rounds regardless of
-    diameter, the shape for chained duplication graphs)."""
-    if algo == "two_star":
-        clusters = dedup_clusters_twostar(pairs, max_iter, id1=id1, id2=id2)
-    elif algo == "label_prop":
-        clusters = dedup_clusters(pairs, max_iter, id1=id1, id2=id2)
-    else:
-        raise ValueError(
-            f"algo must be 'label_prop' or 'two_star', got {algo!r}"
-        )
+    pair graph (:func:`dedup_clusters`), keep the minimum doc_id of each
+    cluster, keep every unpaired document. Returns (doc_id, cluster_id,
+    keep) over ALL docs — the materializable output a dedup job actually
+    writes. ``id1``/``id2`` name the pair frame's id columns (``docs``
+    must carry ``doc_id``)."""
+    clusters = dedup_clusters(pairs, id1=id1, id2=id2)
     return (
         docs.select("doc_id")
         .join(clusters, "doc_id", "left")

@@ -1059,7 +1059,6 @@ def semantic_dedup_keep(
     embeddings: DataFrame,
     pairs: DataFrame,
     id_col: str = "vec_id",
-    max_iter: int = 20,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) keep-list: cluster
     a near-dup pair graph into connected components and keep one
@@ -1074,16 +1073,13 @@ def semantic_dedup_keep(
     near-dup the blocking misses is a duplicate that survives dedup);
     several bands are the scale choice (289/400 planted pairs vs the
     8-bit block's 216/400 at ×4.6 its speed, bench_escalation.json).
-    Clustering is min-label propagation over the edge list (rounds =
-    cluster diameter, clique-ish in practice). Returns (vec_id,
-    cluster_id, keep) over ALL vectors — unpaired vectors keep
-    themselves."""
+    Clustering is ``dedup.dedup_clusters``: connected components in a
+    few rounds at any cluster diameter. Returns (vec_id, cluster_id,
+    keep) over ALL vectors — unpaired vectors keep themselves."""
     from market_flow_spark.extensions.dedup import dedup_keep_list
 
     ids = embeddings.select(F.col(id_col).alias("doc_id"))
-    keep = dedup_keep_list(
-        ids, pairs, max_iter=max_iter, id1="vec1", id2="vec2"
-    )
+    keep = dedup_keep_list(ids, pairs, id1="vec1", id2="vec2")
     return keep.select(
         F.col("doc_id").alias(id_col), "cluster_id", "keep"
     )

@@ -4,14 +4,16 @@ and the one bounded collect that routes every small graph to the driver.
 The reference has no graph surface; at 100 TB link-analysis ranks (domain
 authority for crawl prioritization, near-dup-cluster centrality) are a
 standard corpus-curation signal, and PageRank is the canonical iterative
-companion to the connected-components propagation in
+companion to the connected components of
 ``extensions.dedup.dedup_clusters``. Both operators take the same first
 step, :func:`collect_small_graph`: one collect, bounded at
 ``DRIVER_MAX_EDGES + 1`` rows, loads a small graph onto the driver, where
-every round runs in numpy in one thread; a larger graph keeps its
-distributed rounds (for PageRank: a keyed edge-list join plus one
+every round runs in numpy in one thread; a larger graph runs distributed
+rounds. For PageRank those are a keyed edge-list join plus one
 map-side-combined aggregate per round, with one eager ``localCheckpoint``
-of the final rank table).
+of the final rank table. For components the driver runs min-label rounds
+with pointer jumping, and the distributed route runs two-star rounds;
+neither needs one round per hop of graph diameter.
 
 Determinism (what makes an iterative float algorithm oracle-checkable):
 ranks live as 1e-9 **fixed-point BIGINTs**. Per-edge contributions use

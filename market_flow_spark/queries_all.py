@@ -19,9 +19,9 @@ standing rule — never-driver-certified first (six: this round's new
 registrations; every name registered before round 12 has carried a green
 driver row as of CORRECTNESS_r11), then oldest certification first:
   slots 1-6 (never certified, round-12 operators, alphabetical):
-    dedup_clusters_twostar (connected components by alternating
-    large-star/small-star — Kiveris et al. 2014, O(log² n) rounds
-    regardless of pair-graph diameter), gopher_quality (the Rae et
+    dedup_clusters_twostar (connected components over the MinHash
+    pair graph, registered on dedup_clusters_minhash's body, whose
+    distributed route is two-star), gopher_quality (the Rae et
     al. 2021 line/word-shape rules — bullet/ellipsis line ratios,
     alpha-word ratio, symbol ratio, stopword floor — one scan-fused
     projection), ngram_novelty (share of a doc's distinct 3-grams
@@ -103,11 +103,11 @@ _PRIORITY: list[str] = [
     "text_profile",
     "linear_forecast",
     # ---- rotating slots (35): never-driver-certified first -------------
-    # never certified (6, alphabetical): the round-12 two-star components
-    # algorithm, the Gopher line/word-shape quality rules, the n-gram
-    # novelty curation signal, the emission-routed SemDeDup entry, the
-    # per-doc token-entropy diversity gate, and the Zipf power-law
-    # corpus diagnostic
+    # never certified (6, alphabetical): the second name of the MinHash
+    # connected-components keep-list, the Gopher line/word-shape quality
+    # rules, the n-gram novelty curation signal, the emission-routed
+    # SemDeDup entry, the per-doc token-entropy diversity gate, and the
+    # Zipf power-law corpus diagnostic
     "dedup_clusters_twostar",
     "gopher_quality",
     "ngram_novelty",

@@ -2182,31 +2182,17 @@ FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
 @register("dedup_clusters_minhash", _clusters_oracle())
 def q_dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs → clusters → keep/drop list: connected components over the
-    MinHash near-dup pair graph (min-label propagation, one edge-list
-    shuffle per round, clique-ish clusters converge in 2-3 rounds), keeper
-    = minimum doc_id per cluster, unpaired docs kept. The materializable
+    MinHash near-dup pair graph (``dedup.dedup_clusters``), keeper =
+    minimum doc_id per cluster, unpaired docs kept. The materializable
     decision a dedup job actually writes — pairwise output alone
-    over-deletes chained near-dups (A~B, B~C)."""
+    over-deletes chained near-dups (A~B, B~C). Also registered as
+    ``dedup_clusters_twostar``."""
     docs = load_tables(spark, sf_dir)["documents"]
     pairs = dedup.minhash_lsh_pairs(docs, threshold=0.8)
     return dedup.dedup_keep_list(docs, pairs)
 
 
-@register("dedup_clusters_twostar", _clusters_oracle())
-def q_dedup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same pairs → clusters → keep/drop decision as
-    dedup_clusters_minhash, computed by ALTERNATING LARGE-STAR /
-    SMALL-STAR (Kiveris et al. 2014) instead of min-label propagation:
-    O(log² n) rounds regardless of pair-graph diameter, vs Θ(diameter).
-    Near-dup graphs are clique-ish so both converge fast here — this row
-    certifies that the log-round algorithm computes the identical
-    function on real data (shared recursive-CTE twin); the regime where
-    it is the ONLY viable shape (chained duplication, diameter ≫ round
-    budget: a 64-hop chain that min-label's default budget fails on) is
-    pinned by tests/test_twostar.py."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    pairs = dedup.minhash_lsh_pairs(docs, threshold=0.8)
-    return dedup.dedup_keep_list(docs, pairs, algo="two_star")
+register("dedup_clusters_twostar", _clusters_oracle())(q_dedup_clusters_minhash)
 
 
 def _repetition_oracle() -> str:

@@ -1,5 +1,6 @@
-"""Min-label connected components (``dedup.dedup_clusters``) on both
-routes of its size switch: the ``graph_route`` fixture forces the shared
+"""Connected components (``dedup.dedup_clusters``) on both routes of its
+size switch, min-label rounds with pointer jumping on the driver and
+two-star rounds distributed: the ``graph_route`` fixture forces the shared
 edge bound, so every property and every registered query that clusters a
 pair graph is checked once on the driver and once distributed."""
 
@@ -55,7 +56,7 @@ def test_clusters_match_union_find(spark, graph_route):
             {(a, b) for a, b in ((rng.randrange(60), rng.randrange(60)) for _ in range(50))}
         )
         pairs = spark.createDataFrame(edges, "doc1 long, doc2 long")
-        assert _labels(dedup_clusters(pairs, max_iter=40)) == _union_find(edges)
+        assert _labels(dedup_clusters(pairs)) == _union_find(edges)
 
 
 def test_clusters_string_ids_and_id_columns(spark, graph_route):
@@ -69,14 +70,17 @@ def test_clusters_string_ids_and_id_columns(spark, graph_route):
 
 def test_clusters_null_id_is_its_own_unlinked_node(spark, graph_route):
     """A NULL id links nothing: its partner keeps its own component and
-    the NULL node's cluster_id is NULL. Ids above 2**53 stay exact, so
-    the driver route must never read the nullable column as float64."""
+    the NULL node's cluster_id is NULL. A self-pair is a node labelled
+    itself. Ids above 2**53 stay exact, so the driver route must never
+    read the nullable column as float64."""
     big = 2**53 + 1
     pairs = spark.createDataFrame(
-        [(big + 1, big), (big + 2, None), (None, 7)], "doc1 long, doc2 long"
+        [(big + 1, big), (big + 2, None), (None, 7), (big + 3, big + 3)],
+        "doc1 long, doc2 long",
     )
     assert _labels(dedup_clusters(pairs)) == {
         big: big, big + 1: big, big + 2: big + 2, 7: 7, None: None,
+        big + 3: big + 3,
     }
 
 
@@ -86,18 +90,17 @@ def test_clusters_empty_pairs(spark, graph_route):
     assert out.collect() == []
 
 
-def test_clusters_raise_past_max_iter(spark, graph_route):
-    """The convergence contract on both routes: a 64-hop chain needs 64
-    rounds, so a 20-round budget raises on the driver; 64 rounds
-    suffice."""
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], "doc1 long, doc2 long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(chain, max_iter=20)
-    assert _labels(dedup_clusters(chain, max_iter=64)) == dict.fromkeys(
-        range(64), 0
-    )
+@pytest.mark.parametrize("order", ["sorted", "shuffled"])
+def test_clusters_long_chain(spark, graph_route, order):
+    """A 64-node chain (diameter 63, one round per hop for plain
+    min-label) converges with default arguments on both routes, whether
+    ids run along the chain or are shuffled across it."""
+    ids = list(range(64))
+    if order == "shuffled":
+        random.Random(7).shuffle(ids)
+    edges = list(zip(ids, ids[1:]))
+    chain = spark.createDataFrame(edges, "doc1 long, doc2 long")
+    assert _labels(dedup_clusters(chain)) == _union_find(edges)
 
 
 def test_clusters_log_their_route(spark, graph_route, caplog):
@@ -109,7 +112,7 @@ def test_clusters_log_their_route(spark, graph_route, caplog):
     ]
     assert rec.decision == {
         "operator": "dedup.dedup_clusters",
-        "stats": {"edges": 4},  # both orientations of each pair
+        "stats": {"edges": 2},  # one orientation per pair
         "threshold": graph.DRIVER_MAX_EDGES,
         "choice": graph_route,
     }

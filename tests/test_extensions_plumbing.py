@@ -399,8 +399,8 @@ def test_token_counts_edges(spark):
 def test_dedup_clusters_transitive_chain(spark):
     """A~B and B~C must land in ONE cluster labeled min(A,B,C), with only
     the minimum kept — pairwise keep-min-per-pair would wrongly keep C.
-    Also: a long chain (diameter > 2) converges within max_iter, and
-    unpaired docs keep themselves."""
+    Also: a longer chain (diameter 4) lands in one cluster, and unpaired
+    docs keep themselves."""
     from market_flow_spark.extensions.dedup import dedup_clusters, dedup_keep_list
 
     pairs = spark.createDataFrame(

@@ -1,43 +1,52 @@
 """Alternating large-star/small-star connected components (Kiveris et
-al. 2014): same (doc_id, cluster_id = min reachable) contract as the
-min-label propagation default, O(log^2 n) rounds regardless of pair-graph
-diameter — the shape for chained duplication graphs."""
+al. 2014), the distributed route of ``dedup.dedup_clusters``: the same
+(doc_id, cluster_id = min reachable) contract as the driver route's
+min-label rounds with pointer jumping, in O(log^2 n) rounds regardless of
+pair-graph diameter — the shape for chained duplication graphs."""
 
 from __future__ import annotations
 
 import random
 
-import pytest
-
-from market_flow_spark.extensions.dedup import (
-    dedup_clusters,
-    dedup_clusters_twostar,
-    dedup_keep_list,
-)
+from market_flow_spark.extensions.dedup import dedup_clusters
+from market_flow_spark.operators import graph
 
 
 def _labels(df):
     return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
 
 
-def test_twostar_long_chain_converges_where_label_prop_cannot(spark):
-    """The motivating regime: a 64-hop chain (diameter 63). Min-label
-    needs one round PER HOP so a 20-round budget fails loudly; two-star
-    contracts the chain geometrically and labels every node 0 within the
-    default budget."""
+# an edge bound that forces each route of ``graph.collect_small_graph``
+ROUTE_BOUNDS = {"one_task": 10**18, "distributed": -1}
+
+
+def _clusters_on(route, pairs, monkeypatch):
+    """``dedup_clusters`` forced onto one route of its size switch."""
+    with monkeypatch.context() as m:
+        m.setattr(graph, "DRIVER_MAX_EDGES", ROUTE_BOUNDS[route])
+        return _labels(dedup_clusters(pairs))
+
+
+def test_twostar_long_chain_converges_where_label_prop_cannot(
+    spark, monkeypatch
+):
+    """The motivating regime: a 64-hop chain (diameter 63), where plain
+    min-label would need one round per hop. Two-star contracts the chain
+    geometrically and labels every node 0 with default arguments, as the
+    driver route's pointer jumping does."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "doc1 long, doc2 long"
     )
-    got = _labels(dedup_clusters_twostar(chain))
-    assert got == {i: 0 for i in range(64)}
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(chain, max_iter=20)
+    want = dict.fromkeys(range(64), 0)
+    assert _clusters_on("distributed", chain, monkeypatch) == want
+    assert _clusters_on("one_task", chain, monkeypatch) == want
 
 
-def test_twostar_matches_label_prop_on_random_graphs(spark):
-    """Both algorithms compute the same function: sweep random sparse
-    pair graphs (mixed cliques, chains, isolated edges) and compare
-    against each other and a python union-find model."""
+def test_twostar_matches_label_prop_on_random_graphs(spark, monkeypatch):
+    """Both routes compute the same function: sweep random sparse pair
+    graphs (mixed cliques, chains, isolated edges) and compare two-star
+    against the driver's min-label rounds and a python union-find
+    model."""
     for seed in (3, 20260816):
         rng = random.Random(seed)
         n = 60
@@ -64,31 +73,13 @@ def test_twostar_matches_label_prop_on_random_graphs(spark):
                 parent[max(ra, rb)] = min(ra, rb)
         touched = {x for e in edges for x in e}
         want = {x: find(x) for x in touched}
-        got_ts = _labels(dedup_clusters_twostar(pairs))
-        got_lp = _labels(dedup_clusters(pairs, max_iter=40))
+        got_ts = _clusters_on("distributed", pairs, monkeypatch)
+        got_lp = _clusters_on("one_task", pairs, monkeypatch)
         assert got_ts == want, f"seed {seed}: two-star diverges from model"
         assert got_lp == want, f"seed {seed}: label-prop diverges from model"
 
 
-def test_keep_list_algo_switch(spark):
-    """dedup_keep_list(algo='two_star') returns the identical keep/drop
-    frame as the default on the same pairs, and rejects unknown algos."""
-    docs = spark.createDataFrame(
-        [(i,) for i in range(8)], "doc_id long"
-    )
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (5, 6)], "doc1 long, doc2 long"
-    )
-    a = sorted(map(tuple, dedup_keep_list(docs, pairs).collect()))
-    b = sorted(
-        map(tuple, dedup_keep_list(docs, pairs, algo="two_star").collect())
-    )
-    assert a == b
-    assert {t[0] for t in a} == set(range(8))
-    with pytest.raises(ValueError, match="algo"):
-        dedup_keep_list(docs, pairs, algo="bogus")
-
-
-def test_twostar_empty_pairs(spark):
+def test_twostar_empty_pairs(spark, monkeypatch):
     empty = spark.createDataFrame([], "doc1 long, doc2 long")
-    assert dedup_clusters_twostar(empty).count() == 0
+    assert _clusters_on("distributed", empty, monkeypatch) == {}
+
