@@ -4,15 +4,17 @@
 SF_DIR ?= /root/testdata/sf0.001
 WAREHOUSE ?= /tmp/mfs-warehouse
 
-.PHONY: test test-sf01 bench pipeline quality smoke
+.PHONY: test parity bench pipeline quality smoke
 
 # tier-1: the full suite on every CPU this process may use, inside its timeout
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
-test-sf01:
-	SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
+# every registered query against its DuckDB twin over $(SF_DIR), e.g.
+# `make parity SF_DIR=<dir holding the sf0.1 parquet tables>`
+parity:
+	SPARK_GRAFT_TEST_SF_DIR=$(SF_DIR) python -m pytest tests/test_oracle_parity.py -q
 
 bench:
 	python bench.py

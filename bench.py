@@ -175,9 +175,8 @@ def main() -> None:
         spark.stop()
         return
 
-    # --- word-jaccard strategy A/B + dedup-ladder scaling curve ----------
-    # Both physical shapes of the unigram tier are timed head-to-head, and
-    # the four dedup tiers + ngram contamination run at 1/4, 1/2 and full
+    # --- dedup-ladder scaling curve -------------------------------------
+    # The four dedup tiers + ngram contamination run at 1/4, 1/2 and full
     # corpus so rows-vs-wall-time backs the near-linearity claims with data
     # (one cold pass discarded per plan, steady = min of two warm passes).
     from pyspark.sql import functions as F  # noqa: E402
@@ -191,72 +190,11 @@ def main() -> None:
         run(df)  # cold: construction + codegen, discarded
         return min(run(df), run(df))
 
-    strategies = {
-        strat: steady(dedup.word_jaccard_pairs(docs, threshold=0.7, strategy=strat))
-        for strat in ("count_common", "freq_ordered")
-    }
-
-    # freq_ordered showcase (round-7 sizing): the bench corpus is
-    # saturated-vocab (count_common's home turf), so build the OTHER shape —
-    # sparse per-doc vocabularies sharing a handful of ubiquitous stop
-    # tokens. count_common's inverted-index join must emit
-    # ~|stop| * N^2/2 rows (every doc pair meets on every stop word) while
-    # the rarest-first prefix (len = floor(0.3*25)+1 = 8 <= 15 unique
-    # tokens) keeps stop words out of the index entirely. The round-6
-    # fixture derived N from the sf corpus (~2.5 k docs), where the
-    # quadratic term (10*2.5k^2/2 = 3e7 rows) is still sub-second on 32
-    # cores and the comparison was box noise; at the fixed N=10 000 here
-    # the emission is 5e8 rows and the asymmetry is unmistakable (measured
-    # round-7: count_common 46.6 s vs freq_ordered 1.5 s, min-of-2 — the
-    # fixture choose_word_jaccard_strategy's top_share>2% branch exists
-    # for; the recorded selector choice proves it picks freq_ordered here
-    # without being told). count_common is timed with ONE pass: a 30x gap
-    # needs no steady-state repeats, and repeats would add minutes.
-    stop_words = "the of and to in a is it for on"  # 10 ubiquitous tokens
-    sw_docs = spark.range(10_000).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.expr(
-                "concat_ws(' ', transform(sequence(1, 15),"
-                " i -> concat('tok', id, 'x', i)))"
-            ),
-            F.lit(stop_words),
-        ).alias("text"),
-    )
-    # the measurement basis differs per side (count_common: one cold pass,
-    # freq_ordered: min-of-2 warm) — record it in the JSON so the 30x ratio
-    # is read against the bases that produced it, not assumed like-for-like
-    stopword_strategies = {
-        "count_common": {
-            "sec": run(
-                dedup.word_jaccard_pairs(
-                    sw_docs, threshold=0.7, strategy="count_common"
-                )
-            ),
-            "basis": "single_cold",
-        },
-        "freq_ordered": {
-            "sec": steady(
-                dedup.word_jaccard_pairs(
-                    sw_docs, threshold=0.7, strategy="freq_ordered"
-                )
-            ),
-            "basis": "min_of_2_warm",
-        },
-    }
-    stopword_strategies["selector_choice"] = dedup.choose_word_jaccard_strategy(
-        sw_docs
-    )
-    stopword_strategies["bench_corpus_selector_choice"] = (
-        dedup.choose_word_jaccard_strategy(docs)
-    )
-
     half = docs.filter(F.col("doc_id") % 2 == 0)
     tiers = {
         "dedup_exact": lambda d: dedup.exact_dedup_annotated(d),
-        "dedup_word_jaccard": lambda d: dedup.word_jaccard_pairs(d, threshold=0.7),
-        "dedup_ngram_jaccard": lambda d: dedup.ngram_jaccard_pairs(d, threshold=0.8),
+        "dedup_word_jaccard": lambda d: dedup.jaccard_pairs(d, 0.7),
+        "dedup_ngram_jaccard": lambda d: dedup.jaccard_pairs(d, 0.8, n=3),
         "dedup_minhash_lsh": lambda d: dedup.minhash_lsh_pairs(d, threshold=0.8),
         "contamination_ngram": lambda d: dedup.ngram_contamination(
             d.filter(F.col("doc_id") % 10 != 0),
@@ -822,8 +760,6 @@ def main() -> None:
         "warm_spread_max_over_min": warm_spread,
         "warm_total": round(sum(warm.values()), 3),
         "warm_total_min": round(sum(warm_min.values()), 3),
-        "word_jaccard_strategies": strategies,
-        "word_jaccard_stopword_fixture": stopword_strategies,
         "scaling": scaling,
         "library_ops": library_ops,
         "contamination_bloom_ab": contamination_ab,

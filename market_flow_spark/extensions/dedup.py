@@ -4,11 +4,12 @@ Four tiers, cheapest first — the standard LLM-training-data dedup ladder:
 
 1. **Exact** — hash-groupBy on a normalized fingerprint. One shuffle on the
    hash; at 100 TB this is a plain aggregate, no driver state.
-2. **Word-level / n-gram Jaccard** — prefix-filtered inverted-index
-   self-join (SSJoin/AllPairs): only the first ⌊(1-t)·n⌋+1 elements of each
-   sorted shingle set enter the index, and survivors are verified in-row
-   with `array_intersect`. Exact pairwise similarity; the oracle for the
-   approximate tiers.
+2. **Word-level / n-gram Jaccard** — `jaccard_pairs`: one exact operator
+   over word or shingle sets, as an inverted-index self-join (full, or
+   prefix-filtered over rarest-first order as in All-Pairs/PPJoin) or as
+   bitset algebra for tiny vocabularies, the shape picked from a bounded
+   sample. Exact pairwise similarity; the oracle for the approximate
+   tiers.
 3. **MinHash + LSH** — md5-based minhash signatures, banded so candidate
    pairs come from equi-joins on band hashes (shuffle on band key, never a
    cross join). The 100 TB path. md5 is used (not xxhash) so the DuckDB
@@ -21,6 +22,9 @@ All tiers are pure DataFrame ops — explode/groupBy/join — no UDFs.
 """
 
 from __future__ import annotations
+
+import math
+from fractions import Fraction
 
 import numpy as np
 import pandas as pd
@@ -104,22 +108,19 @@ def doc_shingle_arrays(
     # conditions above and pushes that filter below the repartition — i.e.
     # it re-evaluates the full shingle build, serially, at the scan, just
     # to test for null. Non-nullable inputs generate no such constraint.
-    # The empty-string guard drops the [""] artifact split() produces for
-    # NULL/empty/whitespace-only text: without it every null doc carries
-    # the single-element [""] unigram set and pairs with every other null
-    # doc at jaccard 1.0 — O(N²) pairs for N null docs. Guarded docs have
-    # sz=0, emit no index rows, and join nothing. split() on a non-empty
-    # TRIMMED string never yields interior empties ('\s+' collapses runs),
-    # so one per-doc comparison covers it — no per-token lambda.
+    # Word sets drop the "" tokens split() yields for NULL/empty text and
+    # at a leading or trailing tab or newline (trim() strips only spaces),
+    # as the DuckDB twins' `word <> ''` does: a NULL or whitespace-only
+    # doc has sz=0, emits no index rows and joins nothing, instead of
+    # carrying [""] and pairing with every other such doc at jaccard 1.0
+    # (O(N²) pairs). Shingles keep them, as the shingle twin does; a NULL
+    # or empty doc's [""] is shorter than any n ≥ 2.
     norm = F.trim(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     toked = _spread(docs, "doc_id").select(
-        "doc_id",
-        F.when(norm == "", F.array().cast("array<string>"))
-        .otherwise(F.split(norm, r"\s+"))
-        .alias("toks"),
+        "doc_id", F.split(norm, r"\s+").alias("toks")
     )
     if n == 1:
-        sh = F.col("toks")
+        sh = F.array_remove("toks", "")
     else:
         parts = ", ".join(f"toks[i+{j}]" for j in range(n))
         sh = F.expr(
@@ -150,124 +151,90 @@ def doc_shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFra
 
 
 def _threshold_ratio(threshold: float) -> tuple[int, int]:
-    """threshold as a rational num/den with BOTH guarantees the prefix
-    filter needs: num/den <= the float threshold (a larger rational could
-    shorten the prefix past a qualifying pair — under-estimating only ever
-    lengthens it, which is safe because the verifier applies the exact
-    threshold), and den bounded at 1e6 so sz*num stays far inside int64
-    (the exact binary Fraction of a float has a ~2^53 denominator, which
-    would overflow the SQL-side product). floor() is computed in Fraction
-    arithmetic, so no float rounding can push the numerator above the
-    exact value."""
-    import math
-    from fractions import Fraction
+    """The threshold the length and prefix filters use, as a rational
+    num/den at or below ``threshold − 5·10⁻⁵``.
 
+    The verifiers keep a pair when ``det_round(J, 4) >= threshold``, so a
+    pair with J in [t − 5·10⁻⁵, t) qualifies: its Jaccard rounds up to t.
+    The filters must not drop it, so they run half a rounding step below
+    t; the verifier still applies the exact rule. den is bounded at 1e6 so
+    sz·num stays far inside int64 (the exact binary Fraction of a float
+    has a ~2^53 denominator), and floor() runs in Fraction arithmetic, so
+    no float rounding can push the numerator up."""
     den = 1_000_000
-    num = math.floor(Fraction(threshold) * den)
+    num = math.floor((Fraction(threshold) - Fraction(1, 20_000)) * den)
     return max(num, 0), den
 
 
-def _count_common_pairs(arrs: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard pairs via the count-common shape: full inverted-index
-    self-join → per-pair match count (map-side combine) → algebraic
-    Jaccard. No array payload ever leaves the index rows, and the set
-    sizes ride along as grouping keys, so the whole tier is one equi-join
-    plus one hash aggregate.
-
-    The right shape when pair density is HIGH (many pairs genuinely
-    qualify): the index join's emission is then proportional to the
-    output, and the array-verify tier's per-pair array copies dominate.
-    On sparse corpora with stop-word posting lists, prefer the
-    prefix-filtered tier (bounded index emission)."""
+def _length_ok(n1: Column, n2: Column, threshold: float) -> Column:
+    """The length filter: J ≥ t needs min(n1, n2) ≥ t·max(n1, n2). In
+    BIGINT (sz·num overflows INT32 for sz ≳ 2000), with the same rational
+    as the prefix, so filter and prefix agree on which sizes qualify."""
     num, den = _threshold_ratio(threshold)
-    w = arrs.select("doc_id", "sz", F.explode("sh").alias("word"))
-    a, b = w.alias("a"), w.alias("b")
-    g = (
-        a.join(b, F.col("a.word") == F.col("b.word"))
-        .filter(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (
-                F.col("a.sz").cast("bigint") * den
-                >= F.col("b.sz").cast("bigint") * num
-            )
-            & (
-                F.col("b.sz").cast("bigint") * den
-                >= F.col("a.sz").cast("bigint") * num
-            )
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc1"),
-            F.col("b.doc_id").alias("doc2"),
-            F.col("a.sz").alias("n1"),
-            F.col("b.sz").alias("n2"),
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return (
-        g.withColumn(
-            "jaccard",
-            det_round(
-                F.col("common") / (F.col("n1") + F.col("n2") - F.col("common")), 4
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc1", "doc2", "jaccard")
-    )
+    n1, n2 = n1.cast("bigint"), n2.cast("bigint")
+    return (n1 * den >= n2 * num) & (n2 * den >= n1 * num)
 
 
-def _prefix_candidates(arrs: DataFrame, threshold: float) -> DataFrame:
-    """Candidate (doc1, doc2) pairs via **prefix filtering** (SSJoin /
-    AllPairs): under any global element order, two sets with Jaccard ≥ t
-    must share an element within their first ``⌊(1-t)·|set|⌋ + 1`` elements
-    — so only that prefix enters the inverted-index self-join, shrinking
-    posting lists (and the candidate count, quadratically) by ~(1-t)².
-    A length filter (min size ≥ t · max size, necessary for J ≥ t) prunes
-    further. Exactness is untouched: every qualifying pair provably
-    survives, and the verifier computes exact Jaccard.
-
-    ceil(sz·t) is computed in exact integer arithmetic (t as a rational
-    num/den, ceil(a/b) = -((-a) div b)): double rounding could shorten the
-    prefix by one element for unlucky (sz, t) and silently drop qualifying
-    pairs from a tier documented as exact."""
-    # the rational approximation must never exceed the float threshold the
-    # verifier uses, or the prefix could be one element too short for
-    # borderline pairs — _threshold_ratio guarantees num/den <= threshold.
+def _prefix(arrs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_id, sz, word) for the first ``sz − ⌈sz·t⌉ + 1`` elements of
+    each set (SSJoin / All-Pairs): under any global element order, two
+    sets with Jaccard ≥ t share an element within those prefixes, so only
+    the prefixes need to enter an inverted index. ⌈sz·t⌉ is exact integer
+    arithmetic (⌈a/b⌉ = −((−a) div b)); double rounding could shorten the
+    prefix by one element and drop a qualifying pair."""
     num, den = _threshold_ratio(threshold)
-    # all arithmetic in BIGINT: sz can be 1e5+ and num up to ~1e6, so the
-    # product overflows INT32 (a runtime error under ANSI mode, a silently
-    # negative prefix length otherwise).
     pref_len = F.expr(
         f"CAST(sz - (-((-CAST(sz AS BIGINT) * {num}) div {den})) + 1 AS INT)"
     )
-    pref = arrs.select(
+    return arrs.select(
         "doc_id", "sz", F.explode(F.slice("sh", F.lit(1), pref_len)).alias("word")
     )
-    # Self-join via ALIASES of the identical subtree (not two renamed
-    # projections): both sides canonicalize to the same plan, so the
-    # shuffle on `word` is built once and the other side is a
-    # ReusedExchange — the corpus-sized shingle build + prefix explode
-    # runs ONCE instead of twice. Length filter in the same exact integer
-    # arithmetic as the prefix (n1 >= n2*t ⇔ n1*den >= n2*num), so filter
-    # and prefix agree on exactly which (n1, n2) combinations qualify.
-    p1, p2 = pref.alias("p1"), pref.alias("p2")
-    return (
-        p1.join(p2, F.col("p1.word") == F.col("p2.word"))
-        .filter(
-            (F.col("p1.doc_id") < F.col("p2.doc_id"))
-            & (
-                F.col("p1.sz").cast("bigint") * den
-                >= F.col("p2.sz").cast("bigint") * num
-            )
-            & (
-                F.col("p2.sz").cast("bigint") * den
-                >= F.col("p1.sz").cast("bigint") * num
-            )
-        )
-        .select(
-            F.col("p1.doc_id").alias("doc1"), F.col("p2.doc_id").alias("doc2")
-        )
-        .distinct()
+
+
+def _index_join(index: DataFrame, threshold: float) -> DataFrame:
+    """(doc1, doc2, n1, n2) for every word two length-compatible documents
+    share in an inverted index of (doc_id, sz, word) rows.
+
+    The self-join runs over ALIASES of the identical subtree (not two
+    renamed projections): both sides canonicalize to the same plan, so
+    the shuffle on ``word`` is built once and the other side is a
+    ReusedExchange — the corpus-sized shingle build runs once."""
+    a, b = index.alias("a"), index.alias("b")
+    return a.join(b, F.col("a.word") == F.col("b.word")).select(
+        F.col("a.doc_id").alias("doc1"),
+        F.col("b.doc_id").alias("doc2"),
+        F.col("a.sz").alias("n1"),
+        F.col("b.sz").alias("n2"),
+    ).filter(
+        (F.col("doc1") < F.col("doc2"))
+        & _length_ok(F.col("n1"), F.col("n2"), threshold)
     )
+
+
+def _jaccard_at_least(counts: DataFrame, threshold: float) -> DataFrame:
+    """(doc1, doc2, jaccard) from (doc1, doc2, n1, n2, common): the
+    4-digit ``det_round`` Jaccard, kept at ≥ threshold (the DuckDB twins'
+    rule)."""
+    j = F.col("common") / (F.col("n1") + F.col("n2") - F.col("common"))
+    return counts.select("doc1", "doc2", det_round(j, 4).alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
+
+def _count_common_pairs(arrs: DataFrame, threshold: float) -> DataFrame:
+    """The count-common shape: full inverted-index self-join → per-pair
+    match count (map-side combine) → algebraic Jaccard. No array payload
+    leaves the index rows, and the set sizes ride along as grouping keys,
+    so the whole shape is one equi-join plus one hash aggregate. Its cost
+    is the index join's emission Σ df(w)², which tracks the output when
+    pairs are dense or posting lists short."""
+    index = arrs.select("doc_id", "sz", F.explode("sh").alias("word"))
+    counts = (
+        _index_join(index, threshold)
+        .groupBy("doc1", "doc2", "n1", "n2")
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    return _jaccard_at_least(counts, threshold)
 
 
 def _verify_jaccard(pairs: DataFrame, arrs: DataFrame, threshold: float) -> DataFrame:
@@ -279,30 +246,25 @@ def _verify_jaccard(pairs: DataFrame, arrs: DataFrame, threshold: float) -> Data
     # exchange (or broadcast) of the shingle-array table is built once and
     # reused for the second side — one corpus pass, not two.
     a1, a2 = arrs.alias("a1"), arrs.alias("a2")
-    common = F.size(F.array_intersect("a1.sh", "a2.sh"))
-    return (
+    counts = (
         pairs.join(a1, F.col("doc1") == F.col("a1.doc_id"))
         .join(a2, F.col("doc2") == F.col("a2.doc_id"))
-        .withColumn("common", common)
-        .withColumn(
-            "jaccard",
-            det_round(
-                F.col("common")
-                / (F.col("a1.sz") + F.col("a2.sz") - F.col("common")),
-                4,
-            ),
+        .select(
+            "doc1",
+            "doc2",
+            F.col("a1.sz").alias("n1"),
+            F.col("a2.sz").alias("n2"),
+            F.size(F.array_intersect("a1.sh", "a2.sh")).alias("common"),
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc1", "doc2", "jaccard")
     )
+    return _jaccard_at_least(counts, threshold)
 
 
-def _bitmask_pairs(
-    arrs: DataFrame,
-    threshold: float,
-    vocab_limit: int = 64,
-    max_masks: int = 32768,
-) -> DataFrame | None:
+# One BIGINT mask holds one bit per word of a vocabulary this size.
+_BITMASK_VOCAB = 64
+
+
+def _bitmask_pairs(arrs: DataFrame, threshold: float) -> DataFrame | None:
     """Exact Jaccard pairs for SATURATED-vocabulary corpora via bitset
     algebra: when the corpus's entire distinct-token universe fits one
     64-bit word, every document's word set packs into a single BIGINT and
@@ -310,29 +272,27 @@ def _bitmask_pairs(
     arithmetic, no inverted index, no corpus-sized shuffle.
 
     Plan shape: one scan builds (doc_id, mask); the DISTINCT masks (M ≤
-    doc count, typically far fewer under a tiny vocabulary) cross-compare
-    M²/2 candidate set pairs with bit arithmetic — a bounded
+    doc count, typically far fewer under a tiny vocabulary) compare
+    M²/2 set pairs, equal masks included, with bit arithmetic — a bounded
     BroadcastNestedLoopJoin over a table of single longs, guarded by
-    ``max_masks`` (M² ≤ ~5·10⁸ comparisons at the default) — and two
+    ``max_masks`` (M² ≤ ~5·10⁸ comparisons) — and two
     equi-joins on the mask expand qualifying set pairs back to doc pairs,
-    emitting exactly the output. Identical-mask doc pairs (Jaccard 1.0
-    ⇔ equal sets) come from one equi-self-join on the mask. Total cost
-    tracks corpus size + output size, vs the inverted-index join's
-    Σ df(w)² emission (measured at sf0.1: 0.52 s vs count_common's
-    3.4 s on the 31-token bench corpus).
+    emitting exactly the output. Total cost tracks corpus size + output
+    size, vs the inverted-index join's Σ df(w)² emission.
 
-    Returns None when the corpus doesn't qualify (vocabulary exceeds
-    ``vocab_limit`` or M exceeds ``max_masks``) — the caller falls back
-    to count_common. Both probes are bounded: the vocabulary check
-    collects at most vocab_limit+1 rows, the mask count is one aggregate
-    over the mask table."""
+    Returns None when the corpus doesn't qualify (vocabulary empty or
+    over ``_BITMASK_VOCAB``, or M over ``max_masks``) — the caller falls
+    back to count_common. Both probes are bounded: the vocabulary check
+    collects at most _BITMASK_VOCAB+1 rows, the mask count is one
+    aggregate over the mask table."""
+    max_masks = 32768
     vocab_rows = (
         arrs.select(F.explode("sh").alias("word"))
         .distinct()
-        .limit(vocab_limit + 1)
+        .limit(_BITMASK_VOCAB + 1)
         .collect()
     )
-    if len(vocab_rows) > vocab_limit:
+    if not 0 < len(vocab_rows) <= _BITMASK_VOCAB:
         return None
     vocab = sorted(r["word"] for r in vocab_rows)
     # word → its bit VALUE (1 << i) as a signed long literal; bit 63 is the
@@ -361,7 +321,7 @@ def _bitmask_pairs(
     union = F.bit_count(F.col("m1.mask").bitwiseOR(F.col("m2.mask")))
     set_pairs = (
         m1.crossJoin(m2)
-        .filter(F.col("m1.mask") < F.col("m2.mask"))
+        .filter(F.col("m1.mask") <= F.col("m2.mask"))
         .withColumn("jaccard", det_round(inter / union, 4))
         .filter(F.col("jaccard") >= threshold)
         .select(
@@ -372,31 +332,18 @@ def _bitmask_pairs(
     )
     d1 = docs_m.select(F.col("doc_id").alias("da"), F.col("mask").alias("mask1"))
     d2 = docs_m.select(F.col("doc_id").alias("db"), F.col("mask").alias("mask2"))
-    cross = (
+    return (
         set_pairs.join(d1, "mask1")
         .join(d2, "mask2")
+        # an equal-mask set pair expands to every ordered doc pair of its
+        # group, itself included: keep each unordered pair once
+        .filter((F.col("mask1") != F.col("mask2")) | (F.col("da") < F.col("db")))
         .select(
             F.least("da", "db").alias("doc1"),
             F.greatest("da", "db").alias("doc2"),
             "jaccard",
         )
     )
-    e1, e2 = docs_m.alias("e1"), docs_m.alias("e2")
-    same = (
-        e1.join(e2, F.col("e1.mask") == F.col("e2.mask"))
-        # equal sets ⇔ Jaccard exactly 1.0; the constant guard keeps the
-        # degenerate threshold > 1 case consistent with count_common
-        .filter(
-            (F.col("e1.doc_id") < F.col("e2.doc_id"))
-            & (F.lit(1.0) >= F.lit(float(threshold)))
-        )
-        .select(
-            F.col("e1.doc_id").alias("doc1"),
-            F.col("e2.doc_id").alias("doc2"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(same)
 
 
 def freq_ordered_arrays(arrs: DataFrame) -> DataFrame:
@@ -424,347 +371,101 @@ def freq_ordered_arrays(arrs: DataFrame) -> DataFrame:
     )
 
 
-def estimate_index_emission(
-    arrs: DataFrame, n_full: int, n_sample: int
-) -> float:
-    """Scale a SAMPLE's inverted-index join emission Σ df(w)² to the full
-    corpus: under frequency stationarity (a word's document share is the
-    same in the sample as in the corpus), df_full ≈ df_sample · (N/n), so
-    Σ df_full² ≈ (N/n)² · Σ df_sample². ``arrs`` is the sampled
-    (doc_id, sh) frame whose exploded elements feed the index — pass the
-    full arrays for the count-common shape, the sliced prefixes for the
-    prefix-filtered shape. One sample-bounded aggregate."""
-    row = (
-        arrs.select(F.explode("sh").alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(F.sum(F.col("df") * F.col("df")).alias("sum_df2"))
-        .first()
-    )
-    scale = (n_full / n_sample) ** 2 if n_sample else 1.0
-    return float(row["sum_df2"] or 0) * scale
-
-
-# Documented routing threshold for the exact unigram tier (candidate rows
-# the inverted-index join must materialize). Measured throughput on the
-# 32-core bench box is ~33 M candidate rows/s (Σdf² = 4.55e9 → 138.7 s at
-# sf1), so 1e10 ≈ 5 minutes of pure emission on one box — and because the
-# emission grows quadratically with corpus size, any 100 TB-scale input
-# lands many orders of magnitude above it. Below the cap the exact tier is
-# measured-fast at every tested scale (sf0.1: 4.5e8 → 1.8 s).
-WORD_JACCARD_MAX_EMISSION = 1e10
-
-# The routed (LSH-prefilter) shape always runs with the degenerate-bucket
-# guard ON: a band bucket holding k near-identical documents emits k²
-# candidate rows before any screen can help, and the corpora that get
-# ROUTED here are precisely those with heavy sharing (measured: the
-# uncapped unigram tier spent 28 s at sf0.1 on band buckets thousands
-# deep — 17× the exact tier it was meant to relieve; capped it runs the
-# same job in ~1.5 s). 64 bounds per-bucket emission at 64² = 4 096 rows;
-# mutual near-dup clusters bigger than that belong to the exact-dedup
-# (fingerprint) tier upstream, per the minhash_lsh_pairs contract.
+# The degenerate-bucket guard of dedup_word_jaccard_routed, the
+# MinHash-LSH candidate tier over word sets: a band bucket holding k
+# near-identical documents emits k² candidate rows before any screen can
+# help (measured: uncapped, the unigram LSH tier spent 28 s at sf0.1 on
+# band buckets thousands deep; capped it runs the same job in ~1.5 s). 64
+# bounds per-bucket emission at 64² = 4 096 rows; mutual near-dup clusters
+# bigger than that belong to the exact-dedup (fingerprint) tier upstream,
+# per the minhash_lsh_pairs contract.
 WORD_JACCARD_LSH_BAND_CAP = 64
 
 # A sampled top-token share above this marks a stop-word corpus, which
-# the freq_ordered prefix filter keeps out of the inverted index.
+# the rarest-first prefix filter keeps out of the inverted index.
 WORD_JACCARD_STOPWORD_SHARE = 0.02
 
 
-def choose_word_jaccard_strategy(
-    docs: DataFrame,
-    text_col: str = "text",
-    sample_docs: int = 2048,
-    threshold: float = 0.7,
-    max_emission: float | None = WORD_JACCARD_MAX_EMISSION,
-    n_full: int | None = None,
-) -> str:
-    """Cost-based strategy pick for the unigram tier, from a BOUNDED sample.
+def _jaccard_shape(docs: DataFrame, n: int, text_col: str) -> str:
+    """The physical shape of :func:`jaccard_pairs`, from the shingle sets
+    of a bounded sample of 2048 documents. The sets come to the driver in
+    one Arrow collect and pyarrow counts them: on 4 cores that took
+    0.21–0.31 s against 0.34–0.60 s for the same stats as two Spark
+    aggregates. The picks:
 
-    The count-common shape's cost is the inverted-index join emission
-    Σ df(w)² — quadratic in the heaviest posting list. On a bounded sample
-    of documents, the share p of docs containing the most common token
-    estimates that heaviest list; its emission alone is (p·N)² pairs, which
-    is superlinear in N whenever p is corpus-fraction-scale (stop words).
-    So: a stop-word-grade top token → 'freq_ordered' (prefix filter keeps
-    such tokens out of the index); an effectively disjoint vocabulary
-    (dense near-dup clusters, synthetic IDs) → 'count_common', whose
-    emission then tracks the qualifying-pair count and skips the extra
-    vocabulary aggregate + re-group freq-ordering costs.
+    - ``'bitmask'`` when the sampled vocabulary fits one 64-bit word
+      (``_bitmask_pairs`` re-checks the FULL vocabulary and falls back to
+      count_common when the sample under-counted);
+    - ``'count_common'`` when the vocabulary is saturated (fewer distinct
+      tokens than half the sampled documents: the qualifying-pair output
+      is itself dense, so no candidate generation can emit much less) or
+      no token is stop-word-grade (top share ≤
+      ``WORD_JACCARD_STOPWORD_SHARE``: posting lists stay short);
+    - ``'freq_ordered'`` otherwise: stop-word skew would make the full
+      index join quadratic, and the rarest-first prefix keeps those
+      tokens out of the index.
 
-    The second signal is vocabulary saturation: when the distinct-token
-    universe is small relative to the document count (every doc drawn from
-    the same few hundred tokens), the QUALIFYING-PAIR OUTPUT is itself
-    dense — no candidate generation can emit fewer rows than the output,
-    so freq-ordering's extra vocabulary aggregate + array-payload verify
-    join is pure overhead and count-common (whose emission then tracks the
-    output) wins regardless of posting-list length. Measured on the bench
-    corpus (31 tokens / 500 docs, 41% of all pairs qualifying):
-    count_common 1.26 s vs freq_ordered 4.30 s.
-
-    One small Spark job over ≤ sample_docs documents — negligible next to
-    the dedup itself, and the 100 TB-safe choice is the fallback on any
-    ambiguity.
-
-    Measured asymmetry of the freq_ordered pick (round-7, sparse corpora
-    of 15 unique + 10 shared stop tokens per doc, 32 cores): at 2 500 docs
-    the two strategies tie within box noise (~0.9 s each — the quadratic
-    emission is only 3e7 rows); at 10 000 docs count_common's 5e8-row
-    emission takes 46.6 s vs freq_ordered's 1.5 s (31×), and the gap keeps
-    growing as N². So a freq_ordered pick costs at most noise where it is
-    wrong and saves unbounded quadratic work where it is right — the
-    correct side of the bet for a selector that must survive 100 TB.
-
-    **Emission routing (round-9):** picking the best *exact* shape is not
-    enough — the sf1 audit showed the chosen shape can be optimal yet
-    output-bound (Σdf² ≈ 4.5e9 candidates → 138 s; growing quadratically,
-    a 100 TB caller would launch an hours-to-days job). So the selector now
-    estimates the picked shape's OWN index emission from the same bounded
-    sample — Σdf² over full arrays for count_common, over the ⌊(1-t)·n⌋+1
-    prefixes for freq_ordered (the prefix filter is exactly what bounds
-    that shape, so its estimate must be prefix-grained or stop-word corpora
-    would be mis-routed) — scaled by (N/n_sample)², and returns
-    ``'lsh_prefilter'`` when it exceeds ``max_emission``
-    (``WORD_JACCARD_MAX_EMISSION`` = 1e10 ≈ 5 min of pure emission on the
-    bench box; ``None`` disables routing). The routed shape is
-    MinHash-LSH candidate generation over unigrams + exact word-Jaccard
-    verification of candidates only: identical output schema, recall
-    bounded by the 4×4 band S-curve instead of exhaustive — per-pair
-    recall 1-(1-J⁴)⁴: ~0.67 for a just-qualifying J=0.7 pair, 0.91 at
-    J=0.82, ~0.999 at J≥0.95 (measured 36/40 and 40/40 respectively on
-    deterministic clone corpora, tests/test_steering.py). The
-    estimate is sampled and ~2×-noisy near the cap — both shapes are
-    acceptable there; the cap exists to stop the unbounded tail, not to
-    split hairs at the boundary. The bitmask shape is never routed: its
-    ≤64-token vocabulary and ``max_masks`` guard already bound it.
-
-    The corpus size the scale factor needs comes from (in order):
-    ``n_full`` if the caller already knows it (e.g. a pipeline that just
-    counted the corpus — keeps the chooser's contract at one
-    sample-bounded job even when ``docs`` is an expensive upstream
-    transform); else, when the ``limit(sample_docs)`` pull returns fewer
-    rows than requested, the sample IS the corpus and its own row count
-    is exact; only otherwise does the chooser run ``docs.count()`` — one
-    full-input action, the price of routing on an unknown-size input.
-
-    Every call logs one ``decisions.decision_log`` record: the sampled
-    doc count, vocabulary and top-token share (plus the corpus rows and
-    the emission estimate when routing ran), the two thresholds and the
-    pick."""
-    # the bounded sampled index is persisted so the two stat grains (per-
-    # word dfs, distinct doc count) share one shingle build instead of
-    # re-tokenizing the sample per action; docs with empty token sets are
-    # invisible to countDistinct, which is fine — they contribute no
-    # posting lists, so they are irrelevant to the strategy choice
-    raw_sample = docs.limit(sample_docs).persist()
-    sample = doc_shingle_arrays(raw_sample, 1, text_col).persist()
-    exploded = sample.select(F.col("doc_id"), F.explode("sh").alias("word"))
-    try:
-        row = (
-            exploded.groupBy("word")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .agg(
-                F.max("df").alias("max_df"),
-                F.sum("df").alias("total"),
-                F.count(F.lit(1)).alias("vocab"),
-                F.sum(F.col("df") * F.col("df")).alias("sum_df2"),
-            )
-            .first()
-        )
-        n_docs = (
-            exploded.agg(F.countDistinct("doc_id").alias("n")).first()["n"] or 0
-        )
-        vocab = row["vocab"] or 0
-        top_share = (row["max_df"] or 0) / max(row["total"] or 0, 1)
-        stats = {"sample_docs": n_docs, "vocab": vocab, "top_share": top_share}
-
-        def decide(pick: str, **more) -> str:
-            decision_log(
-                "dedup.choose_word_jaccard_strategy",
-                {**stats, **more},
-                {
-                    "top_share": WORD_JACCARD_STOPWORD_SHARE,
-                    "max_emission": max_emission,
-                },
-                pick,
-            )
-            return pick
-
-        if vocab < 0.5 * n_docs:
-            # saturated token universe → output is dense. If the sampled
-            # vocabulary also fits one machine word, the bitset path skips
-            # the inverted index entirely (word_jaccard_pairs re-verifies
-            # against the FULL vocabulary and falls back to count_common if
-            # the sample under-counted); otherwise count_common's emission
-            # tracks the dense output and is the optimal shape.
-            if vocab <= 64:
-                return decide("bitmask")
-            pick = "count_common"
-        else:
-            # >2% of all sampled token occurrences in ONE token =
-            # shared-vocabulary corpus; posting-list join emission would be
-            # quadratic vs sparse output.
-            pick = (
-                "count_common"
-                if top_share <= WORD_JACCARD_STOPWORD_SHARE
-                else "freq_ordered"
-            )
-        if max_emission is None:
-            return decide(pick)
-        # route off the exact tier when the PICKED shape's estimated
-        # emission exceeds the cap. n_full counts all docs (empty-text docs
-        # included) while n_docs counts tokenized sample docs — the scale
-        # factor over-estimates slightly, which errs toward routing: the
-        # safe side of the bet (the routed tier is near-linear; the exact
-        # tier's tail is unbounded).
-        if n_full is None:
-            sampled_rows = raw_sample.count()
-            if sampled_rows < sample_docs:
-                # limit() returned everything — the sample IS the corpus;
-                # no full-input count needed
-                n_full = sampled_rows
-            else:
-                n_full = docs.count()
-        if n_full <= n_docs:
-            # sample IS the corpus — the estimate below is exact
-            n_full = n_docs
-        if pick == "count_common":
-            est = float(row["sum_df2"] or 0) * (
-                (n_full / n_docs) ** 2 if n_docs else 1.0
-            )
-        else:
-            # the prefix filter is what bounds this shape, so estimate at
-            # prefix grain: freq-order the sampled arrays and index only
-            # the ⌊(1-t)·n⌋+1 rarest elements — the same slice
-            # _prefix_candidates will feed the join (exact integer
-            # arithmetic shared via _threshold_ratio).
-            num, den = _threshold_ratio(threshold)
-            pref_len = F.expr(
-                f"CAST(sz - (-((-CAST(sz AS BIGINT) * {num}) div {den})) + 1"
-                " AS INT)"
-            )
-            pref = freq_ordered_arrays(sample).select(
-                F.slice("sh", F.lit(1), pref_len).alias("sh")
-            )
-            est = estimate_index_emission(pref, n_full, n_docs)
-        return decide(
-            pick if est <= max_emission else "lsh_prefilter",
-            rows=n_full,
-            emission=est,
-        )
-    finally:
-        sample.unpersist()
-        raw_sample.unpersist()
+    The pick and the sampled stats that drove it go to
+    ``decisions.decision_log``."""
+    sets = doc_shingle_arrays(docs.limit(2048), n, text_col).select("sh")
+    sets = sets.toArrow().column("sh")
+    words = pc.list_flatten(sets)
+    df = pc.value_counts(words).field("counts")
+    vocab = len(df)
+    n_docs = pc.sum(pc.greater(pc.list_value_length(sets), 0)).as_py() or 0
+    top_share = (pc.max(df).as_py() or 0) / max(len(words), 1)
+    if vocab <= _BITMASK_VOCAB:
+        shape = "bitmask"
+    elif vocab < 0.5 * n_docs or top_share <= WORD_JACCARD_STOPWORD_SHARE:
+        shape = "count_common"
+    else:
+        shape = "freq_ordered"
+    decision_log(
+        "dedup.jaccard_pairs",
+        {"sample_docs": n_docs, "vocab": vocab, "top_share": top_share},
+        {"top_share": WORD_JACCARD_STOPWORD_SHARE, "bitmask_vocab": _BITMASK_VOCAB},
+        shape,
+    )
+    return shape
 
 
-def word_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.7,
-    text_col: str = "text",
-    strategy: str = "auto",
-    max_emission: float | None = WORD_JACCARD_MAX_EMISSION,
-    n_full: int | None = None,
+def jaccard_pairs(
+    docs: DataFrame, threshold: float, n: int = 1, text_col: str = "text"
 ) -> DataFrame:
-    """Exact near-dup pairs by word-set Jaccard ≥ threshold: prefix-filtered
-    inverted-index self-join (never a cross join) + in-row array
-    verification. Word sets from a shared vocabulary keep posting lists
-    long, so this is the exact-but-mid-scale tier; MinHash+LSH below is the
-    100 TB tier.
+    """Exact near-dup pairs (doc1 < doc2, jaccard) whose Jaccard over
+    word n-gram sets (``n=1``: word sets) reaches ``threshold`` after
+    4-digit ``det_round``. An inverted-index self-join (never a cross
+    join) or bitset algebra; no signature approximation. MinHash+LSH
+    (``minhash_lsh_pairs``) is the approximate tier for inputs whose
+    candidate emission this exact join cannot afford.
 
-    ``strategy`` selects the physical shape:
+    ``_jaccard_shape`` picks one of three equivalent shapes from a bounded
+    sample, and no caller can override it:
 
-    - ``'auto'`` (default): pick per-corpus from bounded sampled vocabulary
-      stats (``choose_word_jaccard_strategy``; costs one small job at plan
-      time) — stop-word-skewed sparse corpora get the prefix path,
-      saturated/dense ones the count-common path.
-    - ``'freq_ordered'``: prefix-filtered verify over rarest-first arrays
-      (``freq_ordered_arrays``); stop-word posting lists never enter the
-      inverted index, so the index join's emission stays bounded under
-      shared vocabulary — the 100 TB-safe shape for sparse realistic text.
+    - ``'bitmask'``: single-BIGINT word-set masks and in-row ``bit_count``
+      Jaccard (``_bitmask_pairs``), for a vocabulary of 64 tokens or
+      fewer.
     - ``'count_common'``: full inverted-index join + algebraic Jaccard
-      (``_count_common_pairs``); optimal when the qualifying-pair output is
-      itself dense (near-disjoint vocabularies or saturated token
-      universes) where emission tracks the output anyway, but quadratic
-      under shared-vocabulary sparse corpora.
-    - ``'bitmask'``: bitset Jaccard over single-BIGINT word-set masks
-      (``_bitmask_pairs``) — the fastest shape when the ENTIRE corpus
-      vocabulary fits 64 tokens (falls back to count_common when it
-      doesn't, or when the distinct-mask count would make the M² compare
-      unbounded).
+      (``_count_common_pairs``), for a saturated vocabulary or short
+      posting lists.
+    - ``'freq_ordered'``: the All-Pairs / PPJoin candidate shape — the
+      length filter plus the prefix filter over rarest-first arrays
+      (``freq_ordered_arrays``, ``_prefix``), verified by in-row
+      ``array_intersect`` — for stop-word skew, whose posting lists would
+      make the full index join quadratic.
 
-    - ``'lsh_prefilter'``: the ROUTED scale path — MinHash-LSH candidate
-      generation over unigram word sets (band equi-join, emission
-      near-linear in the corpus; degenerate band buckets dropped at
-      ``WORD_JACCARD_LSH_BAND_CAP`` so no bucket ever emits more than
-      64² candidate rows) + exact word-Jaccard verification of candidates
-      only. Same output schema; recall is the LSH band guarantee instead
-      of exhaustive (pairs far above threshold — the near-dup case — are
-      recalled w.p. ≈ 1), minus pairs confined to over-cap buckets
-      (mutual near-dup clusters > 64 docs — the exact-dedup tier's job).
-      ``'auto'`` returns this when
-      the picked exact shape's sampled emission estimate exceeds
-      ``max_emission`` (see ``choose_word_jaccard_strategy``); pass
-      ``max_emission=None`` to pin the selector to exact shapes. When
-      ``'auto'`` takes this exit it logs a WARNING naming the estimate,
-      the cap, and the recall contract — an exact-by-default caller whose
-      corpus crossed the cap gets a runtime signal, not a silent recall
-      drop; pin ``strategy=`` explicitly to silence it either way.
-
-    ``n_full`` (known corpus row count) is forwarded to the chooser so
-    'auto' routing needs no full-input count action."""
-    if strategy == "auto":
-        strategy = choose_word_jaccard_strategy(
-            docs, text_col, threshold=threshold, max_emission=max_emission,
-            n_full=n_full,
-        )
-        if strategy == "lsh_prefilter":
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "word_jaccard_pairs(strategy='auto'): sampled index "
-                "emission estimate exceeds max_emission=%g — routing to "
-                "the APPROXIMATE lsh_prefilter shape (per-pair recall "
-                "1-(1-J^4)^4, band buckets capped at %d docs). Pass "
-                "max_emission=None to force an exact shape.",
-                max_emission,
-                WORD_JACCARD_LSH_BAND_CAP,
-            )
-    if strategy == "lsh_prefilter":
-        return minhash_lsh_pairs(
-            docs,
-            threshold=threshold,
-            text_col=text_col,
-            shingle_n=1,
-            max_band_size=WORD_JACCARD_LSH_BAND_CAP,
-        )
-    arrs = doc_shingle_arrays(docs, 1, text_col)
-    if strategy == "freq_ordered":
-        arrs = freq_ordered_arrays(arrs)
-        return _verify_jaccard(
-            _prefix_candidates(arrs, threshold), arrs, threshold
-        )
-    if strategy == "bitmask":
-        out = _bitmask_pairs(arrs, threshold)
-        if out is not None:
-            return out
-        strategy = "count_common"
-    if strategy != "count_common":
-        raise ValueError(f"unknown word-jaccard strategy: {strategy!r}")
-    return _count_common_pairs(arrs, threshold)
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame, threshold: float = 0.8, n: int = 3, text_col: str = "text"
-) -> DataFrame:
-    """Exact near-dup pairs by word n-gram (shingle) Jaccard ≥ threshold.
-
-    Sits between unigram Jaccard and MinHash+LSH: shingles make the
-    inverted index selective and the prefix filter indexes only ~20% of
-    them (t=0.8), so the self-join stays near-linear while the Jaccard
-    itself is exact — no signature approximation. The 100 TB path still
-    prefers MinHash+LSH (bounded candidate count); this tier is the exact
-    verifier and the mid-scale default."""
+    Measured on 4 cores (construct + noop write; README "Pair-generation
+    shape follows the sampled vocabulary" has the table)."""
     arrs = doc_shingle_arrays(docs, n, text_col)
-    return _verify_jaccard(_prefix_candidates(arrs, threshold), arrs, threshold)
+    shape = _jaccard_shape(docs, n, text_col)
+    if shape == "bitmask":
+        out = _bitmask_pairs(arrs, threshold)
+        return out if out is not None else _count_common_pairs(arrs, threshold)
+    if shape == "count_common":
+        return _count_common_pairs(arrs, threshold)
+    arrs = freq_ordered_arrays(arrs)
+    cand = _index_join(_prefix(arrs, threshold), threshold).select("doc1", "doc2")
+    return _verify_jaccard(cand.distinct(), arrs, threshold)
 
 
 def exact_contamination(
@@ -862,30 +563,24 @@ def ngram_contamination(
     ``threshold`` — catches paraphrased/partially-edited leakage exact
     fingerprints miss.
 
-    Same prefix-filter machinery as the self-join tier, but the inverted
+    The prefix and length filters of :func:`jaccard_pairs` (``_prefix``,
+    ``_length_ok``) over the sorted shingle order, but the inverted
     index is built per side and joined ACROSS sides only, so the candidate
     space is |probe|×|corpus| pruned by prefix+length — never a self-join
     of the union, and the (typically small) probe side drives the join."""
-    num, den = _threshold_ratio(threshold)
-    pref_len = F.expr(
-        f"CAST(sz - (-((-CAST(sz AS BIGINT) * {num}) div {den})) + 1 AS INT)"
-    )
 
     def index(docs: DataFrame, side: str) -> DataFrame:
-        arrs = doc_shingle_arrays(docs, n, text_col)
-        return arrs.select(
+        pref = _prefix(doc_shingle_arrays(docs, n, text_col), threshold)
+        return pref.select(
             F.col("doc_id").alias(f"{side}_doc_id"),
             F.col("sz").alias(f"n_{side}"),
-            F.explode(F.slice("sh", F.lit(1), pref_len)).alias("word"),
+            "word",
         )
 
     cand = (
         index(probe, "test")
         .join(index(corpus, "train"), "word")
-        .filter(
-            (F.col("n_test").cast("bigint") * den >= F.col("n_train").cast("bigint") * num)
-            & (F.col("n_train").cast("bigint") * den >= F.col("n_test").cast("bigint") * num)
-        )
+        .filter(_length_ok(F.col("n_test"), F.col("n_train"), threshold))
         .select("test_doc_id", "train_doc_id")
         .distinct()
     )
@@ -1010,10 +705,10 @@ def minhash_lsh_pairs(
     ladder in ``corpus.clean_corpus`` runs it first for precisely this
     reason); everything below the cap is untouched.
 
-    ``shingle_n`` sets the feature grain (default 3-gram shingles). The
-    LSH-prefilter route of the unigram Jaccard tier passes 1 so the exact
-    verification stage computes WORD-set Jaccard — same semantics as
-    ``word_jaccard_pairs``, candidate generation swapped for banding.
+    ``shingle_n`` sets the feature grain (default 3-gram shingles).
+    ``dedup_word_jaccard_routed`` passes 1 so the exact verification stage
+    computes WORD-set Jaccard — the semantics of ``jaccard_pairs(docs, t)``,
+    candidate generation swapped for banding.
     """
     arrs = doc_shingle_arrays(docs, shingle_n, text_col)
     banded = _lsh_banded(arrs)
@@ -1420,14 +1115,13 @@ def choose_exact_substring_route(
     n_full: int | None = None,
 ) -> str:
     """'exact' (run ``exact_substring_spans``) or 'winnow_containment'
-    (the sampled tier one over) from the bounded emission estimate — the
-    exact-substring mirror of ``choose_word_jaccard_strategy``'s routing.
-    Unlike the word tier this cannot silently swap the physical shape
-    under one function: the two routes return DIFFERENT shapes (exact
-    char spans vs containment scores), so the chooser only advises and
-    callers pick the operator — which is why there is no *_routed query:
-    an auto-switch that changes the output schema would be a lie. A call
-    that samples logs the estimate, the cap and the route through
+    (the sampled tier one over) from the bounded emission estimate. Unlike
+    ``jaccard_pairs``' sampled shape pick, this cannot swap the physical
+    shape under one function: the two routes return DIFFERENT shapes
+    (exact char spans vs containment scores), so the chooser only advises
+    and callers pick the operator — which is why there is no *_routed
+    query: an auto-switch that changes the output schema would be a lie.
+    A call that samples logs the estimate, the cap and the route through
     ``decisions.decision_log``."""
     if max_window_rows is None:
         return "exact"

@@ -101,7 +101,7 @@ def auto_salted_join(
     small-side explode; paying it unconditionally is waste).
 
     The probe is one bounded sample job at plan time (the same sanctioned
-    pattern as ``choose_word_jaccard_strategy`` / the IVF quantizer
+    pattern as ``dedup.jaccard_pairs``' shape pick / the IVF quantizer
     sample); the decision is returned on the DataFrame's plan, so reruns
     of the returned frame pay nothing further."""
     prof = key_skew_profile(big, on)

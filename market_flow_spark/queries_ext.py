@@ -295,9 +295,7 @@ SELECT doc1, doc2, jaccard FROM j WHERE jaccard >= 0.7
 """,
 )
 def q_dedup_word_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.word_jaccard_pairs(
-        load_tables(spark, sf_dir)["documents"], threshold=0.7
-    )
+    return dedup.jaccard_pairs(load_tables(spark, sf_dir)["documents"], 0.7)
 
 
 @register(
@@ -313,9 +311,7 @@ SELECT doc1, doc2, jaccard FROM j WHERE jaccard >= 0.8
 """,
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.ngram_jaccard_pairs(
-        load_tables(spark, sf_dir)["documents"], threshold=0.8
-    )
+    return dedup.jaccard_pairs(load_tables(spark, sf_dir)["documents"], 0.8, n=3)
 
 
 def _minhash_oracle(
@@ -409,21 +405,21 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_dedup_word_jaccard_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The emission-routed shape of the unigram Jaccard tier (round-8
-    verdict ask #2): MinHash-LSH candidate generation over word sets +
-    exact word-Jaccard ≥ 0.7 verification of candidates only — what
-    ``strategy='auto'`` returns when the sampled Σdf² emission estimate of
-    the best exact shape exceeds ``WORD_JACCARD_MAX_EMISSION``. Runs with
+    """The approximate scale tier of word-set Jaccard: MinHash-LSH
+    candidate generation over word sets + exact word-Jaccard ≥ 0.7
+    verification of candidates only — ``jaccard_pairs(docs, 0.7)`` with
+    banding in place of the exhaustive index join. Runs with
     the degenerate-bucket guard ON (band buckets > 64 docs dropped —
     measured 28 s → ~1.5 s at sf0.1 on this heavy-sharing corpus; clusters
     that big are the exact-dedup tier's job). The oracle is a TRUE twin
     (DuckDB replays the md5 minhash, banding, bucket cap, and ≥8/16
     screen bit-for-bit), so the driver row certifies the routed physical
     shape itself, not a corpus-dependent recall claim."""
-    return dedup.word_jaccard_pairs(
+    return dedup.minhash_lsh_pairs(
         load_tables(spark, sf_dir)["documents"],
-        threshold=0.7,
-        strategy="lsh_prefilter",
+        0.7,
+        shingle_n=1,
+        max_band_size=dedup.WORD_JACCARD_LSH_BAND_CAP,
     )
 
 
@@ -568,8 +564,7 @@ SELECT test_doc_id, train_doc_id, jaccard FROM j WHERE jaccard >= 0.8
 )
 def q_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/test near-dup contamination at shingle Jaccard ≥ 0.8
-    (past-window; the prefix-filter machinery is in-window via
-    dedup_ngram_jaccard)."""
+    (past-window; its prefix and length filters are ``jaccard_pairs``')."""
     docs = load_tables(spark, sf_dir)["documents"]
     return dedup.ngram_contamination(
         docs.filter(F.expr(_CONTAM_SPLIT[0])),

@@ -70,3 +70,22 @@ def graph_route(request, monkeypatch):
         graph, "DRIVER_MAX_EDGES", GRAPH_ROUTE_BOUNDS[request.param]
     )
     return request.param
+
+
+# the physical shapes dedup.jaccard_pairs' sampled chooser picks between
+JACCARD_SHAPES = ("bitmask", "count_common", "freq_ordered")
+
+
+@pytest.fixture
+def jaccard_shape(monkeypatch):
+    """Forces ``dedup.jaccard_pairs``' shape: ``jaccard_shape(name)``
+    patches the sampled chooser so every later ``jaccard_pairs`` call in
+    the test takes shape ``name`` (one of ``JACCARD_SHAPES``)."""
+    from market_flow_spark.extensions import dedup
+
+    def force(shape: str) -> str:
+        assert shape in JACCARD_SHAPES
+        monkeypatch.setattr(dedup, "_jaccard_shape", lambda *_: shape)
+        return shape
+
+    return force

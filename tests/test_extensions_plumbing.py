@@ -240,93 +240,135 @@ def test_incremental_minhash_matches_union_cross_pairs(spark, tables):
     assert len(incr) > 0
 
 
-def test_word_jaccard_strategies_equivalent(spark, tables):
-    """count-common (dense default) and freq-ordered prefix-verify (sparse
-    path) are different physical shapes of the same exact operator — both
-    must return identical pairs."""
-    from market_flow_spark.extensions.dedup import word_jaccard_pairs
+# NULL, empty, whitespace-only (spaces, and tabs/newlines that trim()
+# keeps), unicode, duplicate, duplicate-token and single-token docs, plus
+# the rounding pair: "a b c d e" vs "a b c d e f g" has J = 5/7, which
+# rounds to 0.7143 — so it must pair at threshold 0.7143.
+_EDGE_DOCS = [
+    (1, None), (2, None), (3, ""), (4, "   "), (5, "\t\n"), (6, "\t \n"),
+    (7, "real text here"), (8, "Real  TEXT here "), (9, "real text here"),
+    (10, "solo"), (11, "solo"), (12, "Café naïve résumé"),
+    (13, "café NAÏVE résumé extra"), (14, "日本語 テキスト"),
+    (15, "日本語 テキスト 日本語"), (16, "\ta b c d e"), (17, "a b c d e f g"),
+    (18, "a b c d e"),
+]
 
-    docs = tables["documents"].limit(120)
-    count_common = sorted(
-        (r.doc1, r.doc2, r.jaccard)
-        for r in word_jaccard_pairs(
-            docs, threshold=0.7, strategy="count_common"
-        ).collect()
+
+def _brute_jaccard(rows, threshold, n=1):
+    """Python model of jaccard_pairs: Spark's tokenizer (trim() strips
+    spaces only; split on Java's ASCII \\s), every pair compared, and the
+    4-digit det_round Jaccard kept at >= threshold."""
+    import math
+    import re
+
+    sets = {}
+    for doc_id, text in rows:
+        toks = re.split(r"[ \t\n\x0b\f\r]+", (text or "").lower().strip(" "))
+        sh = (
+            {t for t in toks if t}
+            if n == 1
+            else {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+        )
+        sets[doc_id] = sh
+    out = set()
+    for a in sets:
+        for b in sets:
+            common = len(sets[a] & sets[b])
+            if a < b and common:
+                j = math.floor(common / len(sets[a] | sets[b]) * 10000.0 + 0.5)
+                if j / 10000.0 >= threshold:
+                    out.add((a, b, j / 10000.0))
+    return out
+
+
+@pytest.mark.parametrize("shape", ["bitmask", "count_common", "freq_ordered"])
+def test_jaccard_pairs_match_brute_force(spark, jaccard_shape, shape):
+    """Every shape of the one exact operator returns the brute-force pair
+    set, jaccard values included: word sets at 0.5, 1.0 and the 0.7143
+    rounding boundary, 3-gram shingles at 0.5, and a 100-token corpus
+    whose vocabulary overflows one machine word (bitmask falls back to
+    count_common there)."""
+    from market_flow_spark.extensions.dedup import jaccard_pairs
+
+    jaccard_shape(shape)
+    wide = [
+        (i, " ".join(f"tok{j}" for j in range(i % 100, i % 100 + 30)))
+        for i in range(60)
+    ]
+    cases = [
+        (_EDGE_DOCS, 0.5, 1),
+        (_EDGE_DOCS, 1.0, 1),
+        (_EDGE_DOCS, 0.7143, 1),
+        (_EDGE_DOCS, 0.5, 3),
+        (wide, 0.7, 1),
+    ]
+    for rows, t, n in cases:
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {tuple(r) for r in jaccard_pairs(docs, t, n=n).collect()}
+        assert got == _brute_jaccard(rows, t, n), (t, n)
+    assert (16, 17, 0.7143) in _brute_jaccard(_EDGE_DOCS, 0.7143)
+
+
+def test_word_jaccard_twin_keeps_the_rounding_boundary_pair():
+    """The dedup_word_jaccard DuckDB twin, with its threshold moved to
+    0.7143, keeps the J = 5/7 pair too — the rule every shape follows."""
+    import duckdb
+
+    from market_flow_spark.queries_all import ORACLES
+
+    head, tail = ORACLES["dedup_word_jaccard"].rsplit(">= 0.7", 1)
+    assert not tail.strip()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.execute(
+        "INSERT INTO documents VALUES (1, 'a b c d e'), (2, 'a b c d e f g')"
     )
-    prefix = sorted(
-        (r.doc1, r.doc2, r.jaccard)
-        for r in word_jaccard_pairs(
-            docs, threshold=0.7, strategy="freq_ordered"
-        ).collect()
-    )
-    assert count_common == prefix
-    assert len(count_common) > 0
+    got = con.execute(head + ">= 0.7143").fetchall()
+    assert got == [(1, 2, 0.7143)]
 
 
 def test_word_jaccard_auto_strategy_selection(spark, tables):
-    """'auto' picks freq_ordered on a shared-vocabulary corpus (stop-word
-    posting lists would make count-common's index join quadratic) and
-    count_common on a near-disjoint vocabulary; both remain exact."""
-    from market_flow_spark.extensions.dedup import (
-        choose_word_jaccard_strategy,
-        word_jaccard_pairs,
-    )
+    """The sampled chooser picks freq_ordered on a stop-word corpus (its
+    posting lists would make the full index join quadratic), count_common
+    on a near-disjoint vocabulary and on the shipped documents' trigrams,
+    and bitmask when the vocabulary fits one machine word; unforced,
+    jaccard_pairs equals the brute force."""
+    from market_flow_spark.extensions.dedup import _jaccard_shape, jaccard_pairs
 
-    dense = spark.createDataFrame(
-        [(i, f"the quick brown fox {i}") for i in range(200)],
-        "doc_id long, text string",
+    def frame(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    stop_rows = [(i, f"the quick brown fox {i}") for i in range(200)]
+    stop = frame(stop_rows)
+    assert _jaccard_shape(stop, 1, "text") == "freq_ordered"
+    disjoint = frame([(i, f"tok{i}a tok{i}b tok{i}c tok{i}d") for i in range(200)])
+    assert _jaccard_shape(disjoint, 1, "text") == "count_common"
+    assert _jaccard_shape(tables["documents"], 3, "text") == "count_common"
+    saturated = frame(
+        [(i, " ".join(f"w{(i + j) % 10}" for j in range(5))) for i in range(200)]
     )
-    assert choose_word_jaccard_strategy(dense) == "freq_ordered"
-    disjoint = spark.createDataFrame(
-        [(i, f"tok{i}a tok{i}b tok{i}c tok{i}d") for i in range(200)],
-        "doc_id long, text string",
-    )
-    assert choose_word_jaccard_strategy(disjoint) == "count_common"
-    # saturated token universe (10 tokens, 200 docs): output itself is
-    # dense AND the whole vocabulary fits one machine word, so the bitset
-    # path wins (in-row bit_count Jaccard, no inverted index at all)
-    saturated = spark.createDataFrame(
-        [(i, " ".join(f"w{(i + j) % 10}" for j in range(5))) for i in range(200)],
-        "doc_id long, text string",
-    )
-    assert choose_word_jaccard_strategy(saturated) == "bitmask"
-    # auto end-to-end equals the explicit strategies
-    got = sorted(
-        (r.doc1, r.doc2)
-        for r in word_jaccard_pairs(dense, threshold=0.9, strategy="auto").collect()
-    )
-    want = sorted(
-        (r.doc1, r.doc2)
-        for r in word_jaccard_pairs(
-            dense, threshold=0.9, strategy="count_common"
-        ).collect()
-    )
-    assert got == want
+    assert _jaccard_shape(saturated, 1, "text") == "bitmask"
+    got = {tuple(r) for r in jaccard_pairs(stop, 0.9).collect()}
+    assert got == _brute_jaccard(stop_rows, 0.9)
 
 
 def test_null_and_empty_text_docs_never_pair(spark):
     """NULL/empty/whitespace-only text must yield an EMPTY word set (not
     the [\"\"] split artifact), so null docs don't all pair with each other
-    at jaccard 1.0 — O(N²) pairs for N null docs at corpus scale."""
+    at jaccard 1.0 — O(N²) pairs for N null docs at corpus scale.
+    jaccard_pairs' shapes are covered by test_jaccard_pairs_match_brute_force."""
     from market_flow_spark.extensions.dedup import (
         doc_shingle_arrays,
         minhash_lsh_pairs,
-        word_jaccard_pairs,
     )
 
     docs = spark.createDataFrame(
         [(1, None), (2, None), (3, ""), (4, "   "), (5, "real text here"),
-         (6, "real text here")],
+         (6, "real text here"), (7, "\t\n")],
         "doc_id long, text string",
     )
     arrs = {r.doc_id: r.sz for r in doc_shingle_arrays(docs, 1).collect()}
-    assert arrs == {1: 0, 2: 0, 3: 0, 4: 0, 5: 3, 6: 3}
-    for strat in ("count_common", "freq_ordered"):
-        pairs = sorted(
-            (r.doc1, r.doc2)
-            for r in word_jaccard_pairs(docs, threshold=0.5, strategy=strat).collect()
-        )
-        assert pairs == [(5, 6)]
+    assert arrs == {1: 0, 2: 0, 3: 0, 4: 0, 5: 3, 6: 3, 7: 0}
     lsh = sorted(
         (r.doc1, r.doc2) for r in minhash_lsh_pairs(docs, threshold=0.5).collect()
     )
@@ -669,45 +711,6 @@ def test_image_neardup_detects_minor_edit(spark):
     pairs = {(r.doc1, r.doc2) for r in image_neardup_pairs(df).collect()}
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
-def test_word_jaccard_bitmask_equivalent_and_falls_back(spark, tables):
-    """The bitset path returns byte-identical pairs to count_common on a
-    qualifying corpus (vocab <= 64), including the jaccard values and the
-    identical-set 1.0 pairs; on a corpus whose vocabulary overflows one
-    machine word it silently falls back to count_common (still exact)."""
-    from market_flow_spark.extensions.dedup import word_jaccard_pairs
-
-    docs = tables["documents"].limit(150)
-    cc = sorted(
-        (r.doc1, r.doc2, r.jaccard)
-        for r in word_jaccard_pairs(
-            docs, threshold=0.7, strategy="count_common"
-        ).collect()
-    )
-    bm = sorted(
-        (r.doc1, r.doc2, r.jaccard)
-        for r in word_jaccard_pairs(docs, threshold=0.7, strategy="bitmask").collect()
-    )
-    assert cc == bm and len(cc) > 0
-    assert any(j == 1.0 for _, _, j in bm)  # identical-set pairs present
-    # 100 distinct tokens > 64: bitmask must fall back, not error/miss
-    wide = spark.createDataFrame(
-        [(i, " ".join(f"tok{j}" for j in range(i % 100, i % 100 + 30)))
-         for i in range(60)],
-        "doc_id long, text string",
-    )
-    cc_w = sorted(
-        (r.doc1, r.doc2, r.jaccard)
-        for r in word_jaccard_pairs(
-            wide, threshold=0.7, strategy="count_common"
-        ).collect()
-    )
-    bm_w = sorted(
-        (r.doc1, r.doc2, r.jaccard)
-        for r in word_jaccard_pairs(wide, threshold=0.7, strategy="bitmask").collect()
-    )
-    assert cc_w == bm_w and len(cc_w) > 0
 
 
 def test_image_neardup_against_matches_union_cross_pairs(spark, tables):

@@ -106,7 +106,7 @@ INTENTIONAL_TINY_CROSSJOIN = {
     "langid_trigram",  # docs x 5-row candidate-language scaffold
     # distinct-mask bitset compare (M x M over single longs), bounded by
     # the max_masks guard in dedup._bitmask_pairs — the intended physical
-    # op for the saturated-vocabulary word-jaccard strategy
+    # op for jaccard_pairs' bitmask shape (a vocabulary of <= 64 tokens)
     "dedup_word_jaccard",
     "theta_overlap_years",  # 1x1 join of two one-row theta sketches
     # vocab x 5-row class totals grid, docs x 5-row label scaffold, and
@@ -191,55 +191,48 @@ def test_minhash_has_no_forced_broadcast(spark, sf_dir):
 
 
 def test_word_jaccard_auto_selects_by_corpus_shape(spark, sf_dir):
-    """The registered word tier auto-selects its physical shape from
-    sampled corpus stats. The test corpus has a SATURATED vocabulary
-    (~31 tokens across 500 docs, well under one machine word), so auto
-    must pick the bitset path: word sets pack into single BIGINT masks,
-    Jaccard is bit_count arithmetic, and the only nested-loop join is the
-    bounded distinct-mask cross-compare (M ≤ max_masks single longs) —
-    no inverted index, no collect_list canonicalization. The freq-ordered
-    and count-common shapes stay available and pinned below."""
-    from market_flow_spark.extensions.dedup import choose_word_jaccard_strategy
+    """The registered word tier picks its physical shape from sampled
+    corpus stats. The test corpus's vocabulary (~31 tokens across 500
+    docs) fits one machine word, so the pick is the bitset path: word
+    sets pack into single BIGINT masks, Jaccard is bit_count arithmetic,
+    and the only nested-loop join is the bounded distinct-mask
+    cross-compare (M ≤ max_masks single longs) — no inverted index, no
+    collect_list canonicalization. The other shapes are pinned below."""
+    from market_flow_spark.extensions.dedup import _jaccard_shape
     from market_flow_spark.tables import load_tables
 
     docs = load_tables(spark, sf_dir)["documents"]
-    assert choose_word_jaccard_strategy(docs) == "bitmask"
+    assert _jaccard_shape(docs, 1, "text") == "bitmask"
     plan = _executed_plan(QUERIES["dedup_word_jaccard"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "bit_count" in plan  # bitset Jaccard chosen on this corpus
     assert "collect_list" not in plan
 
 
-def test_word_jaccard_freq_ordered_shape(spark, sf_dir):
-    """The sparse-corpus shape: rarest-first re-ordering (collect_list
+def test_word_jaccard_freq_ordered_shape(spark, sf_dir, jaccard_shape):
+    """The stop-word-skew shape: rarest-first re-ordering (collect_list
     aggregate) keeps stop-word posting lists out of the inverted index.
     No cartesian products, no nested-loop joins."""
-    from market_flow_spark.extensions.dedup import word_jaccard_pairs
+    from market_flow_spark.extensions.dedup import jaccard_pairs
     from market_flow_spark.tables import load_tables
 
-    df = word_jaccard_pairs(
-        load_tables(spark, sf_dir)["documents"],
-        threshold=0.7,
-        strategy="freq_ordered",
-    )
+    jaccard_shape("freq_ordered")
+    df = jaccard_pairs(load_tables(spark, sf_dir)["documents"], 0.7)
     plan = _executed_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "collect_list" in plan  # freq-ordered canonicalization present
 
 
-def test_word_jaccard_count_common_shape(spark, sf_dir):
-    """The opt-in dense-corpus shape must be one index equi-join + hash
+def test_word_jaccard_count_common_shape(spark, sf_dir, jaccard_shape):
+    """The saturated-vocabulary shape must be one index equi-join + hash
     aggregate: no cartesian products, no array payload joins, and partial
     (map-side) aggregation before the pair shuffle."""
-    from market_flow_spark.extensions.dedup import word_jaccard_pairs
+    from market_flow_spark.extensions.dedup import jaccard_pairs
     from market_flow_spark.tables import load_tables
 
-    df = word_jaccard_pairs(
-        load_tables(spark, sf_dir)["documents"],
-        threshold=0.7,
-        strategy="count_common",
-    )
+    jaccard_shape("count_common")
+    df = jaccard_pairs(load_tables(spark, sf_dir)["documents"], 0.7)
     plan = _executed_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -77,17 +77,19 @@ def test_normalize_column_name_invariants(raw):
 )
 @settings(max_examples=500)
 def test_prefix_threshold_integer_arithmetic_exact(sz, t):
-    """The prefix filter's rational num/den must (a) never exceed the float
-    threshold the verifier uses and (b) make the BIGINT ceil formula agree
-    with exact Fraction arithmetic for any set size — the two invariants
-    that guarantee no qualifying pair is ever dropped by a one-short
-    prefix (and that sz*num stays in int64 range)."""
+    """The prefix filter's rational num/den must (a) sit at or below the
+    lowest Jaccard the verifier keeps — det_round(J, 4) >= t admits J down
+    to t - 5e-5 — and (b) make the BIGINT ceil formula agree with exact
+    Fraction arithmetic for any set size — the two invariants that
+    guarantee no qualifying pair is ever dropped by a one-short prefix
+    (and that sz*num stays in int64 range)."""
     from fractions import Fraction
 
     from market_flow_spark.extensions.dedup import _threshold_ratio
 
     num, den = _threshold_ratio(t)
-    assert Fraction(num, den) <= Fraction(t)  # Fraction(float) is exact
+    # Fraction(float) is exact
+    assert Fraction(num, den) <= Fraction(t) - Fraction(5, 100_000)
     ceil_int = -((-sz * num) // den)  # the SQL formula, python-mirrored
     assert ceil_int == math.ceil(Fraction(sz) * Fraction(num, den))
     assert sz * num < 2**63

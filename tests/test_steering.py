@@ -1,13 +1,8 @@
-"""Emission-aware steering of the exact pairwise tiers (round-8 verdict
-ask #2): the word-Jaccard strategy selector and the embedding near-dup
-layout chooser must route off the exact/8-bit shapes when a sampled
-candidate-emission estimate exceeds the documented cap, and the routed
-outputs must stay oracle-checkable.
-
-The sf1 audit showed these two tiers are the registry's only ×50-plus
-slopes — optimal plans, unbounded emission. Steering is the missing guard
-rail: nothing else stops a 100 TB caller from launching the quadratic
-path.
+"""Sampled steering of the pairwise tiers: the exact word-Jaccard
+operator's shape pick (and the MinHash-LSH tier over word sets it is
+checked against), and the embedding near-dup layout chooser, which must
+route off the 8-bit shape when a sampled candidate-emission estimate
+exceeds the documented cap, with the routed outputs oracle-checkable.
 """
 
 from __future__ import annotations
@@ -36,23 +31,11 @@ from tests.oracle_utils import assert_matches_oracle
 # ---------------------------------------------------------------------------
 
 
-def _dense_shared_vocab(spark):
-    """200 docs × 60 words over a 100-word vocabulary: not saturated
-    (vocab ≥ 0.5·N), no stop-word skew (top share ≈ 0.8%), so the exact
-    pick is count_common — whose Σdf² ≈ 100·120² ≈ 1.4e6 candidate rows."""
-    vocab = [f"w{i:03d}" for i in range(100)]
-    rows = [
-        (i, " ".join(vocab[(i * 7 + j * 13) % 100] for j in range(60)))
-        for i in range(200)
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
 def _stopword_corpus(spark):
     """600 docs, each 15 doc-unique rare words + the same 10 stop words:
-    top share 600/15000 = 4% → the exact pick is freq_ordered, whose
-    PREFIX emission is tiny (the ⌊0.3·25⌋+1 = 8 rarest words per doc are
-    the unique ones, df ≤ 1) even though naive Σdf² ≈ 10·600² = 3.6e6."""
+    top share 600/15000 = 4% → the pick is freq_ordered, whose prefix
+    holds only doc-unique words (the ⌊0.3·25⌋+1 = 8 rarest per doc) while
+    the full index join would emit Σdf² ≈ 10·600² = 3.6e6 rows."""
     stops = " ".join(f"the{k}" for k in range(10))
     rows = [
         (i, stops + " " + " ".join(f"u{i}x{j}" for j in range(15)))
@@ -74,90 +57,44 @@ def _clone_corpus(spark):
 
 
 # ---------------------------------------------------------------------------
-# word-Jaccard selector routing
+# word-Jaccard shape pick and the LSH tier over word sets
 # ---------------------------------------------------------------------------
 
 
-def test_selector_routes_dense_corpus_above_cap(spark):
-    docs = _dense_shared_vocab(spark)
-    # default cap (1e10): the 1.4e6-row job is fine for the exact tier
-    assert dedup.choose_word_jaccard_strategy(docs) == "count_common"
-    # tightened cap: the same corpus routes to the LSH-prefilter shape
-    assert (
-        dedup.choose_word_jaccard_strategy(docs, max_emission=1e5)
-        == "lsh_prefilter"
-    )
-
-
-def test_selector_estimates_prefix_grain_for_freq_ordered(spark):
-    """The freq_ordered shape must be costed at PREFIX grain: a stop-word
-    corpus whose naive Σdf² (3.6e6) busts the cap stays on the exact tier
-    because the prefix filter is precisely what bounds it — and only an
-    absurdly tight cap (below even the prefix emission) routes it."""
-    docs = _stopword_corpus(spark)
-    assert (
-        dedup.choose_word_jaccard_strategy(docs, max_emission=1e5)
-        == "freq_ordered"
-    )
-    assert (
-        dedup.choose_word_jaccard_strategy(docs, max_emission=10)
-        == "lsh_prefilter"
+def _word_lsh(docs):
+    """dedup_word_jaccard_routed's call: MinHash-LSH over word sets with
+    the degenerate-bucket guard on."""
+    return dedup.minhash_lsh_pairs(
+        docs, 0.7, shingle_n=1, max_band_size=dedup.WORD_JACCARD_LSH_BAND_CAP
     )
 
 
 def test_selector_logs_stopword_pick_with_its_top_share(spark, caplog):
     """The planted stop-word corpus logs one decision: freq_ordered, from
-    its sampled top-token share 600/15000 = 0.04 against the 0.02 cut,
-    with the prefix-grain emission estimate under the cap."""
+    its sampled top-token share 600/15000 = 0.04 against the 0.02 cut."""
     docs = _stopword_corpus(spark)
     with caplog.at_level(logging.INFO, logger="market_flow_spark.decisions"):
-        dedup.choose_word_jaccard_strategy(docs, max_emission=1e5)
+        dedup.jaccard_pairs(docs, 0.7)
     [rec] = [
         r for r in caplog.records if r.name == "market_flow_spark.decisions"
     ]
     d = rec.decision
-    assert d["operator"] == "dedup.choose_word_jaccard_strategy"
+    assert d["operator"] == "dedup.jaccard_pairs"
     assert d["choice"] == "freq_ordered"
-    assert d["threshold"] == {"top_share": 0.02, "max_emission": 1e5}
+    assert d["threshold"] == {"top_share": 0.02, "bitmask_vocab": 64}
     assert d["stats"]["top_share"] == 600 / 15000
-    assert d["stats"]["sample_docs"] == d["stats"]["rows"] == 600
-    assert d["stats"]["emission"] <= 1e5
-
-
-def test_selector_none_cap_disables_routing(spark):
-    docs = _dense_shared_vocab(spark)
-    assert (
-        dedup.choose_word_jaccard_strategy(docs, max_emission=None)
-        == "count_common"
-    )
-
-
-def test_registered_corpora_stay_exact_at_test_scale(tables):
-    """Pins the registered dedup_word_jaccard staying on an exact shape at
-    driver SFs under the default cap (its oracle is the exhaustive pair
-    set, so a silent route would be a driver red)."""
-    pick = dedup.choose_word_jaccard_strategy(tables["documents"])
-    assert pick != "lsh_prefilter"
+    assert d["stats"]["sample_docs"] == 600
+    assert d["stats"]["vocab"] == 10 + 600 * 15
 
 
 def test_lsh_prefilter_recall_tracks_band_s_curve(spark):
     """Recall on the J≈0.82 clone corpus: the 4×4 band S-curve predicts
     1-(1-0.818⁴)⁴ ≈ 0.91 per pair — measured 36/40 on this deterministic
-    corpus. The routed tier must never INVENT a pair, and every recalled
+    corpus. The LSH tier must never INVENT a pair, and every recalled
     pair must carry the same exact Jaccard."""
     docs = _clone_corpus(spark)
-    exact = {
-        (r["doc1"], r["doc2"], r["jaccard"])
-        for r in dedup.word_jaccard_pairs(
-            docs, 0.7, strategy="count_common"
-        ).collect()
-    }
-    routed = {
-        (r["doc1"], r["doc2"], r["jaccard"])
-        for r in dedup.word_jaccard_pairs(
-            docs, 0.7, strategy="lsh_prefilter"
-        ).collect()
-    }
+    exact = {tuple(r) for r in dedup.jaccard_pairs(docs, 0.7).collect()}
+    routed = {tuple(r) for r in _word_lsh(docs).collect()}
     assert len(exact) == 40
     assert routed <= exact
     assert len(routed) >= 34  # measured 36; slack for tokenizer tweaks
@@ -165,7 +102,7 @@ def test_lsh_prefilter_recall_tracks_band_s_curve(spark):
 
 def test_lsh_prefilter_full_recall_on_near_clones(spark):
     """At true near-dup similarity (J = 39/41 ≈ 0.95, the regime the
-    routed tier exists for) the S-curve miss probability is ~1e-3/pair —
+    LSH tier exists for) the S-curve miss probability is ~1e-3/pair —
     measured 40/40 on this deterministic corpus."""
     rows = []
     for p in range(40):
@@ -173,48 +110,27 @@ def test_lsh_prefilter_full_recall_on_near_clones(spark):
         rows.append((2 * p, " ".join(words)))
         rows.append((2 * p + 1, " ".join(words[:39] + [f"q{p}alt"])))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = {
-        (r["doc1"], r["doc2"], r["jaccard"])
-        for r in dedup.word_jaccard_pairs(
-            docs, 0.7, strategy="count_common"
-        ).collect()
-    }
-    routed = {
-        (r["doc1"], r["doc2"], r["jaccard"])
-        for r in dedup.word_jaccard_pairs(
-            docs, 0.7, strategy="lsh_prefilter"
-        ).collect()
-    }
+    exact = {tuple(r) for r in dedup.jaccard_pairs(docs, 0.7).collect()}
+    routed = {tuple(r) for r in _word_lsh(docs).collect()}
     assert len(exact) == 40
     assert routed == exact
 
 
 def test_routed_word_jaccard_is_subset_of_exact_on_testdata(tables):
-    """On the real documents table the routed tier may drop
+    """On the real documents table the LSH tier may drop
     threshold-boundary pairs (band S-curve) but must never invent one, and
     every surviving pair carries the same exact Jaccard value."""
+    docs = tables["documents"]
     exact = {
         (r["doc1"], r["doc2"]): r["jaccard"]
-        for r in dedup.word_jaccard_pairs(
-            tables["documents"], 0.7, strategy="count_common"
-        ).collect()
+        for r in dedup.jaccard_pairs(docs, 0.7).collect()
     }
     routed = {
-        (r["doc1"], r["doc2"]): r["jaccard"]
-        for r in dedup.word_jaccard_pairs(
-            tables["documents"], 0.7, strategy="lsh_prefilter"
-        ).collect()
+        (r["doc1"], r["doc2"]): r["jaccard"] for r in _word_lsh(docs).collect()
     }
     assert set(routed) <= set(exact)
     for pair, j in routed.items():
         assert j == exact[pair]
-
-
-def test_unknown_strategy_still_raises(spark):
-    with pytest.raises(ValueError, match="unknown word-jaccard strategy"):
-        dedup.word_jaccard_pairs(
-            _clone_corpus(spark), 0.7, strategy="nonsense"
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -333,26 +249,6 @@ def test_routed_word_jaccard_twin_is_parameterized_correctly():
     sql = _minhash_oracle(WORDS_SQL, threshold=0.7)
     assert ">= 0.7" in sql and "0.8" not in sql
     assert WORDS_SQL.splitlines()[0] in sql
-
-
-def test_emission_estimate_exact_when_sample_covers_corpus(spark):
-    """With the sample covering the whole corpus the (N/n)² scale factor is
-    1 and estimate_index_emission must equal the true Σ df² — the estimator
-    is exact arithmetic plus frequency-stationarity scaling, nothing else."""
-    docs = _dense_shared_vocab(spark)
-    arrs = dedup.doc_shingle_arrays(docs, 1, "text")
-    words = [
-        (r["doc_id"], w)
-        for r in arrs.collect()
-        for w in r["sh"]
-    ]
-    from collections import Counter
-
-    df = Counter(w for _, w in words)
-    true_sum = sum(c * c for c in df.values())
-    n_docs = len({d for d, _ in words})
-    est = dedup.estimate_index_emission(arrs, n_docs, n_docs)
-    assert est == true_sum
 
 
 # ---------------------------------------------------------------------------
